@@ -34,15 +34,12 @@ import org.apache.spark.sql.SparkSession
   * a run is CONTAMINATED when any mid/post steal probe is double-digit
   * or a canary median exceeds 2x its committed quiet band
   * ([[QuietBands]], from the steal-flat BENCH_DETAIL_r14_d.json run).
-  * A contaminated first pass waits for a quiet window (steal < 5%,
-  * bounded at ~5 min of polling) and re-measures the whole pass ONCE;
-  * the reported numbers are the quiet pass if either pass is quiet,
-  * else the faster of the two, and the JSON carries an explicit
-  * "weather_verdict" ("quiet"/"contaminated") plus "retried" so the
-  * official artifact either records a quiet number or disclaims itself
-  * — round 14's driver recorded a face-value 4.25x breach (314.4 s vs
-  * the 98 s quiet posture) that took a judge re-run to clear because
-  * the fields existed but no policy acted on them. */
+  * A contaminated pass waits for a quiet window (steal < 5%, bounded
+  * polling) and re-measures the whole pass, up to
+  * SPARK_GRAFT_BENCH_RETRIES times; [[choosePass]] picks the reported
+  * pass, and the JSON carries an explicit "weather_verdict"
+  * ("quiet"/"contaminated") plus "retried", so the artifact either
+  * records a quiet number or disclaims itself. */
 object Bench {
   private val CanaryQueries =
     Seq("q115_srp_codes", "q23_ngram_jaccard", "q71_media_content_stats")
@@ -148,6 +145,34 @@ object Bench {
     steal ++ canaries
   }
 
+  /** One measuring pass (1-based `index`) and its weather verdict:
+    * `reasons` is empty iff the pass was quiet. */
+  private[graft] case class Pass(index: Int, res: Seq[QRow], pre: Double,
+    mid: Seq[Double], post: Double, reasons: Seq[String])
+
+  /** The reported pass: a quiet one if any pass was quiet, else the
+    * least-inflated contaminated one. The ok-query set is intersected
+    * across ALL passes once; the candidate with the most ok queries
+    * wins outright (a sum over fewer queries must not win by
+    * omission), then the lowest median total over that shared set,
+    * then the earlier pass. One global key, so the choice does not
+    * depend on the order the passes are compared in. */
+  private[graft] def choosePass(passes: Seq[Pass]): Pass = {
+    val quiet = passes.filter(_.reasons.isEmpty)
+    val pool = if (quiet.nonEmpty) quiet else passes
+    def okNames(p: Pass) = p.res.filter(_.ok).map(_.name).toSet
+    val shared = passes.map(okNames).reduce(_ intersect _)
+    pool.minBy(p => (-okNames(p).size,
+      p.res.filter(r => shared(r.name)).map(_.median).sum, p.index))
+  }
+
+  /** Every contaminated pass's reasons, tagged by pass index: why the
+    * retries happened on a quiet-after-retry verdict, and why every
+    * pass was disclaimed on a contaminated one. Empty only when pass 1
+    * was quiet. */
+  private[graft] def weatherReasons(passes: Seq[Pass]): Seq[String] =
+    passes.flatMap(p => p.reasons.map(r => s"pass ${p.index}: $r"))
+
   /** Poll for a quiet window before a retry pass: probe every ~20 s
     * until steal < 5% or the wait budget elapses. Bounded so a
     * permanently noisy host still produces an artifact (with the
@@ -157,8 +182,8 @@ object Bench {
     * retry) and closed the round contaminated — waiting out a
     * multi-minute wave is cheaper than shipping a disclaimed number. */
   private def awaitQuietWindow(): Double = {
-    val waitSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIET_WAIT", "600")
-      .toLong.max(0L)
+    val waitSec =
+      GraftSession.envNum(sys.env, "SPARK_GRAFT_BENCH_QUIET_WAIT", 600L).max(0L)
     val deadline = System.nanoTime() + waitSec * 1000000000L
     var steal = tools.StealProbe.measureDefault()
     while (steal >= 5.0 && System.nanoTime() < deadline) {
@@ -171,16 +196,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
+    val cpus = GraftSession.cpus
+    val runs =
+      GraftSession.envNum(sys.env, "SPARK_GRAFT_BENCH_RUNS", 3L).toInt.max(1)
     // weather first: steal accrues only under load, so probe before the
     // Spark session exists (the probe's own spin is the load)
     val stealPre0 = tools.StealProbe.measureDefault()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(cpus)
       // The bench session runs 200+ queries × runs each, and every run
       // leaves localCheckpoint blocks behind that the ContextCleaner
       // only reclaims after a driver GC notices the dead RDD refs; the
@@ -201,61 +223,36 @@ object Bench {
     // sf0.1-committed bands to sf0.15/sf0.12/... and falsely adjudicate
     // every quiet run of those profiles contaminated
     val bandsApply =
-      new java.io.File(sfDir).getName == "sf0.1" && cpus == "32"
+      new java.io.File(sfDir).getName == "sf0.1" && cpus == 32
     val (res1, mid1) = measurePass(spark, sfDir, sorted, runs, stealPre0)
     val post1 = tools.StealProbe.measureDefault()
     val reasons1 = contaminationOf(stealPre0, res1, mid1, post1, bandsApply)
-    // self-defense: up to SPARK_GRAFT_BENCH_RETRIES (default 2, round
-    // 17; round 16's single retry launched back into the same wave and
-    // closed the round without a quiet official number) bounded retries,
-    // each after a quiet-window wait. A retry reuses the warm JVM and
-    // session memos — shared artifacts amortize exactly as they do
-    // across the 3 runs within a pass. Timers, query set, median rule
-    // and the JSON contract are untouched: the policy only decides
-    // WHICH pass's numbers are reported and how the artifact
-    // self-adjudicates. `reasons` records why retries happened (pass
-    // 1's trigger) when the verdict is quiet-after-retry, or why the
-    // reported pass is contaminated — empty only when pass 1 was quiet.
-    case class Pass(res: Seq[QRow], pre: Double, mid: Seq[Double],
-      post: Double, reasons: Seq[String])
-    val maxRetries = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRIES", "2")
-      .toInt.max(0)
-    var passes = List(Pass(res1, stealPre0, mid1, post1, reasons1))
-    while (passes.head.reasons.nonEmpty && passes.length <= maxRetries) {
+    // self-defense: up to SPARK_GRAFT_BENCH_RETRIES (default 2)
+    // bounded retries, each after a quiet-window wait. A retry reuses
+    // the warm JVM and session memos — shared artifacts amortize
+    // exactly as they do across the 3 runs within a pass. Timers, query
+    // set, median rule and the JSON contract are untouched: the policy
+    // only decides WHICH pass's numbers are reported ([[choosePass]])
+    // and how the artifact self-adjudicates.
+    val maxRetries =
+      GraftSession.envNum(sys.env, "SPARK_GRAFT_BENCH_RETRIES", 2L).max(0L)
+    var passes = Vector(Pass(1, res1, stealPre0, mid1, post1, reasons1))
+    while (passes.last.reasons.nonEmpty && passes.length <= maxRetries) {
       System.err.println(s"[bench] pass ${passes.length} contaminated: " +
-        passes.head.reasons.mkString("; "))
+        passes.last.reasons.mkString("; "))
       val pre = awaitQuietWindow()
       val (res, mid) = measurePass(spark, sfDir, sorted, runs, pre)
       val post = tools.StealProbe.measureDefault()
-      passes = Pass(res, pre, mid, post,
-        contaminationOf(pre, res, mid, post, bandsApply)) :: passes
-    }
-    // report the first quiet pass if any pass was quiet; else the
-    // least-inflated contaminated pass. "Less inflated" compares totals
-    // over the queries that passed in BOTH passes — a pass whose sum
-    // covers fewer queries (one crashed) must not win the tie-break by
-    // omission — and prefers the pass with fewer failures outright.
-    def lessInflated(a: Pass, b: Pass): Pass = {
-      val okA = a.res.filter(_.ok).map(_.name).toSet
-      val okB = b.res.filter(_.ok).map(_.name).toSet
-      val common = okA.intersect(okB)
-      val tA = a.res.filter(r => common(r.name)).map(_.median).sum
-      val tB = b.res.filter(r => common(r.name)).map(_.median).sum
-      val pickA = if (okA.size != okB.size) okA.size > okB.size
-        else tA <= tB
-      if (pickA) a else b
+      passes :+= Pass(passes.length + 1, res, pre, mid, post,
+        contaminationOf(pre, res, mid, post, bandsApply))
     }
     val retried = passes.length > 1
-    if (retried && passes.head.reasons.nonEmpty)
+    if (retried && passes.last.reasons.nonEmpty)
       System.err.println(s"[bench] final retry also contaminated: " +
-        passes.head.reasons.mkString("; "))
-    val (chosen, verdict, reasons) = passes.find(_.reasons.isEmpty) match {
-      case Some(p) =>
-        (p, "quiet", if (retried) reasons1 else Seq.empty[String])
-      case None =>
-        val p = passes.reverse.reduceLeft(lessInflated)
-        (p, "contaminated", p.reasons)
-    }
+        passes.last.reasons.mkString("; "))
+    val chosen = choosePass(passes)
+    val verdict = if (chosen.reasons.isEmpty) "quiet" else "contaminated"
+    val reasons = weatherReasons(passes)
     val (results, stealPre, stealMid, stealPost) =
       (chosen.res, chosen.pre, chosen.mid, chosen.post)
     val failed = results.filterNot(_.ok).map(_.name)

@@ -64,21 +64,16 @@ object Tables {
     * at production scale — where scans already plan at least
     * `defaultParallelism` splits — the branch is the identity.
     *
-    * Opt-in, NOT applied inside [[apply]]: the round-16 interleaved
-    * full-surface A/B (min-of-4 per variant, /tmp-measured, summarized
-    * in OPTIMIZATION_r16.md) priced a forced 32-task exchange stage at
-    * ~0.05-0.15 s on this box — universal spreading LOST ~24 s across
-    * the 209-query surface while the ~20 genuinely compute-bound
-    * operators won 0.1-0.9 s each. So only call sites whose narrow
-    * compute measurably exceeds the stage price use this. Results are
-    * partitioning-invariant (ParallelismSpec pins it; the oracle gate
-    * re-checks every query). `graft.spread=off` (session conf) forces
-    * the identity for A/B probes. */
+    * Opt-in, NOT applied inside [[apply]]: a forced exchange stage
+    * costs ~0.05-0.15 s, more than most queries' narrow compute, so
+    * only call sites whose narrow compute measurably exceeds the stage
+    * price use this (the A/B evidence is in OPTIMIZATION_r16.md).
+    * Results are partitioning-invariant (ParallelismSpec pins it; the
+    * oracle gate re-checks every query). */
   def spreadScan(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = apply(spark, dir, name)
     val target = spark.sparkContext.defaultParallelism
-    if (spark.conf.get("graft.spread", "on") == "off") df
-    else if (df.rdd.getNumPartitions >= target) df
+    if (df.rdd.getNumPartitions >= target) df
     else df.repartition(target, col(SpreadKeys(name)))
   }
 

@@ -1,18 +1,30 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json and errors.json, for the DuckDB compare
+  * (tools/check_oracle.py). Usage: `Verify <sfDir> <outDir> [q...]` —
+  * query names restrict the run to that subset; an unknown name fails
+  * the run before any work, since a dropped name would otherwise read
+  * as a clean (empty) compare. */
 object Verify {
+  /** The names not registered in SparkEntry.queries. */
+  def unknownNames(names: Seq[String]): Seq[String] =
+    names.filterNot(SparkEntry.queries.contains)
+
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    if (args.length < 2) {
+      System.err.println("usage: Verify <sfDir> <outDir> [query...]")
+      sys.exit(2)
+    }
+    val Array(sfDir, outDir) = args.take(2)
+    val names = args.drop(2).toSet
+    val unknown = unknownNames(names.toSeq.sorted)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] unknown queries: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
+    def selected(name: String): Boolean = names.isEmpty || names(name)
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A query that throws must leave an explicit, machine-readable trace:
@@ -22,7 +34,7 @@ object Verify {
     // errors.json so no registered query can ever vanish from the
     // artifacts without a recorded cause.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -42,7 +54,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors
@@ -55,7 +67,7 @@ object Verify {
     // banner are the explicit record.
     if (errors.nonEmpty)
       System.err.println(
-        s"[verify] ${errors.size}/${SparkEntry.queries.size} queries FAILED: "
+        s"[verify] ${errors.size} queries FAILED: "
           + errors.keys.mkString(", "))
     spark.stop()
   }

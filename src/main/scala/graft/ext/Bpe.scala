@@ -193,9 +193,6 @@ object Bpe {
       trainFor(spark, dir, merges).map { case (l, r, _) => (l, r) })
       .orderBy(col("doc_id"))
 
-  def encodeCorpusOf(docs: DataFrame, merges: Int): DataFrame =
-    encodeWith(docs, train(docs, merges).map { case (l, r, _) => (l, r) })
-
   private def encodeWith(docs: DataFrame,
       ranks: Seq[(String, String)]): DataFrame =
     docs

@@ -63,9 +63,8 @@ object Curate {
     * real near-dup fixture graph. */
   /** One large-star + small-star round over a distinct (u, v) edge
     * frame — extracted from [[connectedComponents]] so the round's
-    * plan (exchange count, join strategy) is dumpable WITHOUT the
-    * per-round checkpoint that hides it from `explain`
-    * (tools.PlanDumpRounds; the LPA round-dump precedent).
+    * plan (exchange count, join strategy) can be inspected WITHOUT the
+    * per-round checkpoint that hides it from `explain`.
     *
     * Round-17 exchange fusion (`fused = true`, guide §2.4 — the LPA
     * subset-rule pattern): each half-round's closing `distinct()` used

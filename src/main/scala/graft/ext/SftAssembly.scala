@@ -244,20 +244,12 @@ object SftAssembly {
 
   private[ext] def promptDecontaminateOf(spark: SparkSession,
       dir: String): DataFrame = {
-    // round-17 per-task fix (guide §1.2): the prompt hash needs only
-    // the first 4 words, but the unlimited split tokenized the ENTIRE
-    // document into an array to slice 4 elements — the limit-5 form
-    // produces identical elements 1..4 (the 5th slot holds the
-    // untouched remainder) at O(prefix) instead of O(document) per
-    // row. Spreading the scan was ALSO tried and A/B-rejected (0.59 —
-    // the two added exchanges outprice the narrow md5 map, the
-    // round-16 universal-spread lesson again).
-    // `graft.q195=legacy` restores the full-split expression (A/B).
-    val legacy = spark.conf.get("graft.q195", "on") == "legacy"
-    val splitSql = if (legacy) "split(text, ' ')" else "split(text, ' ', 5)"
+    // the prompt hash needs only the first 4 words: the limit-5 split
+    // yields the same elements 1..4 (the 5th slot holds the untouched
+    // remainder) at O(prefix) instead of O(document) per row
     val d = Tables(spark, dir, "documents")
       .withColumn("prompt_hash", md5(
-        expr(s"lower(array_join(slice($splitSql, 1, 4), ' '))")
+        expr("lower(array_join(slice(split(text, ' ', 5), 1, 4), ' '))")
           .cast("binary")))
     val prompts = d.filter(col("doc_id") % 50 === 0)
       .select(col("prompt_hash")).distinct()

@@ -502,25 +502,11 @@ object TextAnalysis {
         col("t.w").as("w"))
 
   def bigramLogprobOf(docs: DataFrame, hotK: Int = 4096): DataFrame = {
-    // ONE tokenize pass (round-17; guide §1.2 "don't compute things
-    // twice"): the unigram counts and the transition zip both read the
-    // same materialized (doc_id, ws) token projection — before, the
-    // corpus was split+exploded once for c1 and split+zipped AGAIN for
-    // the bigrams, two full passes over the text where one suffices.
-    // The checkpoint trades one corpus-sized token-array
-    // materialization for the second tokenize scan — the §8 "decide on
-    // small rows" trade in reverse: here the payload IS the thing both
-    // consumers need. `graft.q107=legacy` (session conf) forces the
-    // round-16 two-pass shape — the interleaved-A/B kill-switch.
-    val legacy =
-      docs.sparkSession.conf.get("graft.q107", "fused") == "legacy"
-    val toks =
-      if (legacy) docs.select(col("doc_id"), tokens(col("text")).as("ws"))
-      else docs.select(col("doc_id"), tokens(col("text")).as("ws"))
-        .localCheckpoint(eager = false)
-    val tok =
-      if (legacy) docs.select(explode(tokens(col("text"))).as("w"))
-      else toks.select(explode(col("ws")).as("w"))
+    // ONE tokenize pass: the unigram counts and the transition zip both
+    // read the same materialized (doc_id, ws) token projection
+    val toks = docs.select(col("doc_id"), tokens(col("text")).as("ws"))
+      .localCheckpoint(eager = false)
+    val tok = toks.select(explode(col("ws")).as("w"))
     // materialized once: read again by the corpus-level model build AND
     // the per-doc scoring join — without this the explode+shuffle runs
     // twice
@@ -531,31 +517,24 @@ object TextAnalysis {
     val c1 = tok.groupBy(col("w")).agg(count(lit(1)).as("c"))
       .localCheckpoint(eager = false)
     // the corpus token total rides the DAG as a 1-row broadcast cross
-    // join instead of an eager head() — no blocking driver round trip
-    // between the model build and the scoring chain (round-17; the
-    // DetLn chain is unchanged: `n` is the same exact BIGINT whether
-    // spliced as a literal or read from the joined column)
-    val bcBase = docBig.groupBy(col("prev"), col("w"))
+    // join — no blocking driver round trip between the model build and
+    // the scoring chain; `n` is the same exact BIGINT a spliced literal
+    // would be, so the DetLn chain is unchanged
+    val bc = docBig.groupBy(col("prev"), col("w"))
       .agg(sum(col("k")).as("c2"))
       .join(c1.select(col("w").as("prev"), col("c").as("cp")), "prev")
       .join(c1.select(col("w"), col("c").as("cw")), "w")
-    val (bc, nA, nB) =
-      if (legacy) {
-        val n = c1.agg(sum(col("c"))).head().getLong(0)
-        (bcBase.localCheckpoint(eager = false),
-          s"7 * c2 * $n + 3 * cw * cp", s"10 * cp * $n")
-      } else
-        (bcBase.crossJoin(broadcast(c1.agg(sum(col("c")).as("n"))))
-          .localCheckpoint(eager = false),
-          "7 * c2 * n + 3 * cw * cp", "10 * cp * n")
+      .crossJoin(broadcast(c1.agg(sum(col("c")).as("n"))))
+      .localCheckpoint(eager = false)
     // the interpolated probability is an exact integer ratio:
     //   0.7·c2/cp + 0.3·cw/N = (7·c2·N + 3·cw·cp) / (10·cp·N)
     // so the per-BIGRAM deterministic micro-nat score is
     // lnFix(numerator) − lnFix(denominator) (see DetLn); products fit
     // BIGINT through corpora of ~10^8 tokens — the 100 TB form widens
     // them to DECIMAL(38,0)
-    val scored = DetLn.withLnFix(DetLn.withLnFix(bc, "ln_a", nA),
-        "ln_b", nB)
+    val scored = DetLn.withLnFix(
+        DetLn.withLnFix(bc, "ln_a", "7 * c2 * n + 3 * cw * cp"),
+        "ln_b", "10 * cp * n")
       .withColumn("lp_micro", expr(DetLn.microSql("ln_a - ln_b")))
       .select(col("prev"), col("w"), col("c2"), col("lp_micro"))
     val hot = scored.orderBy(col("c2").desc, col("prev"), col("w"))

@@ -50,8 +50,8 @@ object FuzzyMatch {
       right: DataFrame, rKey: String, rName: String): DataFrame = {
     def named(df: DataFrame, name: String): DataFrame =
       df.filter(col(name).isNotNull && length(col(name)) > 0)
-    // Size-gated broadcast for the two key re-attach joins (round-17,
-    // guide §3.1): their build side is the caller's INPUT frame
+    // Size-gated broadcast for the two key re-attach joins (guide
+    // §3.1): their build side is the caller's INPUT frame
     // projected to (key, name) — for dimension-sized entity resolution
     // (the q94 shape) broadcasting it turns both re-attaches into
     // BroadcastHashJoins and removes two shuffle exchanges plus their
@@ -61,10 +61,12 @@ object FuzzyMatch {
     // — no constant tuned to either profile, and estimates for a
     // scan+filter+project are the planner's file-size numbers, the
     // same evidence AQE would use one stage later. The gate is
-    // plan-time (no job): a wrong estimate degrades to the join
-    // strategy Spark would have picked anyway.
-    // `graft.fuzzybcast=off` (session conf) forces the round-16 plan —
-    // the interleaved-A/B kill-switch, Tables.spreadScan precedent.
+    // plan-time (no job). Unlike Spark's own auto-broadcast pick, an
+    // explicit broadcast hint is never demoted by AQE at runtime: a
+    // badly understated estimate on a large input force-broadcasts it
+    // (driver and executor memory), it does not fall back to sort-merge.
+    // `graft.fuzzybcast=off` (session conf) is the production safety
+    // valve for that case: it restores the unhinted plan.
     def bcastIfDim(df: DataFrame): DataFrame = {
       val thresh =
         df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
@@ -81,7 +83,7 @@ object FuzzyMatch {
     // (~|variants|²/2⁶⁴), while every shuffled variant row shrinks from
     // a ~20-char string to one long (guide §2.3 "shuffle keys and
     // metadata instead of payloads")
-    // Spread the post-distinct compute (round-17, guide §8 "use what
+    // Spread the post-distinct compute (guide §8 "use what
     // you know that the optimizer does not"): the variant explode and
     // the levenshtein verify both run ABOVE the distinct's exchange,
     // and for a dimension-sized name table AQE correctly coalesces
@@ -96,7 +98,9 @@ object FuzzyMatch {
     // corpus scale, where AQE keeps the natural parallelism anyway,
     // the plan is unchanged. Partition count derives from the
     // session's core count — nothing tuned to either profile.
-    // `graft.fuzzyspread=off` (session conf) = A/B kill-switch.
+    // `graft.fuzzyspread=off` (session conf) is a production safety
+    // valve: it drops the pin should the size estimate misjudge a
+    // large input as dimension-sized.
     // The pin sits BELOW the distinct: a user-specified partition
     // count is exempt from AQE partition coalescing AND satisfies the
     // distinct's clustering requirement, so the distinct plans no

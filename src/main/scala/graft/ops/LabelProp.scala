@@ -65,34 +65,16 @@ object LabelProp {
     // re-sorts the edge-sized adj side — the checkpoint carries hash
     // partitioning but no order) for a hash build (guide §3.1;
     // round-16 A/B 1.13). guide §2.4.
-    //
-    // `graft.lpa.combine=on` (session conf, round-17 experiment): LATE
-    // rounds (r ≥ 1, where label diversity has partially collapsed so
-    // map-side combine actually compresses) trade the single raw-vote
-    // exchange for partial-aggregate → Exchange(n, lbl) → final →
-    // Exchange(n) — two exchanges of combined rows vs one of raw
-    // votes. TESTED round-17, interleaved A/B min-of-4: 1.14 — the
-    // combine variant is 14% SLOWER even with the late-round gate
-    // (votes are two longs/row; the second exchange + second aggregate
-    // pass cost more than the combine saves at any diversity this
-    // graph reaches in 3 rounds). Default stays the single-exchange
-    // raw-vote shape; do not retry without a deeper-rounds use case.
-    val combineLate =
-      edges.sparkSession.conf.get("graft.lpa.combine", "off") == "on"
     var r = 0
     while (r < Rounds) {
-      val raw = adj
+      val votes = adj
         .join(labels.select(col("node").as("m"), col("lbl"))
           .hint("shuffle_hash"), Seq("m"))
         .select(col("n"), col("lbl"))
         .unionAll(labels.select(col("node").as("n"), col("lbl")))
-      val votes =
-        if (combineLate && r >= 1)
-          raw.groupBy(col("n"), col("lbl")).agg(count(lit(1)).as("c"))
-        else
-          raw.repartition(col("n"))
-            .groupBy(col("n"), col("lbl"))
-            .agg(count(lit(1)).as("c"))
+        .repartition(col("n"))
+        .groupBy(col("n"), col("lbl"))
+        .agg(count(lit(1)).as("c"))
       labels = argmaxLabel(votes).localCheckpoint(eager = false)
       r += 1
     }

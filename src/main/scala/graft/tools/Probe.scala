@@ -1,58 +1,162 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
 
-/** Scratch profiling main (not part of the driver contract). */
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+
+import graft.{GraftSession, SparkEntry}
+
+/** The dev probe over registered queries, one session per invocation
+  * (`$SPARK_GRAFT_CPUS` cores, as Bench). Every mode materializes
+  * through the `noop` sink, as Bench does: under `count()` Catalyst
+  * prunes columns and drops sorts, so a query whose cost lives in a
+  * pruned branch would measure near zero. No query names = every
+  * registered query, in name order.
+  *
+  *   - `time <sfDir> [q...]` — one warm run, then [[Runs]] timed runs
+  *     per query, split into what the scheduler saw: jobs, stages,
+  *     tasks, executor run and CPU time, GC, shuffle read/write and
+  *     spill (per-run averages).
+  *   - `ab <sfDir> k=v,... [q...]` — interleaved A/B: session A applies
+  *     the listed confs, session B keeps the defaults; after one warm
+  *     run each, [[Runs]] alternating rounds A, B, A, B... so co-tenant
+  *     weather hits both sides alike. Reports each side's MIN (the
+  *     noise-robust statistic on a host with steal waves), the ratio,
+  *     and every round.
+  *   - `plan <sfDir> [--exec] [--out dir] [q...]` — the formatted
+  *     physical plan; `--exec` also runs the query and prints the final
+  *     adaptive plan (AQE stage reuse only shows after execution);
+  *   `--out dir` writes `dir/<query>.txt` instead of printing.
+  *
+  * `sbt "runMain graft.tools.Probe time /path/to/sf0.1 q107_bigram_logprob"` */
 object Probe {
+  private val Runs = 4
+
+  private class Counters extends SparkListener {
+    val jobs, stages, tasks, runMs, cpuNs, gcMs, shufR, shufW, spill =
+      new AtomicLong
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      tasks.incrementAndGet()
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      val m = sc.stageInfo.taskMetrics
+      if (m != null) {
+        runMs.addAndGet(m.executorRunTime)
+        cpuNs.addAndGet(m.executorCpuTime)
+        gcMs.addAndGet(m.jvmGCTime)
+        shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
+      }
+    }
+    def reset(): Unit = Seq(jobs, stages, tasks, runMs, cpuNs, gcMs,
+      shufR, shufW, spill).foreach(_.set(0))
+  }
+
+  private def noop(df: DataFrame): Unit =
+    df.write.mode("overwrite").format("noop").save()
+
+  /** Wall seconds of one noop materialization of query `n`. */
+  private def timed(s: SparkSession, dir: String, n: String): Double = {
+    val t0 = System.nanoTime()
+    noop(SparkEntry.queries(n)(s, dir))
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  private def time(spark: SparkSession, dir: String, names: Seq[String]): Unit = {
+    val c = new Counters
+    spark.sparkContext.addSparkListener(c)
+    // the listener bus is asynchronous: let it drain before reading
+    def settle(): Unit = Thread.sleep(300)
+    println(f"${"query"}%-26s ${"s/run"}%7s ${"jobs"}%5s ${"stage"}%5s ${"tasks"}%6s ${"runS"}%7s ${"cpuS"}%7s ${"gcS"}%6s ${"shR_MB"}%7s ${"shW_MB"}%7s ${"spillMB"}%7s")
+    names.foreach { n =>
+      try {
+        timed(spark, dir, n) // warm: codegen cache, session memos, JIT
+        settle()
+        c.reset()
+        val wall = (1 to Runs).map(_ => timed(spark, dir, n)).sum / Runs
+        settle()
+        def per(v: AtomicLong, scale: Double): Double = v.get / scale / Runs
+        println(f"$n%-26s $wall%7.3f ${c.jobs.get / Runs}%5d ${c.stages.get / Runs}%5d ${c.tasks.get / Runs}%6d ${per(c.runMs, 1e3)}%7.2f ${per(c.cpuNs, 1e9)}%7.2f ${per(c.gcMs, 1e3)}%6.2f ${per(c.shufR, 1e6)}%7.1f ${per(c.shufW, 1e6)}%7.1f ${per(c.spill, 1e6)}%7.1f")
+      } catch { case e: Throwable => println(f"$n%-26s FAILED: ${e.getMessage}") }
+    }
+  }
+
+  private def ab(spark: SparkSession, dir: String, confs: String,
+      names: Seq[String]): Unit = {
+    val sA = spark.newSession()
+    val sB = spark.newSession()
+    confs.split(',').map(_.trim).filter(_.nonEmpty).foreach { kv =>
+      val Array(k, v) = kv.split("=", 2)
+      sA.conf.set(k, v)
+    }
+    def fmt(xs: Seq[Double]) = xs.map(x => f"$x%.3f").mkString(",")
+    println(f"${"query"}%-26s ${"A_min"}%7s ${"B_min"}%7s ${"A/B"}%6s  rounds")
+    names.foreach { n =>
+      try {
+        timed(sA, dir, n); timed(sB, dir, n) // warm both sides
+        val rounds = (1 to Runs).map(_ => (timed(sA, dir, n), timed(sB, dir, n)))
+        val (as, bs) = rounds.unzip
+        println(f"$n%-26s ${as.min}%7.3f ${bs.min}%7.3f ${as.min / bs.min}%6.2f  A=${fmt(as)} B=${fmt(bs)}")
+      } catch { case e: Throwable => println(s"$n FAILED: ${e.getMessage}") }
+    }
+  }
+
+  private def plan(spark: SparkSession, dir: String, args: Seq[String]): Unit = {
+    val exec = args.contains("--exec")
+    val outIdx = args.indexOf("--out")
+    val out = if (outIdx >= 0) Some(Paths.get(args(outIdx + 1))) else None
+    val names = queryNames(args.zipWithIndex.collect {
+      case (a, i) if !a.startsWith("--") && (outIdx < 0 || i != outIdx + 1) => a
+    })
+    out.foreach(Files.createDirectories(_))
+    names.foreach { n =>
+      try {
+        val df = SparkEntry.queries(n)(spark, dir)
+        val text = new StringBuilder(
+          df.queryExecution.explainString(FormattedMode))
+        if (exec) {
+          noop(df)
+          text ++= "\n== Executed (final adaptive) plan ==\n" +
+            df.queryExecution.executedPlan.toString
+        }
+        out match {
+          case Some(d) =>
+            Files.writeString(d.resolve(s"$n.txt"), text.toString)
+            println(s"[probe] wrote $n")
+          case None => println(s"\n===== $n =====\n$text")
+        }
+      } catch { case e: Throwable => println(s"$n FAILED: ${e.getMessage}") }
+    }
+  }
+
+  private def queryNames(args: Seq[String]): Seq[String] =
+    if (args.nonEmpty) args else SparkEntry.queries.keys.toSeq.sorted
+
   def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val usage = "usage: Probe time <sfDir> [q...] | " +
+      "ab <sfDir> k=v,... [q...] | plan <sfDir> [--exec] [--out dir] [q...]"
+    val modeOk = args.length >= 2 && (args(0) match {
+      case "time" | "plan" => true
+      case "ab" => args.length >= 3
+      case _ => false
+    })
+    if (!modeOk) {
+      System.err.println(usage)
+      sys.exit(2)
+    }
+    val (mode, dir, rest) = (args(0), args(1), args.drop(2).toSeq)
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"$name%-30s ${(System.nanoTime() - t0) / 1e9}%6.2f s  rows=$n")
-    }
-    // warmup
-    graft.Tables(spark, dir, "documents").count()
-    val sh = graft.ext.Dedup
-      .shingleHashDfOf(graft.Tables(spark, dir, "documents"))
-      .withColumn("n", size(col("hs")))
-    time("sh localCheckpoint") { sh.localCheckpoint().count() }
-    val shc = sh.localCheckpoint()
-    val tau = 0.8
-    val freq = shc.select(explode(col("hs")).as("h"))
-      .groupBy(col("h")).agg(count(lit(1)).as("df"))
-    val ordered = shc
-      .select(col("doc_id"), col("n"), explode(col("hs")).as("h"))
-      .join(freq, "h")
-      .groupBy(col("doc_id"), col("n"))
-      .agg(transform(array_sort(collect_list(struct(col("df"), col("h")))),
-        x => x.getField("h")).as("hs"))
-    time("df-ordered rebuild") { ordered.count() }
-    val ord = ordered.localCheckpoint()
-    val prefixLen = (col("n") - ceil(col("n") * tau) + 1).cast("int")
-    val prefix = ord.select(col("doc_id"), col("n"),
-      explode(slice(col("hs"), lit(1), prefixLen)).as("p"))
-    val candidates = prefix.as("x").join(prefix.as("y"),
-        col("x.p") === col("y.p") && col("x.doc_id") < col("y.doc_id") &&
-          col("x.n") >= col("y.n") * tau && col("y.n") >= col("x.n") * tau)
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    time("candidates (df-ordered)") { candidates.count() }
-    time("full ngramJaccardPairs x1") {
-      graft.ext.Dedup.ngramJaccardPairs(spark, dir).count()
-    }
-    time("full ngramJaccardPairs x2") {
-      graft.ext.Dedup.ngramJaccardPairs(spark, dir).count()
-    }
-    time("full dedupClusters (q48)") {
-      graft.ext.Curate.dedupClusters(spark, dir).count()
-    }
-    spark.stop()
+    try mode match {
+      case "time" => time(spark, dir, queryNames(rest))
+      case "ab" => ab(spark, dir, rest.head, queryNames(rest.tail))
+      case _ => plan(spark, dir, rest)
+    } finally spark.stop()
   }
 }

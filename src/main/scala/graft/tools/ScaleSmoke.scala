@@ -12,10 +12,8 @@ object ScaleSmoke {
     val base = "/root/testdata/sf0.1"
     val big = "/tmp/graft_scale10"
     val replicas = 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def replicate(table: String, keyShifts: Seq[(String, Long)]): Unit = {

@@ -108,4 +108,67 @@ class BenchWeatherSpec extends AnyFunSuite {
     assert(Bench.contaminationOf(0.3, quietRows, mids, 0.4,
       bandsApply = true).isEmpty)
   }
+
+  private def pass(index: Int, medians: Seq[(String, Double, Boolean)],
+      reasons: Seq[String] = Seq("steal_pct_post=12.0 (double-digit)")) =
+    Bench.Pass(index, medians.map { case (n, m, ok) => row(n, m, ok) },
+      0.0, Seq.empty, 0.0, reasons)
+
+  // three contaminated passes where a pairwise "common ok queries"
+  // reduction is non-transitive: p1 beats p2 on their shared set, p2
+  // beats p3, p3 beats p1 — only a set intersected across all passes
+  // gives one answer
+  private val p1 = pass(1, Seq(("a", 1.0, true), ("b", 5.0, true),
+    ("c", 9.0, false)))
+  private val p2 = pass(2, Seq(("a", 3.0, true), ("b", 1.0, false),
+    ("c", 1.0, true)))
+  private val p3 = pass(3, Seq(("a", 2.0, false), ("b", 2.0, true),
+    ("c", 2.0, true)))
+
+  test("pass choice is the same under every permutation of the passes") {
+    val picks = Seq(p1, p2, p3).permutations
+      .map(ps => Bench.choosePass(ps).index).toSet
+    assert(picks.size == 1)
+  }
+
+  test("pass choice: most ok queries first, then the lowest total on " +
+      "the ok set shared by ALL passes") {
+    val full = pass(4, Seq(("a", 9.0, true), ("b", 9.0, true),
+      ("c", 9.0, true)))
+    assert(Bench.choosePass(Seq(p1, p2, full)).index == 4)
+    // p1/p2/p3 tie at two ok queries; no query is ok in all three, so
+    // the shared totals tie at 0 and the earliest pass wins
+    assert(Bench.choosePass(Seq(p3, p2, p1)).index == 1)
+    val twoOk = Seq(
+      pass(1, Seq(("a", 3.0, true), ("b", 1.0, true), ("c", 1.0, false))),
+      pass(2, Seq(("a", 2.0, true), ("b", 5.0, true), ("c", 1.0, false))))
+    // shared ok set {a, b}: pass 1 totals 4.0, pass 2 totals 7.0
+    assert(Bench.choosePass(twoOk.reverse).index == 1)
+  }
+
+  test("a quiet pass wins over any contaminated one") {
+    val quiet = pass(3, Seq(("a", 50.0, true), ("b", 50.0, true),
+      ("c", 50.0, true)), reasons = Seq.empty)
+    val fast = pass(1, Seq(("a", 1.0, true), ("b", 1.0, true),
+      ("c", 1.0, true)))
+    assert(Bench.choosePass(Seq(fast, quiet)).index == 3)
+  }
+
+  test("weather reasons keep every contaminated pass, tagged by index") {
+    val quiet = pass(3, Seq(("a", 1.0, true)), reasons = Seq.empty)
+    val p2b = pass(2, Seq(("a", 1.0, true)),
+      reasons = Seq("q23_ngram_jaccard=3.386 > 2x quiet band 1.618"))
+    assert(Bench.weatherReasons(Seq(p1, p2b, quiet)) == Seq(
+      "pass 1: steal_pct_post=12.0 (double-digit)",
+      "pass 2: q23_ngram_jaccard=3.386 > 2x quiet band 1.618"))
+    assert(Bench.weatherReasons(Seq(quiet)).isEmpty)
+  }
+
+  test("numeric env settings fall back to the default when malformed") {
+    val env = Map("RUNS" -> "3x", "WAIT" -> " 90 ", "EMPTY" -> "")
+    assert(GraftSession.envNum(env, "RUNS", 3L) == 3L)
+    assert(GraftSession.envNum(env, "WAIT", 600L) == 90L)
+    assert(GraftSession.envNum(env, "EMPTY", 2L) == 2L)
+    assert(GraftSession.envNum(env, "UNSET", 7L) == 7L)
+  }
 }
