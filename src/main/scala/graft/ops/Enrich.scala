@@ -1,9 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.schema.Metadata
+import graft.schema.Schemas
 
 /** Enrichment operators (SURVEY.md §2 E1/G1/G2/D5, H4/J3).
   *
@@ -23,10 +22,15 @@ object Enrich {
     df.agg(coalesce(max(col(keyCol)).cast("long"), lit(0L)))
       .head().getLong(0)
 
-  /** Hard cap for the dim-only global-window paths: a dimension table
-    * (one row per simulation) is orders of magnitude below this; a fact
-    * table is orders of magnitude above. */
+  /** Hard cap for the dim-only numbering paths: a dimension table (one
+    * row per simulation) is orders of magnitude below this; a fact table
+    * is orders of magnitude above. */
   val DimRowCap: Long = 1000000L
+
+  private def dimOnlyMessage(what: String, how: String, cap: Long): String =
+    s"$what is a dim-only operator ($how) and its input exceeds $cap " +
+      "rows; number fact-scale data with monotonically_increasing_id or " +
+      "a partitioned window instead"
 
   /** Misuse guard for the single-partition row_number paths: fail fast
     * when the input is not dimension-sized, BEFORE shipping it into a
@@ -40,25 +44,37 @@ object Enrich {
     // is already far beyond any dim contract
     val n = df.limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).count()
     require(n <= cap,
-      s"$what is a dim-only operator (global single-partition window) " +
-        s"and its input exceeds $cap rows; number fact-scale data with " +
-        "monotonically_increasing_id or a partitioned window instead")
+      dimOnlyMessage(what, "global single-partition window", cap))
   }
 
-  /** H4/J3 — dim surrogate numbering: PG-sequence semantics as row_number
-    * over (date_run, simulation_id), offset by the existing high-water
-    * mark so re-runs continue the sequence. Single-partition window by
-    * design — the dim table is one row per simulation, never fact-scale —
-    * and [[requireDimSized]] enforces that contract (throws above
-    * `maxDimRows` rather than silently serializing a fact table through
-    * one partition). */
-  def numberDim(newDim: Dataset[Metadata], startFrom: Long,
-      maxDimRows: Long = DimRowCap): DataFrame = {
-    requireDimSized(newDim.toDF(), maxDimRows, "numberDim")
-    val w = Window.orderBy(col("date_run"), col("simulation_id"))
-    newDim.toDF()
-      .withColumn("simulation_num",
-        (row_number().over(w) + startFrom).cast("int"))
+  /** The same guard for rows already on the driver. */
+  private[graft] def requireDimRows(n: Long, cap: Long, what: String): Unit =
+    require(n <= cap, dimOnlyMessage(what, "numbered on the driver", cap))
+
+  /** H4/J3 — dim surrogate numbering: PG-sequence semantics over
+    * (date_run, simulation_id), offset by the existing high-water mark so
+    * re-runs continue the sequence. `rows` carry the dim columns by name
+    * (`simulation_num` excluded); the result is in
+    * [[Schemas.dimRxnSchema]] column order, sorted by its number.
+    *
+    * Driver-side contract: the input is one batch of dim rows, already
+    * collected, so it is bounded by `maxDimRows` (throws above it rather
+    * than number a fact table on the driver). The order is exactly
+    * Spark's `row_number() OVER (ORDER BY date_run, simulation_id)`:
+    * ascending, null `date_run` first, and `String` order on the ids,
+    * which equals Spark's binary order for the ASCII uuids. */
+  def numberDim(rows: Seq[Row], startFrom: Long,
+      maxDimRows: Long = DimRowCap): Seq[Row] = {
+    requireDimRows(rows.size.toLong, maxDimRows, "numberDim")
+    rows.sortBy(r => (
+      Option(r.getAs[java.sql.Date]("date_run")).map(_.toLocalDate.toEpochDay),
+      r.getAs[String]("simulation_id")))
+      .zipWithIndex.map { case (r, i) =>
+        Row.fromSeq(Schemas.dimRxnSchema.fieldNames.toSeq.map {
+          case "simulation_num" => Math.toIntExact(startFrom + i + 1)
+          case f => r.getAs[Any](f)
+        })
+      }
   }
 
   /** E1/D5 — the enrichment join: assign dim's simulation_num to fact rows

@@ -63,19 +63,26 @@ object Ledger {
     }
 
   /** Latest status per (simulation_id, etl_type) — the UPDATE-free read of
-    * the reference's mutable row. */
+    * the reference's mutable row. Two rows of one key share a
+    * `finished_at` only when one batch carried the key twice (a
+    * duplicate file); the success wins that tie, so the key is not
+    * selected again. */
   def latestState(ledger: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("simulation_id"), col("etl_type"))
-      .orderBy(col("finished_at").desc)
+      .orderBy(col("finished_at").desc, (col("status") === "success").desc)
     ledger.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** The keys already successfully ingested for an etl_type — drives K2
-    * incremental selection as an anti-join instead of directory state. */
-  def succeededIds(ledger: DataFrame, etlType: String): DataFrame =
-    latestState(ledger)
-      .filter(col("etl_type") === etlType && col("status") === "success")
-      .select(col("simulation_id"))
+  /** The keys already successfully ingested, per etl_type — drives K2
+    * incremental selection as a set filter instead of directory state.
+    * One read and one collect serve every stage of a run. */
+  def succeeded(spark: SparkSession,
+      ledgerPath: String): Map[String, Set[String]] =
+    latestState(read(spark, ledgerPath))
+      .filter(col("status") === "success")
+      .select(col("etl_type"), col("simulation_id"))
+      .collect().toSeq
+      .groupMapReduce(_.getString(0))(r => Set(r.getString(1)))(_ ++ _)
 }

@@ -2,35 +2,53 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 import graft.ops.{Clean, Enrich, Ledger}
 import graft.schema.Schemas
 
 /** Batch-mode incremental file pipeline — the reference's whole `main()`
-  * (SURVEY.md §3.1, K1-K6) re-expressed as three Spark jobs per run:
+  * (SURVEY.md §3.1, K1-K6) re-expressed as two stages per run, each ending
+  * in its own ledger append:
   *
-  *   1. metadata stage: new `metadata_<uuid>.json` → typed, renamed,
-  *      surrogate-numbered (sequence semantics via row_number + high-water
-  *      offset), appended to the dim table;
+  *   1. metadata stage: new `metadata_<uuid>.json` → renamed, validated,
+  *      surrogate-numbered on the driver (sequence semantics: order by
+  *      date_run, simulation_id, offset by the high-water mark), appended
+  *      to the dim table;
   *   2. fact stage: new `rxndata_<uuid>.csv` → one distributed scan,
   *      rename/validate/drop (clean), enriched against the *current* dim
   *      via broadcast join at write time (the reference's post-hoc batched
   *      UPDATE loop disappears), appended to the day-partitioned fact
-  *      table;
-  *   3. ledger append: one final-status row per file.
+  *      table.
+  *
+  * Every job a run launches reads or writes data. A warm run (ledger and
+  * dim already written) with both kinds of files launches, with adaptive
+  * execution on:
+  *
+  *   - ledger read: 2 (latest state per key, one shuffle), once per run;
+  *   - metadata stage: 5 — the validated batch collected (1), the dim
+  *     high-water mark (2), the dim append (1), the ledger append (1);
+  *   - fact stage: 6 — the cache of the cleaned CSVs (1), per-file row
+  *     counts and id mismatches in one groupBy over it (2), the dim
+  *     broadcast (1), the fact append (1), the ledger append (1).
+  *
+  * 13 in all; the JDBC mirror and the processed-CSV tree add their own
+  * writes. A run with nothing listed launches none.
   *
   * Incrementality (K2): the reference encodes "not yet ingested" as
   * file-presence in `processed/`. Here the ledger is the source of truth —
-  * new files = listed files anti-joined against ledger successes — and the
+  * new files = listed files whose id has no ledger success — and the
   * post-commit `archive/` move is retained for cold-storage parity (B6/B7:
   * move-after-commit is the last step, exactly as main.py:29-31).
   *
-  * Scale: file listing and per-file ledger rows are O(files) driver work;
-  * all row-level compute is distributed. The fact table is partitioned by
-  * `day`, so downstream time-scoped scans prune; dim and ledger stay
-  * dimension-scale.
+  * Scale: file listing, the ledger's success keys, the metadata batch and
+  * per-file ledger rows are O(files) driver work; all fact-row compute is
+  * distributed. The fact table is partitioned by `day`, so downstream
+  * time-scoped scans prune; dim and ledger stay dimension-scale.
   */
 object FilePipeline {
 
@@ -81,14 +99,12 @@ object FilePipeline {
     case _ => None
   }
 
-  /** Keep only files whose simulation_id has no ledger success yet. */
-  private def newFiles(spark: SparkSession, layout: Layout,
-      files: Seq[Path], etlType: String): Seq[Path] = {
-    if (files.isEmpty) return files
-    val done = Ledger
-      .succeededIds(Ledger.read(spark, layout.ledger), etlType)
-      .collect().map(_.getString(0)).toSet
-    files.filter(p => simId(p).exists(id => !done.contains(id)))
+  /** Keep only files whose simulation_id has no ledger success yet for
+    * `etlType`; `done` is [[Ledger.succeeded]]. */
+  private def newFiles(files: Seq[Path], done: Map[String, Set[String]],
+      etlType: String): Seq[Path] = {
+    val ids = done.getOrElse(etlType, Set.empty)
+    files.filter(p => simId(p).exists(id => !ids.contains(id)))
   }
 
   private def archiveFiles(spark: SparkSession, layout: Layout,
@@ -103,7 +119,7 @@ object FilePipeline {
   }
 
   def readDim(spark: SparkSession, layout: Layout): DataFrame =
-    try spark.read.parquet(layout.dimTable)
+    try spark.read.schema(Schemas.dimRxnSchema).parquet(layout.dimTable)
     catch {
       case _: org.apache.spark.sql.AnalysisException =>
         spark.createDataFrame(
@@ -111,8 +127,13 @@ object FilePipeline {
           Schemas.dimRxnSchema)
     }
 
+  /** The fact table as written: [[Schemas.factSimSchema]] plus the `day`
+    * partition, typed as partition inference would type it. */
+  private val factTableSchema =
+    Schemas.factSimSchema.add("day", DateType)
+
   def readFact(spark: SparkSession, layout: Layout): DataFrame =
-    spark.read.parquet(layout.factTable)
+    spark.read.schema(factTableSchema).parquet(layout.factTable)
 
   /** What one fact-stage ingest did: rows appended, files safe to archive,
     * per-file failures already ledgered. */
@@ -157,39 +178,39 @@ object FilePipeline {
         .withColumn("row_id", monotonically_increasing_id())
         .withColumn("simulation_num", lit(null).cast("int"))
         .cache()
-      mismatchIds = cleaned
-        .filter(col("simulation_id").isNull ||
-          col("simulation_id") =!= col("file_simulation_id"))
-        .select(col("file_simulation_id")).distinct()
-        .collect().map(_.getString(0)).toSet
-      val good = cleaned.filter(
-        !col("file_simulation_id").isInCollection(
-          if (mismatchIds.isEmpty) Seq("") else mismatchIds.toSeq))
-      val enriched = Enrich.enrichFact(good, readDim(spark, layout))
-      val out = enriched.select(
-        (Schemas.factSimSchema.fieldNames.map(col) :+ col("day")): _*)
-        .cache()
-      out.write.mode("append").partitionBy("day").parquet(layout.factTable)
-      // B2 parity: mirror the bulk load into the relational sink (the
-      // reference's fact_sim has no day column — it's our partition key)
-      layout.jdbc.foreach(t =>
-        graft.sources.JdbcSink.append(out.drop("day"), t, "fact_sim"))
-      // B1 parity: the reference's cleaned-CSV processed/<day>/ tree.
-      // Per-day loop is bounded by the batch's day count (listing-scale)
-      if (layout.processedParity) {
-        val days = out.select(col("day").cast("string")).distinct()
-          .collect().map(_.getString(0))
-        days.foreach { d =>
-          Clean.writeProcessedCsv(
-            good.filter(col("day") === d)
-              .select(Schemas.requiredCols.map(col): _*),
-            s"${layout.processed}/$d")
-        }
-      }
-      perFileCounts = out.groupBy(col("simulation_id")).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      out.unpersist()
-      cleaned.unpersist()
+      try {
+        // one pass over the cache: each file's row count, day, and whether
+        // any row's id disagrees with the file name. Dim ids are unique,
+        // so the left join below writes exactly these counts
+        val perFile = cleaned.groupBy(col("file_simulation_id"))
+          .agg(count(lit(1)), max(col("day")),
+            bool_or(col("simulation_id").isNull ||
+              col("simulation_id") =!= col("file_simulation_id")))
+          .collect()
+        val (bad, kept) = perFile.partition(_.getBoolean(3))
+        mismatchIds = bad.map(_.getString(0)).toSet
+        perFileCounts = kept.map(r => r.getString(0) -> r.getLong(1)).toMap
+        val good = cleaned.filter(
+          !col("file_simulation_id").isInCollection(
+            if (mismatchIds.isEmpty) Seq("") else mismatchIds.toSeq))
+        val enriched = Enrich.enrichFact(good, readDim(spark, layout))
+        val out = enriched.select(
+          (Schemas.factSimSchema.fieldNames.map(col) :+ col("day")): _*)
+        out.write.mode("append").partitionBy("day").parquet(layout.factTable)
+        // B2 parity: mirror the bulk load into the relational sink (the
+        // reference's fact_sim has no day column — it's our partition key)
+        layout.jdbc.foreach(t =>
+          graft.sources.JdbcSink.append(out.drop("day"), t, "fact_sim"))
+        // B1 parity: the reference's cleaned-CSV processed/<day>/ tree.
+        // Per-day loop is bounded by the batch's day count (listing-scale)
+        if (layout.processedParity)
+          kept.map(_.getString(2)).distinct.foreach { d =>
+            Clean.writeProcessedCsv(
+              good.filter(col("day") === d)
+                .select(Schemas.requiredCols.map(col): _*),
+              s"${layout.processed}/$d")
+          }
+      } finally cleaned.unpersist()
     }
     val t1 = new Timestamp(System.currentTimeMillis())
     var failures = 0
@@ -216,66 +237,99 @@ object FilePipeline {
   /** What one metadata-stage ingest did. */
   case class MetaIngest(dimRowsInserted: Long, okFiles: Seq[Path], failures: Int)
 
+  /** A listed file's identity as `<day>/<name>`, comparable between the
+    * listing and a row's `input_file_name` URI. */
+  private def fileKey(p: Path): String = s"${p.getParent.getName}/${p.getName}"
+
   /** Metadata-stage ingest of a concrete file list (K4, fixed:
     * validate-then-skip, real row count; per-file reconciliation BEFORE
     * the dim append so a failed file contributes zero dim rows — the
     * in-file id must match the filename uuid, same gate as the fact
     * stage). Shared by the batch [[run]] and the streaming foreachBatch
-    * body so both modes produce dim rows from `metadata_<uuid>.json`. */
+    * body so both modes produce dim rows from `metadata_<uuid>.json`.
+    *
+    * The batch is one row per file, as large as the file list the driver
+    * already holds, so the validated rows come to the driver in one job
+    * (bounded by [[Enrich.DimRowCap]]) and are numbered there
+    * ([[Enrich.numberDim]]). An id carried by two files of the batch is
+    * numbered once, from the first file in path order; each later file is
+    * ledgered failed and stays in `incoming/`. */
   def ingestMetadataFiles(spark: SparkSession, layout: Layout,
       metaFiles: Seq[Path]): MetaIngest = {
     if (metaFiles.isEmpty) return MetaIngest(0L, Seq.empty, 0)
     val t0 = new Timestamp(System.currentTimeMillis())
-    import spark.implicits._
     // one JSON object per file (not JSONL) — multiLine, like json.load
-    val raw = spark.read.schema(Schemas.metadataJsonSchema)
+    val valid = spark.read.schema(Schemas.metadataJsonSchema)
       .option("multiLine", "true")
       .json(metaFiles.map(_.toString): _*)
-      .withColumn("file_simulation_id",
-        regexp_extract(input_file_name(),
-          "metadata_([0-9a-fA-F-]{36})\\.json", 1))
+      .withColumn("_file", input_file_name())
       .withColumnsRenamed(Schemas.metadataRenameMap)
       .withColumn("date_run", to_date(col("date_run")))
-    val valid = raw.filter(col("simulation_id").isNotNull &&
-      col("simulation_id") === col("file_simulation_id"))
-    val okMetaIds = valid.select("simulation_id").collect()
-      .map(_.getString(0)).toSet
-    val typed = valid.drop("file_simulation_id").as[graft.schema.Metadata]
-    val hw = Enrich.highWaterMark(readDim(spark, layout), "simulation_num")
-    val numbered = Enrich.numberDim(typed, hw)
-      .select(Schemas.dimRxnSchema.fieldNames.map(col): _*)
-    numbered.write.mode("append").parquet(layout.dimTable)
-    // B3 parity: mirror the dim insert into the relational sink
-    layout.jdbc.foreach(t =>
-      graft.sources.JdbcSink.append(numbered, t, "dim_rxn"))
-    val t1 = new Timestamp(System.currentTimeMillis())
-    var failures = 0
-    val ledgerRows = metaFiles.flatMap(simId).map { id =>
-      val ok = okMetaIds.contains(id)
-      if (!ok) failures += 1
-      Ledger.Entry(id, Ledger.EtlTypeMetadata, t0, t1,
-        if (ok) 1L else 0L, if (ok) "success" else "failed",
-        if (ok) None
-        else Some("metadata validation failed or id/filename mismatch"))
+      .filter(col("simulation_id").isNotNull && col("simulation_id") ===
+        regexp_extract(col("_file"), "metadata_([0-9a-fA-F-]{36})\\.json", 1))
+    // generic rows, not a typed record with primitive fields: null
+    // measurements pass through to the dim. One partition, so the
+    // bounded collect is one job
+    val rows = valid.coalesce(1)
+      .limit((Enrich.DimRowCap + 1).toInt)
+      .collect().toSeq
+    Enrich.requireDimRows(rows.size.toLong, Enrich.DimRowCap,
+      "ingestMetadataFiles")
+    val pathOrder = metaFiles.map(fileKey).zipWithIndex.toMap
+    val keyed = rows.map(r =>
+      fileKey(new Path(new java.net.URI(r.getAs[String]("_file")))) -> r)
+    val firsts = keyed.sortBy { case (k, _) => pathOrder(k) }
+      .distinctBy { case (_, r) => r.getAs[String]("simulation_id") }
+    val validFiles = keyed.map(_._1).toSet
+    val numberedFiles = firsts.map(_._1).toSet
+    if (firsts.nonEmpty) {
+      val hw = Enrich.highWaterMark(readDim(spark, layout), "simulation_num")
+      val numbered = spark.createDataFrame(
+        Enrich.numberDim(firsts.map(_._2), hw).asJava, Schemas.dimRxnSchema)
+      numbered.coalesce(1).write.mode("append").parquet(layout.dimTable)
+      // B3 parity: mirror the dim insert into the relational sink
+      layout.jdbc.foreach(t =>
+        graft.sources.JdbcSink.append(numbered, t, "dim_rxn"))
     }
+    val t1 = new Timestamp(System.currentTimeMillis())
+    val ledgerRows = metaFiles.flatMap(p => simId(p).map { id =>
+      val k = fileKey(p)
+      if (numberedFiles(k))
+        Ledger.Entry(id, Ledger.EtlTypeMetadata, t0, t1, 1L, "success", None)
+      else
+        Ledger.Entry(id, Ledger.EtlTypeMetadata, t0, t1, 0L, "failed", Some(
+          if (validFiles(k)) "duplicate simulation_id in batch"
+          else "metadata validation failed or id/filename mismatch"))
+    })
     Ledger.append(spark, layout.ledger, ledgerRows)
-    MetaIngest(okMetaIds.size.toLong,
-      metaFiles.filter(p => simId(p).exists(okMetaIds)), failures)
+    MetaIngest(firsts.size.toLong,
+      metaFiles.filter(p => numberedFiles(fileKey(p))),
+      ledgerRows.count(_.status == "failed"))
   }
 
-  /** Stage 1+2+3 for one batch run. Returns what happened. */
+  /** Both stages, then the archive move, for one batch run. Returns what
+    * happened. */
   def run(spark: SparkSession, root: String): RunReport =
     run(spark, Layout(root))
 
   def run(spark: SparkSession, layout: Layout): RunReport = {
-    // --- metadata stage (K4) --------------------------------------------
-    val metaFiles = newFiles(spark, layout,
-      listIncoming(spark, layout, ".json"), Ledger.EtlTypeMetadata)
+    val listedMeta = listIncoming(spark, layout, ".json")
+    val listedCsv = listIncoming(spark, layout, ".csv")
+    // one ledger read serves both stages: the metadata stage appends only
+    // metadata rows, which the CSV selection never reads. Nothing listed,
+    // nothing read — an idle run launches no job
+    val done =
+      if (listedMeta.isEmpty && listedCsv.isEmpty) Map.empty[String, Set[String]]
+      else Ledger.succeeded(spark, layout.ledger)
+
+    // --- metadata stage (K4); its ledger rows commit before the fact
+    //     stage runs, so a fact-stage failure never leaves dim rows that a
+    //     retry would number again --------------------------------------
+    val metaFiles = newFiles(listedMeta, done, Ledger.EtlTypeMetadata)
     val meta = ingestMetadataFiles(spark, layout, metaFiles)
 
     // --- fact stage (K1+K3: clean + load + write-time enrichment) --------
-    val csvFiles = newFiles(spark, layout,
-      listIncoming(spark, layout, ".csv"), Ledger.EtlTypeCsv)
+    val csvFiles = newFiles(listedCsv, done, Ledger.EtlTypeCsv)
     val ingest = ingestCsvFiles(spark, layout, csvFiles)
 
     // --- archive (B6/B7: move-after-commit last; failed files stay in
@@ -299,7 +353,7 @@ object FilePipeline {
   def backfillEnrichment(spark: SparkSession, root: String): Long = {
     val layout = Layout(root)
     val fact = readFact(spark, layout)
-    // partition-type inference reads `day` back as DATE — compare as string
+    // `day` reads back as DATE — compare as string
     val perDay = fact.filter(col("simulation_num").isNull)
       .groupBy(col("day").cast("string").as("day")).count().collect()
     val nullRows = perDay.map(_.getLong(1)).sum

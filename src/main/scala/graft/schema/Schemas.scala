@@ -117,16 +117,3 @@ object Schemas {
     StructField("duration_seconds", DoubleType, nullable = true)
   ))
 }
-
-/** Typed record for the metadata path — the `Dataset[Metadata]` analogue of
-  * the reference's pydantic model (database_manager.py:13-22). */
-case class Metadata(
-    simulation_id: String,
-    reaction_name: String,
-    activation_energy: Double,
-    ca0: Double,
-    cb0: Double,
-    t0: Double,
-    date_run: java.sql.Date,
-    stop_reason: String,
-    stop_time_s: Double)

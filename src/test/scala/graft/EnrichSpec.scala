@@ -2,9 +2,12 @@ package graft
 
 import java.sql.Date
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.ops.Enrich
-import graft.schema.Metadata
+import graft.schema.Schemas
 
 class EnrichSpec extends SparkSpecBase {
   import spark.implicits._
@@ -37,29 +40,41 @@ class EnrichSpec extends SparkSpecBase {
     assert(Enrich.highWaterMark(empty, "simulation_num") == 0L)
   }
 
+  private val metaSchema = StructType(
+    Schemas.dimRxnSchema.filterNot(_.name == "simulation_num"))
+
+  private def meta(id: String, dateRun: Option[String]): Row =
+    new GenericRowWithSchema(Array(id, "r", 1.0, 1.0, 2.0, 300.0,
+      dateRun.map(Date.valueOf).orNull, "ok", 1.0), metaSchema)
+
+  private def numbers(rows: Seq[Row]): Map[String, Int] =
+    rows.map(r => r.getString(0) -> r.getInt(1)).toMap
+
   test("dim numbering continues from the high-water mark, ordered by (date_run, id)") {
-    val meta = Seq(
-      Metadata("b", "r", 1.0, 1, 2, 300, Date.valueOf("2024-03-02"), "ok", 1),
-      Metadata("a", "r", 1.0, 1, 2, 300, Date.valueOf("2024-03-01"), "ok", 1),
-      Metadata("c", "r", 1.0, 1, 2, 300, Date.valueOf("2024-03-01"), "ok", 1)
-    ).toDS()
-    val numbered = Enrich.numberDim(meta, startFrom = 10)
-      .select("simulation_id", "simulation_num")
-      .collect().map(r => (r.getString(0), r.getInt(1))).toMap
-    assert(numbered == Map("a" -> 11, "c" -> 12, "b" -> 13))
+    val rows = Seq(meta("b", Some("2024-03-02")), meta("a", Some("2024-03-01")),
+      meta("c", Some("2024-03-01")))
+    val numbered = Enrich.numberDim(rows, startFrom = 10)
+    assert(numbers(numbered) == Map("a" -> 11, "c" -> 12, "b" -> 13))
+    // dim column order, every other value carried through
+    assert(numbered.head.toSeq == Seq("a", 11, "r", 1.0, 1.0, 2.0, 300.0,
+      Date.valueOf("2024-03-01"), "ok", 1.0))
   }
 
-  test("numberDim fails fast on fact-sized input instead of feeding a " +
-      "global window") {
-    val meta = (1 to 4).map(i =>
-      Metadata(s"s$i", "r", 1.0, 1, 2, 300, Date.valueOf("2024-03-01"),
-        "ok", 1)).toDS()
+  test("dim numbering puts a null date_run first, as the Spark window did") {
+    val rows = Seq(meta("a", Some("2024-03-01")), meta("z", None),
+      meta("b", None))
+    assert(numbers(Enrich.numberDim(rows, startFrom = 0)) ==
+      Map("b" -> 1, "z" -> 2, "a" -> 3))
+  }
+
+  test("numberDim fails fast on fact-sized input instead of numbering it " +
+      "on the driver") {
+    val rows = (1 to 4).map(i => meta(s"s$i", Some("2024-03-01")))
     val e = intercept[IllegalArgumentException] {
-      Enrich.numberDim(meta, startFrom = 0, maxDimRows = 3)
+      Enrich.numberDim(rows, startFrom = 0, maxDimRows = 3)
     }
     assert(e.getMessage.contains("dim-only"))
     // at the cap is still fine
-    assert(Enrich.numberDim(meta, startFrom = 0, maxDimRows = 4)
-      .count() == 4)
+    assert(Enrich.numberDim(rows, startFrom = 0, maxDimRows = 4).size == 4)
   }
 }

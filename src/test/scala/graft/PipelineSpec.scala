@@ -3,9 +3,25 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import graft.ops.Ledger
 import graft.pipeline.FilePipeline
 
 class PipelineSpec extends SparkSpecBase {
+
+  /** Every `rxn_data` success's `records_inserted` equals the fact rows
+    * written for its simulation. For a root that has seen one ingesting
+    * run, the fact table holds exactly that run's rows. */
+  private def assertLedgerCountsMatchFact(layout: FilePipeline.Layout): Unit = {
+    val ledgered = Ledger.read(spark, layout.ledger)
+      .filter(col("etl_type") === Ledger.EtlTypeCsv &&
+        col("status") === "success")
+      .select("simulation_id", "records_inserted").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val written = spark.read.parquet(layout.factTable)
+      .groupBy("simulation_id").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(ledgered.nonEmpty && ledgered == written)
+  }
 
   test("end-to-end: ingest, enrich at write, ledger, archive; second run is a no-op") {
     val root = TestFixtures.tempRoot("pipe-e2e")
@@ -92,6 +108,7 @@ class PipelineSpec extends SparkSpecBase {
       .map(x => x.getString(0) -> x.getString(1)).toMap
     assert(states(TestFixtures.simUuid(5)) == "success")
     assert(states(TestFixtures.simUuid(6)) == "failed")
+    assertLedgerCountsMatchFact(layout)
   }
 
   test("one batch mixing artifact and artifact-less CSVs binds by header per shape") {
@@ -111,6 +128,7 @@ class PipelineSpec extends SparkSpecBase {
       .map(x => x.getString(0) -> x.getDouble(1)).toMap
     assert(temps(TestFixtures.simUuid(1)) == 310.0)
     assert(temps(TestFixtures.simUuid(2)) == 320.0)
+    assertLedgerCountsMatchFact(layout)
   }
 
   test("CSV whose header lacks a required column is quarantined per-file, not batch-fatal") {
@@ -131,6 +149,7 @@ class PipelineSpec extends SparkSpecBase {
     assert(states(TestFixtures.simUuid(7))._1 == "success")
     assert(states(TestFixtures.simUuid(8))._1 == "failed")
     assert(states(TestFixtures.simUuid(8))._2.contains("required"))
+    assertLedgerCountsMatchFact(layout)
   }
 
   test("invalid metadata (missing simulation_id) gets a failed ledger row, not inserted") {
@@ -239,5 +258,75 @@ class PipelineSpec extends SparkSpecBase {
     // second run: the failed file is retried, still contributes nothing
     val r2 = FilePipeline.run(spark, root.toString)
     assert(spark.read.parquet(layout.dimTable).count() == 1)
+  }
+
+  test("a simulation id repeated in one metadata batch is numbered once") {
+    val root = TestFixtures.tempRoot("pipe-dupmeta")
+    val id = TestFixtures.simUuid(61)
+    TestFixtures.writeMetadata(root, "2024-03-01", 61)
+    TestFixtures.writeCsv(root, "2024-03-01", 61, 7)
+    TestFixtures.writeMetadata(root, "2024-03-02", 61, dateRun = "2024-03-02")
+    val r = FilePipeline.run(spark, root.toString)
+    assert(r.dimRowsInserted == 1 && r.failures == 1)
+    assert(r.factRowsInserted == 7)
+    val layout = FilePipeline.Layout(root.toString)
+    // the first file in path order is the one numbered
+    val dim = spark.read.parquet(layout.dimTable)
+      .select("simulation_id", "simulation_num", "date_run").collect()
+    assert(dim.map(x => (x.getString(0), x.getInt(1), x.getDate(2).toString))
+      .toSeq == Seq((id, 1, "2024-03-01")))
+    // enrichment joins one dim row: each fact row is written once
+    assert(spark.read.parquet(layout.factTable).count() == 7)
+    assertLedgerCountsMatchFact(layout)
+    // the later file is ledgered failed and stays in incoming/
+    val failed = Ledger.read(spark, layout.ledger)
+      .filter(col("status") === "failed")
+      .select("simulation_id", "etl_type", "error_message").collect()
+      .map(x => (x.getString(0), x.getString(1), x.getString(2))).toSeq
+    assert(failed == Seq(
+      (id, Ledger.EtlTypeMetadata, "duplicate simulation_id in batch")))
+    assert(Files.exists(root.resolve(s"incoming/2024-03-02/metadata_$id.json")))
+    assert(Files.exists(root.resolve(s"archive/2024-03-01/metadata_$id.json")))
+    // the id's latest state is the success, so no later run numbers it
+    val r2 = FilePipeline.run(spark, root.toString)
+    assert(r2.metadataFilesIngested == 0 && r2.dimRowsInserted == 0)
+    assert(spark.read.parquet(layout.dimTable).count() == 1)
+  }
+
+  test("a failed fact write leaves no cached frame behind") {
+    val root = TestFixtures.tempRoot("pipe-cacheleak")
+    TestFixtures.writeCsv(root, "2024-03-01", 71, 5)
+    // a regular file where the fact table's directory belongs
+    Files.createDirectories(root.resolve("warehouse"))
+    Files.writeString(root.resolve("warehouse/fact_sim"), "not a table")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    intercept[Exception](FilePipeline.run(spark, root.toString))
+    assert(sc.getPersistentRDDs.size <= before)
+    assert(Files.exists(root.resolve(
+      s"incoming/2024-03-01/rxndata_${TestFixtures.simUuid(71)}.csv")))
+  }
+
+  test("job count: an idle run launches none, a warm daily run a fixed few") {
+    val root = TestFixtures.tempRoot("pipe-jobs")
+    (1 to 2).foreach { i =>
+      TestFixtures.writeCsv(root, "2024-03-01", 80 + i, 10)
+      TestFixtures.writeMetadata(root, "2024-03-01", 80 + i)
+    }
+    FilePipeline.run(spark, root.toString)
+    // incoming/ holds only the drained day directory: no ledger read
+    assert(countJobs(FilePipeline.run(spark, root.toString)) == 0)
+    (3 to 5).foreach { i =>
+      TestFixtures.writeCsv(root, "2024-03-02", 80 + i, 10)
+      TestFixtures.writeMetadata(root, "2024-03-02", 80 + i,
+        dateRun = "2024-03-02")
+    }
+    var r: FilePipeline.RunReport = null
+    val jobs = countJobs { r = FilePipeline.run(spark, root.toString) }
+    assert(r == FilePipeline.RunReport(3, 30L, 3, 3L, 6, 0))
+    // ledger read 2; metadata stage 5: collect, high-water mark 2, dim
+    // write, ledger append; fact stage 6: cache build, per-file groupBy
+    // 2, dim broadcast, fact write, ledger append
+    assert(jobs == 13)
   }
 }

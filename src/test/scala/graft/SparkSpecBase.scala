@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.SpecBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +13,25 @@ trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
+
+  /** Spark jobs started while `body` runs. Events already posted are
+    * delivered before counting starts, and the count is read only after
+    * the body's own events have arrived. */
+  def countJobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    SpecBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      SpecBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
 }
 
 object SparkSpecBase {
