@@ -4,7 +4,7 @@ import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.schema.Schemas
@@ -14,9 +14,11 @@ import graft.schema.Schemas
   *
   * Unlike the reference — which reads each CSV three times (clean,
   * validate, COPY; file_manager.py:47, database_manager.py:46-47, 89) and
-  * round-trips through text between stages — the whole clean stage here is
-  * one distributed scan with the validation done against the DataFrame
-  * schema (a driver-side metadata check, zero data read).
+  * round-trips through text between stages — the clean stage here is one
+  * distributed scan with the validation done against the DataFrame
+  * schema (a driver-side metadata check, zero data read). The pipeline
+  * adds one column-pruned pre-scan of the id column ([[scanFileIds]]) so
+  * that it can decide each file before writing any row.
   */
 object Clean {
 
@@ -96,11 +98,45 @@ object Clean {
     required.forall(renamed.contains)
   }
 
-  /** A1 + C5 — read raw incoming CSVs and recover `simulation_id`/`day`
-    * from the path, replacing the reference's positional filename slicing
-    * (main.py:23) with a regex over input_file_name. One distributed scan
-    * per header shape (usually one or two) — the reference's own "combine
-    * CSVs into one large COPY" wish (README.md:29) is Spark's default.
+  /** The simulation id a fact CSV's file name carries
+    * (`rxndata_<uuid>.csv`, FIXTURES.md §1). */
+  val CsvNameIdPattern = "rxndata_([0-9a-fA-F-]{36})\\.csv"
+  private val CsvNameIdRe = CsvNameIdPattern.r.unanchored
+
+  /** [[CsvNameIdPattern]] applied once to a file name (the pipeline's
+    * per-file check, on the driver). */
+  def csvNameId(name: String): Option[String] = name match {
+    case CsvNameIdRe(id) => Some(id)
+    case _ => None
+  }
+
+  /** The directory a scanned file sits in, from the file's own metadata:
+    * the second-to-last segment of `_metadata.file_path` (the same
+    * URL-encoded URI `input_file_name` gives). One string split per row,
+    * no regex. */
+  private val dayOfFile: Column =
+    substring_index(
+      substring_index(col("_metadata.file_path"), "/", -2), "/", 1)
+
+  /** One schema-bound scan per header shape (header line → paths): each
+    * file's columns bind BY HEADER NAME under an all-strings schema that
+    * matches its own shape. */
+  private def scans(spark: SparkSession,
+      byHeader: Map[String, Seq[String]]): Seq[(String, DataFrame)] = {
+    require(byHeader.nonEmpty, "no readable CSV files to ingest")
+    byHeader.toSeq.sortBy(_._1).map { case (header, ps) =>
+      val schema = StructType(headerColumns(header)
+        .map(c => StructField(c, StringType, nullable = true)))
+      header -> spark.read.option("header", "true").schema(schema).csv(ps: _*)
+    }
+  }
+
+  /** A1 + C5 — read raw incoming CSVs and recover `day` (and
+    * `file_simulation_id`) from each file's metadata, replacing the
+    * reference's positional filename slicing (main.py:23). One
+    * distributed scan per header shape (usually one or two) — the
+    * reference's own "combine CSVs into one large COPY" wish
+    * (README.md:29) is Spark's default.
     *
     * Columns bind BY HEADER NAME: files are grouped by exact header line
     * ([[groupByHeader]]) and each group is read under an all-strings
@@ -110,28 +146,50 @@ object Clean {
     readGroupedCsvs(spark, groupByHeader(spark, paths))
 
   /** Read pre-grouped CSV files (header line → paths), one schema-bound
-    * scan per shape, unioned by name. */
+    * scan per shape, unioned by name. `day` and `file_simulation_id` are
+    * selected from `_metadata` per scan, before the union; the pipeline
+    * checks ids per file ([[scanFileIds]]) and never selects
+    * `file_simulation_id`, so column pruning drops it and its regex from
+    * the plan. */
   def readGroupedCsvs(spark: SparkSession,
       byHeader: Map[String, Seq[String]]): DataFrame = {
-    require(byHeader.nonEmpty, "no readable CSV files to ingest")
-    val parts = byHeader.toSeq.sortBy(_._1).map { case (header, ps) =>
-      val schema = StructType(headerColumns(header)
-        .map(c => StructField(c, StringType, nullable = true)))
-      spark.read.option("header", "true").schema(schema).csv(ps: _*)
-    }
-    val raw = parts.reduce(_.unionByName(_, allowMissingColumns = true))
-    val typed = Schemas.rawCsvSchema.fields.foldLeft(raw) { (df, f) =>
-      if (df.columns.contains(f.name))
-        df.withColumn(f.name, col(f.name).cast(f.dataType))
-      else df
-    }
-    typed
-      .withColumn("_file", input_file_name())
-      .withColumn("file_simulation_id",
-        regexp_extract(col("_file"), "rxndata_([0-9a-fA-F-]{36})\\.csv", 1))
-      .withColumn("day",
-        regexp_extract(col("_file"), "/([^/]+)/[^/]+\\.csv$", 1))
-      .drop("_file")
+    val raw = scans(spark, byHeader).map { case (_, df) =>
+      df.select(col("*"), dayOfFile.as("day"),
+        regexp_extract(col("_metadata.file_name"), CsvNameIdPattern, 1)
+          .as("file_simulation_id"))
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    val types = Schemas.rawCsvSchema.fields.map(f => f.name -> f.dataType).toMap
+    raw.select(raw.columns.toSeq.map(c =>
+      types.get(c).fold(col(c))(t => col(c).cast(t).as(c))): _*)
+  }
+
+  /** What one file's in-file ids are: its row count, how many rows have
+    * no id, and the least and greatest id (null when every id is). */
+  case class FileIds(path: String, rows: Long, nullIds: Long,
+      minId: String, maxId: String) {
+    /** Every row of the file carries `id`. */
+    def allAre(id: String): Boolean =
+      nullIds == 0 && minId == id && maxId == id
+  }
+
+  /** The id pre-scan: each group's scan parses only the column that
+    * renames to `simulation_id` and aggregates it per file
+    * (`_metadata.file_path`, URL-encoded URI). Files without a data row
+    * are absent from the result. */
+  def scanFileIds(spark: SparkSession,
+      byHeader: Map[String, Seq[String]]): Seq[FileIds] = {
+    val ids = scans(spark, byHeader).map { case (header, df) =>
+      val idCol = headerColumns(header)
+        .find(c => Schemas.columnMap.getOrElse(c, c) == "simulation_id")
+        .getOrElse(sys.error(s"no simulation id column in header: $header"))
+      df.select(col(idCol).as("id"), col("_metadata.file_path").as("path"))
+    }.reduce(_.union(_))
+    ids.groupBy(col("path"))
+      .agg(count(lit(1)), count_if(col("id").isNull), min(col("id")),
+        max(col("id")))
+      .collect().toSeq
+      .map(r => FileIds(r.getString(0), r.getLong(1), r.getLong(2),
+        r.getString(3), r.getString(4)))
   }
 
   /** Full clean stage: rename → validate → drop artifact. */

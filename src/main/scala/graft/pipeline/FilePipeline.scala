@@ -19,11 +19,12 @@ import graft.schema.Schemas
   *      surrogate-numbered on the driver (sequence semantics: order by
   *      date_run, simulation_id, offset by the high-water mark), appended
   *      to the dim table;
-  *   2. fact stage: new `rxndata_<uuid>.csv` → one distributed scan,
-  *      rename/validate/drop (clean), enriched against the *current* dim
-  *      via broadcast join at write time (the reference's post-hoc batched
-  *      UPDATE loop disappears), appended to the day-partitioned fact
-  *      table.
+  *   2. fact stage: new `rxndata_<uuid>.csv` → a pre-scan of the id
+  *      column decides each file on the driver, then one streaming scan
+  *      of the files that passed, rename/validate/drop (clean), enriched
+  *      against the *current* dim via broadcast join at write time (the
+  *      reference's post-hoc batched UPDATE loop disappears), appended to
+  *      the day-partitioned fact table. Nothing is cached.
   *
   * Every job a run launches reads or writes data. A warm run (ledger and
   * dim already written) with both kinds of files launches, with adaptive
@@ -32,12 +33,13 @@ import graft.schema.Schemas
   *   - ledger read: 2 (latest state per key, one shuffle), once per run;
   *   - metadata stage: 5 — the validated batch collected (1), the dim
   *     high-water mark (2), the dim append (1), the ledger append (1);
-  *   - fact stage: 6 — the cache of the cleaned CSVs (1), per-file row
-  *     counts and id mismatches in one groupBy over it (2), the dim
-  *     broadcast (1), the fact append (1), the ledger append (1).
+  *   - fact stage: 5 — the id pre-scan, one groupBy per file over the
+  *     parsed id column alone (2), the dim broadcast (1), the fact append
+  *     (1), the ledger append (1).
   *
-  * 13 in all; the JDBC mirror and the processed-CSV tree add their own
-  * writes. A run with nothing listed launches none.
+  * 12 in all; the JDBC mirror and the processed-CSV tree add their own
+  * writes, each re-reading the files it needs. A run with nothing listed
+  * launches none.
   *
   * Incrementality (K2): the reference encodes "not yet ingested" as
   * file-presence in `processed/`. Here the ledger is the source of truth —
@@ -150,96 +152,119 @@ object FilePipeline {
     *     zero rows written — instead of failing the batch;
     *   - the in-file SimulationID must agree with the filename uuid
     *     (FIXTURES.md contract); violating files are quarantined whole;
+    *   - an id carried by two files of the batch is ingested once, from
+    *     the first file in path order; each later file is ledgered failed
+    *     and stays in `incoming/`;
     *   - surviving rows are enriched against the current dim at write
     *     time and appended to the day-partitioned fact table;
     *   - one final-status ledger row per file.
     *
-    * Driver work is O(files) (header peek + per-file ledger rows); all
-    * row-level compute is distributed. */
+    * Two passes over the files, nothing cached: a pre-scan that parses
+    * only the id column and returns, per file, its row count, null ids
+    * and least and greatest id ([[Clean.scanFileIds]]); the driver then
+    * decides each file (the filename regex runs once per file, not per
+    * row), and one streaming write reads only the files that passed.
+    *
+    * Driver work is O(files) (header peek, per-file decisions and ledger
+    * rows); all row-level compute is distributed. */
   def ingestCsvFiles(spark: SparkSession, layout: Layout,
       csvFiles: Seq[Path]): CsvIngest = {
     if (csvFiles.isEmpty) return CsvIngest(0L, Seq.empty, 0)
     val t0 = new Timestamp(System.currentTimeMillis())
     val byHeader = Clean.groupByHeader(spark, csvFiles.map(_.toString))
-    val (goodGroups, badGroups) =
-      byHeader.partition { case (h, _) => Clean.headerIsValid(h) }
-    val readable = byHeader.values.flatten.toSet
-    // headerless/empty files + files whose header misses a required column
-    val invalidFiles: Set[String] = badGroups.values.flatten.toSet ++
-      csvFiles.map(_.toString).filterNot(readable)
-    val invalidIds = csvFiles
-      .filter(p => invalidFiles.contains(p.toString)).flatMap(simId).toSet
+    val goodGroups = byHeader.filter { case (h, _) => Clean.headerIsValid(h) }
+    // files absent here are headerless, empty or miss a required column
+    val validHeader =
+      goodGroups.values.flatten.map(s => fileKey(new Path(s))).toSet
+    val idScan =
+      if (goodGroups.isEmpty) Map.empty[String, Clean.FileIds]
+      else Clean.scanFileIds(spark, goodGroups)
+        .map(f => fileKey(new Path(new java.net.URI(f.path))) -> f).toMap
 
-    var perFileCounts = Map.empty[String, Long]
-    var mismatchIds = Set.empty[String]
-    if (goodGroups.nonEmpty) {
-      val raw = Clean.readGroupedCsvs(spark, goodGroups)
-      val cleaned = Clean.clean(raw)
-        .withColumn("row_id", monotonically_increasing_id())
-        .withColumn("simulation_num", lit(null).cast("int"))
-        .cache()
-      try {
-        // one pass over the cache: each file's row count, day, and whether
-        // any row's id disagrees with the file name. Dim ids are unique,
-        // so the left join below writes exactly these counts
-        val perFile = cleaned.groupBy(col("file_simulation_id"))
-          .agg(count(lit(1)), max(col("day")),
-            bool_or(col("simulation_id").isNull ||
-              col("simulation_id") =!= col("file_simulation_id")))
-          .collect()
-        val (bad, kept) = perFile.partition(_.getBoolean(3))
-        mismatchIds = bad.map(_.getString(0)).toSet
-        perFileCounts = kept.map(r => r.getString(0) -> r.getLong(1)).toMap
-        val good = cleaned.filter(
-          !col("file_simulation_id").isInCollection(
-            if (mismatchIds.isEmpty) Seq("") else mismatchIds.toSeq))
-        val enriched = Enrich.enrichFact(good, readDim(spark, layout))
-        val out = enriched.select(
-          (Schemas.factSimSchema.fieldNames.map(col) :+ col("day")): _*)
-        out.write.mode("append").partitionBy("day").parquet(layout.factTable)
-        // B2 parity: mirror the bulk load into the relational sink (the
-        // reference's fact_sim has no day column — it's our partition key)
-        layout.jdbc.foreach(t =>
-          graft.sources.JdbcSink.append(out.drop("day"), t, "fact_sim"))
-        // B1 parity: the reference's cleaned-CSV processed/<day>/ tree.
-        // Per-day loop is bounded by the batch's day count (listing-scale)
-        if (layout.processedParity)
-          kept.map(_.getString(2)).distinct.foreach { d =>
+    // each file's fate, in path order: the first passing file of an id
+    // claims it; a file with no data row has no id to disagree with
+    val claimed = scala.collection.mutable.Set.empty[String]
+    val decided = csvFiles.sortBy(_.toString).map { p =>
+      val k = fileKey(p)
+      p -> (
+        if (!validHeader(k))
+          Some("header missing required columns or file unreadable")
+        else if (!idScan.get(k).forall(f =>
+            Clean.csvNameId(p.getName).exists(f.allAre)))
+          Some("in-file SimulationID disagrees with filename")
+        else if (simId(p).exists(id => !claimed.add(id)))
+          Some("duplicate simulation_id in batch")
+        else None)
+    }
+    val passed = decided.collect { case (p, None) => fileKey(p) }.toSet
+    // dim ids are unique, so the enrichment's left join writes exactly
+    // the pre-scan's counts
+    def rowsOf(p: Path): Long = idScan.get(fileKey(p)).fold(0L)(_.rows)
+    // the passing files with a data row, by header shape
+    val toWrite = goodGroups.map { case (h, ps) =>
+      h -> ps.filter { s =>
+        val k = fileKey(new Path(s))
+        passed(k) && idScan.contains(k)
+      }
+    }.filter(_._2.nonEmpty)
+
+    if (toWrite.nonEmpty) {
+      def cleaned(groups: Map[String, Seq[String]]) =
+        Clean.clean(Clean.readGroupedCsvs(spark, groups))
+      val enriched = Enrich.enrichFact(
+        cleaned(toWrite).withColumns(Map(
+          "row_id" -> monotonically_increasing_id(),
+          "simulation_num" -> lit(null).cast("int"))),
+        readDim(spark, layout))
+      val out = enriched.select(
+        (Schemas.factSimSchema.fieldNames.map(col) :+ col("day")): _*)
+      out.write.mode("append").partitionBy("day").parquet(layout.factTable)
+      // B2 parity: mirror the bulk load into the relational sink (the
+      // reference's fact_sim has no day column — it's our partition key).
+      // Opt-in, and it re-reads the files: nothing is cached between the
+      // two writes
+      layout.jdbc.foreach(t =>
+        graft.sources.JdbcSink.append(out.drop("day"), t, "fact_sim"))
+      // B1 parity: the reference's cleaned-CSV processed/<day>/ tree. The
+      // driver knows each file's day, so each day's write reads only that
+      // day's files; the loop is bounded by the batch's day count
+      if (layout.processedParity)
+        toWrite.toSeq.flatMap { case (h, ps) => ps.map(s => (h, s)) }
+          .groupBy { case (_, s) => new Path(s).getParent.getName }
+          .toSeq.sortBy(_._1).foreach { case (day, hs) =>
             Clean.writeProcessedCsv(
-              good.filter(col("day") === d)
+              cleaned(hs.groupMap(_._1)(_._2))
                 .select(Schemas.requiredCols.map(col): _*),
-              s"${layout.processed}/$d")
+              s"${layout.processed}/$day")
           }
-      } finally cleaned.unpersist()
     }
     val t1 = new Timestamp(System.currentTimeMillis())
-    var failures = 0
-    val ledgerRows = csvFiles.flatMap(simId).map { id =>
-      if (invalidIds.contains(id)) {
-        failures += 1
-        Ledger.Entry(id, Ledger.EtlTypeCsv, t0, t1, 0L, "failed",
-          Some("header missing required columns or file unreadable"))
-      } else if (mismatchIds.contains(id)) {
-        failures += 1
-        Ledger.Entry(id, Ledger.EtlTypeCsv, t0, t1, 0L, "failed",
-          Some("in-file SimulationID disagrees with filename"))
-      } else {
-        Ledger.Entry(id, Ledger.EtlTypeCsv, t0, t1,
-          perFileCounts.getOrElse(id, 0L), "success", None)
-      }
+    val ledgerRows = decided.flatMap { case (p, failure) =>
+      simId(p).map(id => Ledger.Entry(id, Ledger.EtlTypeCsv, t0, t1,
+        if (failure.isEmpty) rowsOf(p) else 0L,
+        if (failure.isEmpty) "success" else "failed", failure))
     }
     Ledger.append(spark, layout.ledger, ledgerRows)
-    val okFiles = csvFiles.filter(p => simId(p).exists(id =>
-      !mismatchIds.contains(id) && !invalidIds.contains(id)))
-    CsvIngest(perFileCounts.values.sum, okFiles, failures)
+    val okFiles = decided.collect { case (p, None) => p }
+    CsvIngest(okFiles.map(rowsOf).sum, okFiles,
+      ledgerRows.count(_.status == "failed"))
   }
 
   /** What one metadata-stage ingest did. */
   case class MetaIngest(dimRowsInserted: Long, okFiles: Seq[Path], failures: Int)
 
   /** A listed file's identity as `<day>/<name>`, comparable between the
-    * listing and a row's `input_file_name` URI. */
+    * listing and a scanned file's `_metadata.file_path` URI. */
   private def fileKey(p: Path): String = s"${p.getParent.getName}/${p.getName}"
+
+  private val MetaNameIdRe =
+    "metadata_([0-9a-fA-F-]{36})\\.json".r.unanchored
+
+  /** The simulation id a metadata file's name carries. */
+  private def metaNameId(name: String): Option[String] = name match {
+    case MetaNameIdRe(id) => Some(id)
+    case _ => None
+  }
 
   /** Metadata-stage ingest of a concrete file list (K4, fixed:
     * validate-then-skip, real row count; per-file reconciliation BEFORE
@@ -249,8 +274,8 @@ object FilePipeline {
     * body so both modes produce dim rows from `metadata_<uuid>.json`.
     *
     * The batch is one row per file, as large as the file list the driver
-    * already holds, so the validated rows come to the driver in one job
-    * (bounded by [[Enrich.DimRowCap]]) and are numbered there
+    * already holds, so its rows come to the driver in one job (bounded by
+    * [[Enrich.DimRowCap]]) and are validated and numbered there
     * ([[Enrich.numberDim]]). An id carried by two files of the batch is
     * numbered once, from the first file in path order; each later file is
     * ledgered failed and stays in `incoming/`. */
@@ -259,25 +284,29 @@ object FilePipeline {
     if (metaFiles.isEmpty) return MetaIngest(0L, Seq.empty, 0)
     val t0 = new Timestamp(System.currentTimeMillis())
     // one JSON object per file (not JSONL) — multiLine, like json.load
-    val valid = spark.read.schema(Schemas.metadataJsonSchema)
+    val batch = spark.read.schema(Schemas.metadataJsonSchema)
       .option("multiLine", "true")
       .json(metaFiles.map(_.toString): _*)
-      .withColumn("_file", input_file_name())
+      .withColumn("_file", col("_metadata.file_path"))
       .withColumnsRenamed(Schemas.metadataRenameMap)
       .withColumn("date_run", to_date(col("date_run")))
-      .filter(col("simulation_id").isNotNull && col("simulation_id") ===
-        regexp_extract(col("_file"), "metadata_([0-9a-fA-F-]{36})\\.json", 1))
     // generic rows, not a typed record with primitive fields: null
     // measurements pass through to the dim. One partition, so the
     // bounded collect is one job
-    val rows = valid.coalesce(1)
+    val rows = batch.coalesce(1)
       .limit((Enrich.DimRowCap + 1).toInt)
       .collect().toSeq
     Enrich.requireDimRows(rows.size.toLong, Enrich.DimRowCap,
       "ingestMetadataFiles")
+    // a row is valid when its id is the one its file name carries; the
+    // name is matched once per file, here on the driver
     val pathOrder = metaFiles.map(fileKey).zipWithIndex.toMap
     val keyed = rows.map(r =>
       fileKey(new Path(new java.net.URI(r.getAs[String]("_file")))) -> r)
+      .filter { case (k, r) =>
+        val id = r.getAs[String]("simulation_id")
+        id != null && metaNameId(k).contains(id)
+      }
     val firsts = keyed.sortBy { case (k, _) => pathOrder(k) }
       .distinctBy { case (_, r) => r.getAs[String]("simulation_id") }
     val validFiles = keyed.map(_._1).toSet

@@ -38,8 +38,8 @@ object StreamingIngest {
     * high-water dim numbering, ledger rows) so CSVs arriving in the SAME
     * micro-batch enrich against the fresh dim rows, then fact CSVs
     * ([[FilePipeline.ingestCsvFiles]] — per-header-shape schema binding,
-    * invalid-header quarantine, id-mismatch quarantine, write-time
-    * enrichment, ledger rows). The file data is read twice (once by the
+    * invalid-header quarantine, id-mismatch and duplicate-id
+    * quarantine, write-time enrichment, ledger rows). The file data is read twice (once by the
     * source, once parsed); micro-batches are bounded by
     * maxFilesPerTrigger, and correctness beats the extra bounded scan.
     * Note one streaming-specific deviation: quarantined files are still

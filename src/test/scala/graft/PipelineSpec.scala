@@ -23,6 +23,24 @@ class PipelineSpec extends SparkSpecBase {
     assert(ledgered.nonEmpty && ledgered == written)
   }
 
+  /** Each failed `rxn_data` ledger row's message, by simulation id. */
+  private def failedMessages(layout: FilePipeline.Layout): Map[String, String] =
+    Ledger.read(spark, layout.ledger)
+      .filter(col("etl_type") === Ledger.EtlTypeCsv &&
+        col("status") === "failed")
+      .select("simulation_id", "error_message").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+
+  /** Each `rxn_data` ledger row as (id, status, records, message). */
+  private def csvLedger(layout: FilePipeline.Layout)
+      : Seq[(String, String, Long, String)] =
+    Ledger.read(spark, layout.ledger)
+      .filter(col("etl_type") === Ledger.EtlTypeCsv)
+      .select("simulation_id", "status", "records_inserted", "error_message")
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getString(3)))
+      .toSeq.sorted
+
   test("end-to-end: ingest, enrich at write, ledger, archive; second run is a no-op") {
     val root = TestFixtures.tempRoot("pipe-e2e")
     // day 1: two complete sims (csv + metadata)
@@ -108,6 +126,8 @@ class PipelineSpec extends SparkSpecBase {
       .map(x => x.getString(0) -> x.getString(1)).toMap
     assert(states(TestFixtures.simUuid(5)) == "success")
     assert(states(TestFixtures.simUuid(6)) == "failed")
+    assert(failedMessages(layout) == Map(TestFixtures.simUuid(6) ->
+      "in-file SimulationID disagrees with filename"))
     assertLedgerCountsMatchFact(layout)
   }
 
@@ -149,6 +169,8 @@ class PipelineSpec extends SparkSpecBase {
     assert(states(TestFixtures.simUuid(7))._1 == "success")
     assert(states(TestFixtures.simUuid(8))._1 == "failed")
     assert(states(TestFixtures.simUuid(8))._2.contains("required"))
+    assert(failedMessages(layout) == Map(TestFixtures.simUuid(8) ->
+      "header missing required columns or file unreadable"))
     assertLedgerCountsMatchFact(layout)
   }
 
@@ -325,8 +347,146 @@ class PipelineSpec extends SparkSpecBase {
     val jobs = countJobs { r = FilePipeline.run(spark, root.toString) }
     assert(r == FilePipeline.RunReport(3, 30L, 3, 3L, 6, 0))
     // ledger read 2; metadata stage 5: collect, high-water mark 2, dim
-    // write, ledger append; fact stage 6: cache build, per-file groupBy
-    // 2, dim broadcast, fact write, ledger append
-    assert(jobs == 13)
+    // write, ledger append; fact stage 5: the id pre-scan's per-file
+    // groupBy 2, dim broadcast, fact write, ledger append
+    assert(jobs == 12)
   }
+
+  test("a simulation id repeated in one CSV batch is written once") {
+    val root = TestFixtures.tempRoot("pipe-dupcsv")
+    val id = TestFixtures.simUuid(91)
+    TestFixtures.writeMetadata(root, "2024-03-01", 91)
+    TestFixtures.writeCsv(root, "2024-03-01", 91, 110)
+    TestFixtures.writeCsv(root, "2024-03-02", 91, 110)
+    val r = FilePipeline.run(spark, root.toString)
+    assert(r.csvFilesIngested == 2 && r.factRowsInserted == 110)
+    assert(r.failures == 1 && r.filesArchived == 2)
+    val layout = FilePipeline.Layout(root.toString)
+    // the first file in path order is the one written, under its own day
+    val perDay = spark.read.parquet(layout.factTable)
+      .groupBy(col("day").cast("string")).count().collect()
+      .map(x => x.getString(0) -> x.getLong(1)).toMap
+    assert(perDay == Map("2024-03-01" -> 110L))
+    assertLedgerCountsMatchFact(layout)
+    assert(csvLedger(layout) == Seq(
+      (id, "failed", 0L, "duplicate simulation_id in batch"),
+      (id, "success", 110L, null)))
+    // the later file stays in incoming/; the id is not selected again
+    assert(Files.exists(root.resolve(s"incoming/2024-03-02/rxndata_$id.csv")))
+    assert(Files.exists(root.resolve(s"archive/2024-03-01/rxndata_$id.csv")))
+    val r2 = FilePipeline.run(spark, root.toString)
+    assert(r2.csvFilesIngested == 0)
+    assert(spark.read.parquet(layout.factTable).count() == 110)
+  }
+
+  test("a header-only CSV is ledgered success with zero rows") {
+    val root = TestFixtures.tempRoot("pipe-headeronly")
+    TestFixtures.writeCsv(root, "2024-03-01", 92, 0)
+    TestFixtures.writeCsv(root, "2024-03-01", 93, 4)
+    val r = FilePipeline.run(spark, root.toString)
+    assert(r == FilePipeline.RunReport(2, 4L, 0, 0L, 2, 0))
+    val layout = FilePipeline.Layout(root.toString)
+    assert(csvLedger(layout) == Seq(
+      (TestFixtures.simUuid(92), "success", 0L, null),
+      (TestFixtures.simUuid(93), "success", 4L, null)))
+    assert(spark.read.parquet(layout.factTable).count() == 4)
+  }
+
+  test("a listed CSV not named rxndata_<uuid>.csv is quarantined") {
+    val root = TestFixtures.tempRoot("pipe-foo")
+    val id = TestFixtures.simUuid(94)
+    val f = TestFixtures.writeCsv(root, "2024-03-01", 94, 3)
+    Files.move(f, f.resolveSibling(s"foo_$id.csv"))
+    TestFixtures.writeCsv(root, "2024-03-01", 95, 3)
+    val r = FilePipeline.run(spark, root.toString)
+    assert(r.csvFilesIngested == 2 && r.factRowsInserted == 3)
+    assert(r.failures == 1 && r.filesArchived == 1)
+    val layout = FilePipeline.Layout(root.toString)
+    assert(failedMessages(layout) ==
+      Map(id -> "in-file SimulationID disagrees with filename"))
+    assert(Files.exists(root.resolve(s"incoming/2024-03-01/foo_$id.csv")))
+    assertLedgerCountsMatchFact(layout)
+  }
+
+  test("a non-numeric measurement fails the run before anything commits") {
+    val root = TestFixtures.tempRoot("pipe-nonnumeric")
+    TestFixtures.writeMetadata(root, "2024-03-01", 96)
+    val good = TestFixtures.writeCsv(root, "2024-03-01", 96, 3)
+    val bad = TestFixtures.writeCsv(root, "2024-03-01", 97, 3)
+    val lines = Files.readAllLines(bad)
+    // the first data row's CA (the third column) is not a number
+    val cells = lines.get(1).split(",")
+    cells(2) = "not-a-number"
+    lines.set(1, cells.mkString(","))
+    Files.write(bad, lines)
+    intercept[Exception](FilePipeline.run(spark, root.toString))
+    val layout = FilePipeline.Layout(root.toString)
+    val committed = {
+      val dir = root.resolve("warehouse/fact_sim")
+      if (!Files.exists(dir)) 0L
+      else Files.walk(dir).filter(_.toString.endsWith(".parquet")).count()
+    }
+    assert(committed == 0)
+    assert(csvLedger(layout).isEmpty)
+    assert(Files.exists(good) && Files.exists(bad))
+  }
+
+  test("the fact stage caches nothing and evaluates no per-row regex") {
+    import scala.collection.mutable
+    import org.apache.spark.SpecBus
+    import org.apache.spark.sql.catalyst.expressions.RegExpExtract
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = TestFixtures.tempRoot("pipe-planshape")
+    // two header shapes: the pre-scan reads the id column in each
+    TestFixtures.writeCsv(root, "2024-03-01", 98, 5)
+    TestFixtures.writeCsv(root, "2024-03-02", 99, 5, withArtifact = false)
+    TestFixtures.writeMetadata(root, "2024-03-01", 98)
+    val plans = mutable.Buffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan)
+      // a read of a table not yet written fails analysis: no plan
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit =
+        scala.util.Try(qe.executedPlan).foreach(p =>
+          plans.synchronized(plans += p))
+    }
+    val sc = spark.sparkContext
+    val cachedBefore = sc.getPersistentRDDs.size
+    SpecBus.drain(sc)
+    spark.listenerManager.register(listener)
+    val r = try {
+      val r = FilePipeline.run(spark, root.toString)
+      SpecBus.drain(sc)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    assert(r.factRowsInserted == 10 && r.failures == 0)
+    assert(sc.getPersistentRDDs.size <= cachedBefore)
+    val nodes = plans.toSeq.map(PlanNodes.all)
+    // in order: the pre-scan's scans read only the id, the write's the rest
+    val csvScans = nodes.map(_.collect {
+      case s: FileSourceScanExec
+          if s.relation.fileFormat.isInstanceOf[CSVFileFormat] =>
+        s.requiredSchema.fieldNames.toSeq
+    }).filter(_.nonEmpty)
+    assert(csvScans.size == 2)
+    assert(csvScans.head == Seq(Seq("SimulationID"), Seq("SimulationID")))
+    assert(csvScans(1).forall(_.size == 8))
+    val all = nodes.flatten
+    assert(!all.exists(_.isInstanceOf[InMemoryTableScanExec]))
+    assert(!all.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[RegExpExtract]))))
+  }
+}
+
+/** Every node of an executed plan, through adaptive query stages and
+  * subqueries. */
+private object PlanNodes
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  def all(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    collectWithSubqueries(p) { case n => n }
 }
