@@ -170,26 +170,45 @@ object Clean {
     /** Every row of the file carries `id`. */
     def allAre(id: String): Boolean =
       nullIds == 0 && minId == id && maxId == id
+
+    /** The same file's ids over both parts' rows. */
+    def merge(o: FileIds): FileIds = {
+      // a null id is absent, not least
+      def pick(a: String, b: String)(keepA: (String, String) => Boolean) =
+        if (a == null) b else if (b == null || keepA(a, b)) a else b
+      FileIds(path, rows + o.rows, nullIds + o.nullIds,
+        pick(minId, o.minId)(_ <= _), pick(maxId, o.maxId)(_ >= _))
+    }
+  }
+
+  /** One partition's rows of (id, path), folded into one partial
+    * [[FileIds]] per file. */
+  private def filePartials(rows: Iterator[(String, String)]): Iterator[FileIds] = {
+    val acc = scala.collection.mutable.LinkedHashMap.empty[String, FileIds]
+    rows.foreach { case (id, path) =>
+      val one = FileIds(path, 1L, if (id == null) 1L else 0L, id, id)
+      acc.updateWith(path)(prior => Some(prior.fold(one)(_.merge(one))))
+    }
+    acc.valuesIterator
   }
 
   /** The id pre-scan: each group's scan parses only the column that
-    * renames to `simulation_id` and aggregates it per file
-    * (`_metadata.file_path`, URL-encoded URI). Files without a data row
-    * are absent from the result. */
+    * renames to `simulation_id`, keyed by `_metadata.file_path`
+    * (URL-encoded URI). Each partition folds its rows into one partial
+    * per file and the driver merges the partials (a file split across
+    * partitions has several): one job, no exchange. Files without a data
+    * row are absent from the result. */
   def scanFileIds(spark: SparkSession,
       byHeader: Map[String, Seq[String]]): Seq[FileIds] = {
+    import spark.implicits._
     val ids = scans(spark, byHeader).map { case (header, df) =>
       val idCol = headerColumns(header)
         .find(c => Schemas.columnMap.getOrElse(c, c) == "simulation_id")
         .getOrElse(sys.error(s"no simulation id column in header: $header"))
       df.select(col(idCol).as("id"), col("_metadata.file_path").as("path"))
     }.reduce(_.union(_))
-    ids.groupBy(col("path"))
-      .agg(count(lit(1)), count_if(col("id").isNull), min(col("id")),
-        max(col("id")))
-      .collect().toSeq
-      .map(r => FileIds(r.getString(0), r.getLong(1), r.getLong(2),
-        r.getString(3), r.getString(4)))
+    ids.as[(String, String)].mapPartitions(filePartials).collect().toSeq
+      .groupMapReduce(_.path)(identity)(_.merge(_)).values.toSeq
   }
 
   /** Full clean stage: rename → validate → drop artifact. */

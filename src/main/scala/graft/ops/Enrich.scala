@@ -16,12 +16,6 @@ import graft.schema.Schemas
   */
 object Enrich {
 
-  /** G1/G2 — high-water mark with first-run NULL → 0 (the reference
-    * crashes on an empty fact table, SURVEY.md §3.3). */
-  def highWaterMark(df: DataFrame, keyCol: String): Long =
-    df.agg(coalesce(max(col(keyCol)).cast("long"), lit(0L)))
-      .head().getLong(0)
-
   /** Hard cap for the dim-only numbering paths: a dimension table (one
     * row per simulation) is orders of magnitude below this; a fact table
     * is orders of magnitude above. */
@@ -53,8 +47,9 @@ object Enrich {
 
   /** H4/J3 — dim surrogate numbering: PG-sequence semantics over
     * (date_run, simulation_id), offset by the existing high-water mark so
-    * re-runs continue the sequence. `rows` carry the dim columns by name
-    * (`simulation_num` excluded); the result is in
+    * re-runs continue the sequence (the pipeline takes the mark from its
+    * state read, [[Ledger.RunState.highWaterMark]]). `rows` carry the dim
+    * columns by name (`simulation_num` excluded); the result is in
     * [[Schemas.dimRxnSchema]] column order, sorted by its number.
     *
     * Driver-side contract: the input is one batch of dim rows, already

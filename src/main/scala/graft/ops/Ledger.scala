@@ -1,7 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.sql.Timestamp
+import java.util.UUID
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.schema.Schemas
 
 /** Run-ledger operators (SURVEY.md §2 B4/B5, H1-H3, K6/K7).
@@ -13,7 +19,8 @@ import graft.schema.Schemas
   * collapses because the whole batch either commits or doesn't
   * (foreachBatch/batch-job atomicity replaces PG transactions). The
   * current state of a (simulation_id, etl_type) is the latest row, read
-  * via [[latestState]].
+  * via [[latestState]]; a pipeline run reads it, with the dim's keys, in
+  * one job ([[readState]]).
   *
   * The reference's dead `errored` flag, never-written error_message slot,
   * and wrong metadata row count (SURVEY.md §2 K4/K6) are all fixed here,
@@ -30,20 +37,22 @@ object Ledger {
   case class Entry(
       simulation_id: String,
       etl_type: String,
-      started_at: java.sql.Timestamp,
-      finished_at: java.sql.Timestamp,
+      started_at: Timestamp,
+      finished_at: Timestamp,
       records_inserted: Long,
       status: String,
       error_message: Option[String])
 
+  /** The ledger rows of `rows` in [[Schemas.etlRunLogSchema]], built on
+    * the driver: a local relation, no per-row expression to plan. The
+    * duration is whole epoch seconds apart, as `unix_timestamp` counts. */
   def entries(spark: SparkSession, rows: Seq[Entry]): DataFrame = {
-    import spark.implicits._
-    rows.toDF()
-      .withColumn("etl_id", uuid())
-      .withColumn("duration_seconds",
-        (unix_timestamp(col("finished_at")) -
-          unix_timestamp(col("started_at"))).cast("double"))
-      .select(Schemas.etlRunLogSchema.fieldNames.map(col): _*)
+    def epochS(t: Timestamp) = Math.floorDiv(t.getTime, 1000L)
+    spark.createDataFrame(rows.map(e => Row(UUID.randomUUID().toString,
+      e.simulation_id, e.etl_type, e.started_at, e.finished_at,
+      e.records_inserted, e.status, e.error_message.orNull,
+      (epochS(e.finished_at) - epochS(e.started_at)).toDouble)).asJava,
+      Schemas.etlRunLogSchema)
   }
 
   /** Append rows to the ledger sink. */
@@ -52,21 +61,24 @@ object Ledger {
       entries(spark, rows).coalesce(1)
         .write.mode("append").parquet(ledgerPath)
 
+  /** A table read with its declared schema, or None when it is absent. */
+  private def present(spark: SparkSession, path: String,
+      schema: StructType): Option[DataFrame] =
+    try Some(spark.read.schema(schema).parquet(path))
+    catch { case _: org.apache.spark.sql.AnalysisException => None }
+
   /** Read the ledger; empty-but-typed DataFrame when absent (first run). */
   def read(spark: SparkSession, ledgerPath: String): DataFrame =
-    try spark.read.schema(Schemas.etlRunLogSchema).parquet(ledgerPath)
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          Schemas.etlRunLogSchema)
-    }
+    present(spark, ledgerPath, Schemas.etlRunLogSchema).getOrElse(
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        Schemas.etlRunLogSchema))
 
   /** Latest status per (simulation_id, etl_type) — the UPDATE-free read of
     * the reference's mutable row. Two rows of one key share a
     * `finished_at` only when one batch carried the key twice (a
     * duplicate file); the success wins that tie, so the key is not
-    * selected again. */
+    * selected again. [[latestOf]] is its driver twin. */
   def latestState(ledger: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("simulation_id"), col("etl_type"))
@@ -75,14 +87,71 @@ object Ledger {
       .filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** The keys already successfully ingested, per etl_type — drives K2
-    * incremental selection as a set filter instead of directory state.
-    * One read and one collect serve every stage of a run. */
-  def succeeded(spark: SparkSession,
-      ledgerPath: String): Map[String, Set[String]] =
-    latestState(read(spark, ledgerPath))
-      .filter(col("status") === "success")
-      .select(col("etl_type"), col("simulation_id"))
-      .collect().toSeq
-      .groupMapReduce(_.getString(0))(r => Set(r.getString(1)))(_ ++ _)
+  /** One ledger row as the run-state fold reads it. */
+  case class Outcome(simulation_id: String, etl_type: String,
+      finished_at: Timestamp, status: String)
+
+  /** [[latestState]]'s order as a rank: a later `finished_at` (to the
+    * microsecond), then a success; a null sorts below every value, as
+    * Spark's descending order puts it last. */
+  private val latestRank: Ordering[Outcome] = {
+    implicit val ts: Ordering[Timestamp] =
+      Ordering.fromLessThan[Timestamp](_ before _)
+    Ordering.by((o: Outcome) => (Option(o.finished_at),
+      Option(o.status).fold(0)(s => if (s == "success") 2 else 1)))
+  }
+
+  /** The latest outcome per (simulation_id, etl_type) of rows already on
+    * the driver, under [[latestState]]'s order. */
+  def latestOf(rows: Seq[Outcome]): Map[(String, String), Outcome] =
+    rows.groupMapReduce(o => (o.simulation_id, o.etl_type))(identity)(
+      (a, b) => latestRank.max(a, b))
+
+  /** What a run knows before it reads a data file: the latest ledger
+    * outcome per (simulation_id, etl_type), and the number the dim holds
+    * for each simulation id. */
+  case class RunState(latest: Map[(String, String), Outcome],
+      dimNums: Map[String, Int]) {
+
+    /** The ids whose latest `etlType` outcome is a success — drives K2
+      * incremental selection as a set filter instead of directory state. */
+    def succeeded(etlType: String): Set[String] =
+      latest.collect { case ((id, t), o) if t == etlType &&
+        o.status == "success" => id }.toSet
+
+    /** G1/G2 — the dim's high-water mark, 0 on an empty dim (the
+      * reference crashes on an empty table, SURVEY.md §3.3). */
+    def highWaterMark: Long = dimNums.values.maxOption.fold(0L)(_.toLong)
+  }
+
+  object RunState {
+    val Empty: RunState = RunState(Map.empty, Map.empty)
+  }
+
+  /** The run's bookkeeping in one job: the ledger's key columns and the
+    * dim's (simulation_id, simulation_num), unioned and collected with no
+    * shuffle; the latest state per key is folded on the driver
+    * ([[latestOf]]). Both tables are dimension-scale. An absent table
+    * reads as empty; with both absent no job runs. `ledgerPath` None
+    * reads the dim alone (the streaming body, whose checkpoint selects
+    * the files). */
+  def readState(spark: SparkSession, ledgerPath: Option[String],
+      dimPath: String): RunState = {
+    // one positional shape: (is a ledger row, simulation_id, etl_type,
+    // finished_at, status, simulation_num)
+    val ledger = ledgerPath.flatMap(present(spark, _, Schemas.etlRunLogSchema))
+      .map(_.select(lit(true), col("simulation_id"), col("etl_type"),
+        col("finished_at"), col("status"), lit(null).cast("int")))
+    val dim = present(spark, dimPath, Schemas.dimRxnSchema)
+      .map(_.select(lit(false), col("simulation_id"), lit(null).cast("string"),
+        lit(null).cast("timestamp"), lit(null).cast("string"),
+        col("simulation_num")))
+    val rows = (ledger ++ dim).reduceOption(_.union(_))
+      .fold(Seq.empty[Row])(_.collect().toSeq)
+    val (outcomes, dimKeys) = rows.partition(_.getBoolean(0))
+    RunState(
+      latestOf(outcomes.map(r => Outcome(r.getString(1), r.getString(2),
+        r.getTimestamp(3), r.getString(4)))),
+      dimKeys.map(r => r.getString(1) -> r.getInt(5)).toMap)
+  }
 }

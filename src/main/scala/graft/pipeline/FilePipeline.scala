@@ -12,34 +12,38 @@ import graft.ops.{Clean, Enrich, Ledger}
 import graft.schema.Schemas
 
 /** Batch-mode incremental file pipeline — the reference's whole `main()`
-  * (SURVEY.md §3.1, K1-K6) re-expressed as two stages per run, each ending
-  * in its own ledger append:
+  * (SURVEY.md §3.1, K1-K6) re-expressed as one bookkeeping read, two
+  * stages and one ledger append per run:
   *
+  *   0. state read: the ledger's latest outcome per key and the dim's
+  *      (simulation_id, simulation_num), in one job ([[Ledger.readState]]);
   *   1. metadata stage: new `metadata_<uuid>.json` → renamed, validated,
   *      surrogate-numbered on the driver (sequence semantics: order by
-  *      date_run, simulation_id, offset by the high-water mark), appended
-  *      to the dim table;
+  *      date_run, simulation_id, offset by the dim's high-water mark),
+  *      appended to the dim table; an id the dim already holds is not
+  *      numbered again;
   *   2. fact stage: new `rxndata_<uuid>.csv` → a pre-scan of the id
   *      column decides each file on the driver, then one streaming scan
   *      of the files that passed, rename/validate/drop (clean), enriched
   *      against the *current* dim via broadcast join at write time (the
   *      reference's post-hoc batched UPDATE loop disappears), appended to
-  *      the day-partitioned fact table. Nothing is cached.
+  *      the day-partitioned fact table. Nothing is cached;
+  *   3. one ledger append holding both stages' rows, after the fact write.
   *
   * Every job a run launches reads or writes data. A warm run (ledger and
-  * dim already written) with both kinds of files launches, with adaptive
-  * execution on:
+  * dim already written) with both kinds of files launches:
   *
-  *   - ledger read: 2 (latest state per key, one shuffle), once per run;
-  *   - metadata stage: 5 — the validated batch collected (1), the dim
-  *     high-water mark (2), the dim append (1), the ledger append (1);
-  *   - fact stage: 5 — the id pre-scan, one groupBy per file over the
-  *     parsed id column alone (2), the dim broadcast (1), the fact append
-  *     (1), the ledger append (1).
+  *   - state read: 1 (a union of two scans, collected; no shuffle);
+  *   - metadata stage: 2 — the validated batch collected (1), the dim
+  *     append (1);
+  *   - fact stage: 3 — the id pre-scan, one partial per file and
+  *     partition merged on the driver (1), the dim broadcast (1), the
+  *     fact append (1);
+  *   - ledger append: 1.
   *
-  * 12 in all; the JDBC mirror and the processed-CSV tree add their own
-  * writes, each re-reading the files it needs. A run with nothing listed
-  * launches none.
+  * 7 in all, 3 of them writes; the JDBC mirror and the processed-CSV tree
+  * add their own writes, each re-reading the files it needs. A run with
+  * nothing listed launches none.
   *
   * Incrementality (K2): the reference encodes "not yet ingested" as
   * file-presence in `processed/`. Here the ledger is the source of truth —
@@ -47,10 +51,11 @@ import graft.schema.Schemas
   * post-commit `archive/` move is retained for cold-storage parity (B6/B7:
   * move-after-commit is the last step, exactly as main.py:29-31).
   *
-  * Scale: file listing, the ledger's success keys, the metadata batch and
-  * per-file ledger rows are O(files) driver work; all fact-row compute is
-  * distributed. The fact table is partitioned by `day`, so downstream
-  * time-scoped scans prune; dim and ledger stay dimension-scale.
+  * Scale: file listing, the ledger's and dim's keys, the metadata batch
+  * and per-file ledger rows are O(files) driver work; all fact-row
+  * compute is distributed. The fact table is partitioned by `day`, so
+  * downstream time-scoped scans prune; dim and ledger stay
+  * dimension-scale.
   */
 object FilePipeline {
 
@@ -102,10 +107,10 @@ object FilePipeline {
   }
 
   /** Keep only files whose simulation_id has no ledger success yet for
-    * `etlType`; `done` is [[Ledger.succeeded]]. */
-  private def newFiles(files: Seq[Path], done: Map[String, Set[String]],
+    * `etlType`. */
+  private def newFiles(files: Seq[Path], state: Ledger.RunState,
       etlType: String): Seq[Path] = {
-    val ids = done.getOrElse(etlType, Set.empty)
+    val ids = state.succeeded(etlType)
     files.filter(p => simId(p).exists(id => !ids.contains(id)))
   }
 
@@ -137,9 +142,12 @@ object FilePipeline {
   def readFact(spark: SparkSession, layout: Layout): DataFrame =
     spark.read.schema(factTableSchema).parquet(layout.factTable)
 
-  /** What one fact-stage ingest did: rows appended, files safe to archive,
-    * per-file failures already ledgered. */
-  case class CsvIngest(rowsInserted: Long, okFiles: Seq[Path], failures: Int)
+  /** What one fact-stage ingest did: rows appended, files safe to archive
+    * once its ledger rows are appended, one ledger row per file. */
+  case class CsvIngest(rowsInserted: Long, okFiles: Seq[Path],
+      ledgerRows: Seq[Ledger.Entry]) {
+    def failures: Int = ledgerRows.count(_.status == "failed")
+  }
 
   /** Fact-stage ingest of a concrete file list (K1+K3+K6) — shared by the
     * batch [[run]] and the streaming foreachBatch body so both get the
@@ -157,7 +165,8 @@ object FilePipeline {
     *     and stays in `incoming/`;
     *   - surviving rows are enriched against the current dim at write
     *     time and appended to the day-partitioned fact table;
-    *   - one final-status ledger row per file.
+    *   - one final-status ledger row per file, returned for the caller
+    *     to append ([[ingestBatch]]).
     *
     * Two passes over the files, nothing cached: a pre-scan that parses
     * only the id column and returns, per file, its row count, null ids
@@ -169,7 +178,7 @@ object FilePipeline {
     * rows); all row-level compute is distributed. */
   def ingestCsvFiles(spark: SparkSession, layout: Layout,
       csvFiles: Seq[Path]): CsvIngest = {
-    if (csvFiles.isEmpty) return CsvIngest(0L, Seq.empty, 0)
+    if (csvFiles.isEmpty) return CsvIngest(0L, Seq.empty, Seq.empty)
     val t0 = new Timestamp(System.currentTimeMillis())
     val byHeader = Clean.groupByHeader(spark, csvFiles.map(_.toString))
     val goodGroups = byHeader.filter { case (h, _) => Clean.headerIsValid(h) }
@@ -244,14 +253,16 @@ object FilePipeline {
         if (failure.isEmpty) rowsOf(p) else 0L,
         if (failure.isEmpty) "success" else "failed", failure))
     }
-    Ledger.append(spark, layout.ledger, ledgerRows)
     val okFiles = decided.collect { case (p, None) => p }
-    CsvIngest(okFiles.map(rowsOf).sum, okFiles,
-      ledgerRows.count(_.status == "failed"))
+    CsvIngest(okFiles.map(rowsOf).sum, okFiles, ledgerRows)
   }
 
-  /** What one metadata-stage ingest did. */
-  case class MetaIngest(dimRowsInserted: Long, okFiles: Seq[Path], failures: Int)
+  /** What one metadata-stage ingest did: dim rows appended, files safe to
+    * archive once its ledger rows are appended, one ledger row per file. */
+  case class MetaIngest(dimRowsInserted: Long, okFiles: Seq[Path],
+      ledgerRows: Seq[Ledger.Entry]) {
+    def failures: Int = ledgerRows.count(_.status == "failed")
+  }
 
   /** A listed file's identity as `<day>/<name>`, comparable between the
     * listing and a scanned file's `_metadata.file_path` URI. */
@@ -278,10 +289,18 @@ object FilePipeline {
     * [[Enrich.DimRowCap]]) and are validated and numbered there
     * ([[Enrich.numberDim]]). An id carried by two files of the batch is
     * numbered once, from the first file in path order; each later file is
-    * ledgered failed and stays in `incoming/`. */
+    * ledgered failed and stays in `incoming/`.
+    *
+    * Keyed by the dim, so idempotent: an id `state` says the dim already
+    * holds is ledgered success with zero rows and archived, not numbered
+    * again. That is what lets a run append its ledger rows only after
+    * the fact write: a run that fails after its dim append ledgers
+    * nothing, and the next run reconciles the dim rows it left. New ids
+    * are numbered from `state`'s high-water mark. The ledger rows are
+    * returned for the caller to append ([[ingestBatch]]). */
   def ingestMetadataFiles(spark: SparkSession, layout: Layout,
-      metaFiles: Seq[Path]): MetaIngest = {
-    if (metaFiles.isEmpty) return MetaIngest(0L, Seq.empty, 0)
+      metaFiles: Seq[Path], state: Ledger.RunState): MetaIngest = {
+    if (metaFiles.isEmpty) return MetaIngest(0L, Seq.empty, Seq.empty)
     val t0 = new Timestamp(System.currentTimeMillis())
     // one JSON object per file (not JSONL) — multiLine, like json.load
     val batch = spark.read.schema(Schemas.metadataJsonSchema)
@@ -310,11 +329,14 @@ object FilePipeline {
     val firsts = keyed.sortBy { case (k, _) => pathOrder(k) }
       .distinctBy { case (_, r) => r.getAs[String]("simulation_id") }
     val validFiles = keyed.map(_._1).toSet
-    val numberedFiles = firsts.map(_._1).toSet
-    if (firsts.nonEmpty) {
-      val hw = Enrich.highWaterMark(readDim(spark, layout), "simulation_num")
+    val acceptedFiles = firsts.map(_._1).toSet
+    val fresh = firsts.filterNot { case (_, r) =>
+      state.dimNums.contains(r.getAs[String]("simulation_id")) }
+    val numberedFiles = fresh.map(_._1).toSet
+    if (fresh.nonEmpty) {
       val numbered = spark.createDataFrame(
-        Enrich.numberDim(firsts.map(_._2), hw).asJava, Schemas.dimRxnSchema)
+        Enrich.numberDim(fresh.map(_._2), state.highWaterMark).asJava,
+        Schemas.dimRxnSchema)
       numbered.coalesce(1).write.mode("append").parquet(layout.dimTable)
       // B3 parity: mirror the dim insert into the relational sink
       layout.jdbc.foreach(t =>
@@ -323,17 +345,31 @@ object FilePipeline {
     val t1 = new Timestamp(System.currentTimeMillis())
     val ledgerRows = metaFiles.flatMap(p => simId(p).map { id =>
       val k = fileKey(p)
-      if (numberedFiles(k))
-        Ledger.Entry(id, Ledger.EtlTypeMetadata, t0, t1, 1L, "success", None)
+      if (acceptedFiles(k))
+        Ledger.Entry(id, Ledger.EtlTypeMetadata, t0, t1,
+          if (numberedFiles(k)) 1L else 0L, "success", None)
       else
         Ledger.Entry(id, Ledger.EtlTypeMetadata, t0, t1, 0L, "failed", Some(
           if (validFiles(k)) "duplicate simulation_id in batch"
           else "metadata validation failed or id/filename mismatch"))
     })
-    Ledger.append(spark, layout.ledger, ledgerRows)
-    MetaIngest(firsts.size.toLong,
-      metaFiles.filter(p => numberedFiles(fileKey(p))),
-      ledgerRows.count(_.status == "failed"))
+    MetaIngest(fresh.size.toLong,
+      metaFiles.filter(p => acceptedFiles(fileKey(p))), ledgerRows)
+  }
+
+  /** Both stages over one batch of files, then one ledger append holding
+    * both stages' rows — the body the batch [[run]] and the streaming
+    * foreachBatch share. Metadata first, so the batch's CSVs enrich
+    * against its fresh dim rows. The append comes after the fact write:
+    * a failure in either stage ledgers nothing, so the next attempt
+    * selects the same files again and the metadata stage reconciles any
+    * dim rows this one left. `state` supplies the dim's keys. */
+  def ingestBatch(spark: SparkSession, layout: Layout, metaFiles: Seq[Path],
+      csvFiles: Seq[Path], state: Ledger.RunState): (MetaIngest, CsvIngest) = {
+    val meta = ingestMetadataFiles(spark, layout, metaFiles, state)
+    val csv = ingestCsvFiles(spark, layout, csvFiles)
+    Ledger.append(spark, layout.ledger, meta.ledgerRows ++ csv.ledgerRows)
+    (meta, csv)
   }
 
   /** Both stages, then the archive move, for one batch run. Returns what
@@ -344,22 +380,18 @@ object FilePipeline {
   def run(spark: SparkSession, layout: Layout): RunReport = {
     val listedMeta = listIncoming(spark, layout, ".json")
     val listedCsv = listIncoming(spark, layout, ".csv")
-    // one ledger read serves both stages: the metadata stage appends only
-    // metadata rows, which the CSV selection never reads. Nothing listed,
+    // one read of ledger and dim keys serves both stages. Nothing listed,
     // nothing read — an idle run launches no job
-    val done =
-      if (listedMeta.isEmpty && listedCsv.isEmpty) Map.empty[String, Set[String]]
-      else Ledger.succeeded(spark, layout.ledger)
+    val state =
+      if (listedMeta.isEmpty && listedCsv.isEmpty) Ledger.RunState.Empty
+      else Ledger.readState(spark, Some(layout.ledger), layout.dimTable)
+    val metaFiles = newFiles(listedMeta, state, Ledger.EtlTypeMetadata)
+    val csvFiles = newFiles(listedCsv, state, Ledger.EtlTypeCsv)
 
-    // --- metadata stage (K4); its ledger rows commit before the fact
-    //     stage runs, so a fact-stage failure never leaves dim rows that a
-    //     retry would number again --------------------------------------
-    val metaFiles = newFiles(listedMeta, done, Ledger.EtlTypeMetadata)
-    val meta = ingestMetadataFiles(spark, layout, metaFiles)
-
-    // --- fact stage (K1+K3: clean + load + write-time enrichment) --------
-    val csvFiles = newFiles(listedCsv, done, Ledger.EtlTypeCsv)
-    val ingest = ingestCsvFiles(spark, layout, csvFiles)
+    // --- metadata stage (K4), fact stage (K1+K3: clean + load +
+    //     write-time enrichment), one ledger append -------------------
+    val (meta, ingest) =
+      ingestBatch(spark, layout, metaFiles, csvFiles, state)
 
     // --- archive (B6/B7: move-after-commit last; failed files stay in
     //     incoming for retry, like main.py:29-31) ------------------------

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.ops.Ledger
 import graft.pipeline.FilePipeline
 import graft.pipeline.FilePipeline.Layout
 
@@ -13,9 +14,10 @@ import graft.pipeline.FilePipeline.Layout
   * and `cleanSource=archive` reproduces the cold-storage move as a source
   * option.
   *
-  * The per-batch body is the same clean→enrich→append used by the batch
-  * pipeline; `foreachBatch` gives one atomic commit per micro-batch (the
-  * Spark analogue of the reference's per-file transaction, K3/K6).
+  * The per-batch body is the batch pipeline's own
+  * ([[FilePipeline.ingestBatch]]); `foreachBatch` gives one atomic commit
+  * per micro-batch (the Spark analogue of the reference's per-file
+  * transaction, K3/K6).
   */
 object StreamingIngest {
 
@@ -32,15 +34,17 @@ object StreamingIngest {
     * silently column-shifted. So the source is a `text` stream (schema is
     * just `value`; the checkpoint still gives exactly-once per file and
     * `cleanSource=archive` still moves committed files), and the batch
-    * body splits the batch's file list by suffix and hands each half to
-    * the same hardened batch-mode stage: metadata files first
-    * ([[FilePipeline.ingestMetadataFiles]] — id/filename reconciliation,
-    * high-water dim numbering, ledger rows) so CSVs arriving in the SAME
-    * micro-batch enrich against the fresh dim rows, then fact CSVs
-    * ([[FilePipeline.ingestCsvFiles]] — per-header-shape schema binding,
-    * invalid-header quarantine, id-mismatch and duplicate-id
-    * quarantine, write-time enrichment, ledger rows). The file data is read twice (once by the
-    * source, once parsed); micro-batches are bounded by
+    * body splits the batch's file list by suffix and hands both halves
+    * to the batch run's own body ([[FilePipeline.ingestBatch]]): metadata
+    * files first (id/filename reconciliation, dim-keyed numbering from
+    * the high-water mark) so CSVs arriving in the SAME micro-batch enrich
+    * against the fresh dim rows, then fact CSVs (per-header-shape schema
+    * binding, invalid-header quarantine, id-mismatch and duplicate-id
+    * quarantine, write-time enrichment), then one ledger append. Each
+    * micro-batch with metadata files reads the dim's keys once
+    * ([[graft.ops.Ledger.readState]] without the ledger: the checkpoint,
+    * not the ledger, selects the files). The file data is read twice
+    * (once by the source, once parsed); micro-batches are bounded by
     * maxFilesPerTrigger, and correctness beats the extra bounded scan.
     * Note one streaming-specific deviation: quarantined files are still
     * archived by the source (the checkpoint marks them consumed); their
@@ -70,9 +74,11 @@ object StreamingIngest {
           .toSeq.sortBy(_.toString)
         val (jsonFiles, csvFiles) =
           files.partition(_.getName.endsWith(".json"))
-        // dim before fact: same-batch CSVs see this batch's metadata
-        FilePipeline.ingestMetadataFiles(batch.sparkSession, layout, jsonFiles)
-        FilePipeline.ingestCsvFiles(batch.sparkSession, layout, csvFiles)
+        val spark = batch.sparkSession
+        val state =
+          if (jsonFiles.isEmpty) Ledger.RunState.Empty
+          else Ledger.readState(spark, None, layout.dimTable)
+        FilePipeline.ingestBatch(spark, layout, jsonFiles, csvFiles, state)
         ()
       }
       .start()

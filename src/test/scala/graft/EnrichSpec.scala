@@ -4,7 +4,6 @@ import java.sql.Date
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.ops.Enrich
 import graft.schema.Schemas
@@ -33,11 +32,6 @@ class EnrichSpec extends SparkSpecBase {
     val twice = Enrich.enrichFact(once, dim)
     assert(once.orderBy("simulation_id").collect()
       .sameElements(twice.orderBy("simulation_id").collect()))
-  }
-
-  test("high-water mark is 0 on an empty table (first-run crash fixed)") {
-    val empty = fact.filter(lit(false))
-    assert(Enrich.highWaterMark(empty, "simulation_num") == 0L)
   }
 
   private val metaSchema = StructType(

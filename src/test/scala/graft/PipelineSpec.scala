@@ -346,10 +346,11 @@ class PipelineSpec extends SparkSpecBase {
     var r: FilePipeline.RunReport = null
     val jobs = countJobs { r = FilePipeline.run(spark, root.toString) }
     assert(r == FilePipeline.RunReport(3, 30L, 3, 3L, 6, 0))
-    // ledger read 2; metadata stage 5: collect, high-water mark 2, dim
-    // write, ledger append; fact stage 5: the id pre-scan's per-file
-    // groupBy 2, dim broadcast, fact write, ledger append
-    assert(jobs == 12)
+    // state read 1 (ledger and dim keys, one union, no shuffle);
+    // metadata stage 2: collect, dim append; fact stage 3: the id
+    // pre-scan (per-partition partials, no exchange), dim broadcast, fact
+    // append; one ledger append for both stages
+    assert(jobs == 7)
   }
 
   test("a simulation id repeated in one CSV batch is written once") {
@@ -414,8 +415,9 @@ class PipelineSpec extends SparkSpecBase {
     val good = TestFixtures.writeCsv(root, "2024-03-01", 96, 3)
     val bad = TestFixtures.writeCsv(root, "2024-03-01", 97, 3)
     val lines = Files.readAllLines(bad)
+    val row = lines.get(1)
     // the first data row's CA (the third column) is not a number
-    val cells = lines.get(1).split(",")
+    val cells = row.split(",")
     cells(2) = "not-a-number"
     lines.set(1, cells.mkString(","))
     Files.write(bad, lines)
@@ -427,8 +429,57 @@ class PipelineSpec extends SparkSpecBase {
       else Files.walk(dir).filter(_.toString.endsWith(".parquet")).count()
     }
     assert(committed == 0)
-    assert(csvLedger(layout).isEmpty)
+    // the one ledger append comes after the fact write: no row of either
+    // type, so every file is selected again
+    assert(Ledger.read(spark, layout.ledger).count() == 0)
     assert(Files.exists(good) && Files.exists(bad))
+    val id = TestFixtures.simUuid(96)
+    val meta = root.resolve(s"incoming/2024-03-01/metadata_$id.json")
+    assert(Files.exists(meta))
+    def dimRows = FilePipeline.readDim(spark, layout)
+      .select("simulation_id", "simulation_num").collect()
+      .map(x => (x.getString(0), x.getInt(1))).toSeq
+    // the dim append committed before the fact stage failed
+    assert(dimRows == Seq((id, 1)))
+
+    // mend the CSV and run again: the dim row is reconciled, not
+    // numbered again, and the metadata file is archived
+    lines.set(1, row)
+    Files.write(bad, lines)
+    val r = FilePipeline.run(spark, root.toString)
+    assert(r == FilePipeline.RunReport(2, 6L, 1, 0L, 3, 0))
+    assert(dimRows == Seq((id, 1)))
+    val metaLedger = Ledger.read(spark, layout.ledger)
+      .filter(col("etl_type") === Ledger.EtlTypeMetadata)
+      .select("simulation_id", "status").collect()
+      .map(x => (x.getString(0), x.getString(1))).toSeq
+    assert(metaLedger == Seq((id, "success")))
+    assert(Files.walk(root.resolve("incoming"))
+      .filter(Files.isRegularFile(_)).count() == 0)
+    assert(FilePipeline.readFact(spark, layout)
+      .filter(col("simulation_id") === id && col("simulation_num") === 1)
+      .count() == 3)
+    assertLedgerCountsMatchFact(layout)
+  }
+
+  test("an empty dim numbers from 1 (high-water mark 0 on first run)") {
+    val root = TestFixtures.tempRoot("pipe-firstnum")
+    val layout = FilePipeline.Layout(root.toString)
+    def state = Ledger.readState(spark, Some(layout.ledger), layout.dimTable)
+    // a first run with CSVs only writes the ledger and no dim
+    TestFixtures.writeCsv(root, "2024-03-01", 51, 3)
+    FilePipeline.run(spark, root.toString)
+    assert(state.dimNums.isEmpty && state.highWaterMark == 0L)
+    // a dim directory with no file reads as empty too
+    Files.createDirectories(root.resolve("warehouse/dim_rxn"))
+    assert(state.dimNums.isEmpty && state.highWaterMark == 0L)
+    TestFixtures.writeMetadata(root, "2024-03-02", 53)
+    TestFixtures.writeMetadata(root, "2024-03-02", 52)
+    val r = FilePipeline.run(spark, root.toString)
+    assert(r.dimRowsInserted == 2 && r.failures == 0)
+    assert(state.dimNums == Map(
+      TestFixtures.simUuid(52) -> 1, TestFixtures.simUuid(53) -> 2))
+    assert(state.highWaterMark == 2L)
   }
 
   test("the fact stage caches nothing and evaluates no per-row regex") {
@@ -437,6 +488,7 @@ class PipelineSpec extends SparkSpecBase {
     import org.apache.spark.sql.catalyst.expressions.RegExpExtract
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
     import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
     import org.apache.spark.sql.util.QueryExecutionListener
     val root = TestFixtures.tempRoot("pipe-planshape")
@@ -474,6 +526,13 @@ class PipelineSpec extends SparkSpecBase {
     }).filter(_.nonEmpty)
     assert(csvScans.size == 2)
     assert(csvScans.head == Seq(Seq("SimulationID"), Seq("SimulationID")))
+    // the pre-scan merges per-file partials on the driver: no exchange
+    val preScan = nodes.find(_.exists {
+      case s: FileSourceScanExec =>
+        s.relation.fileFormat.isInstanceOf[CSVFileFormat]
+      case _ => false
+    }).get
+    assert(!preScan.exists(_.isInstanceOf[Exchange]))
     assert(csvScans(1).forall(_.size == 8))
     val all = nodes.flatten
     assert(!all.exists(_.isInstanceOf[InMemoryTableScanExec]))

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.pipeline.FilePipeline.Layout
 import graft.streaming.{StreamingDedup, StreamingIngest, StreamingJoin}
@@ -120,6 +122,38 @@ class StreamingSpec extends SparkSpecBase {
       .map(x => x.getString(0) -> x.getString(1)).toMap
     assert(states(TestFixtures.simUuid(1)) == "success")
     assert(states(TestFixtures.simUuid(2)) == "failed")
+  }
+
+  test("streaming ingest numbers an id once across micro-batches, one ledger append each") {
+    val root = TestFixtures.tempRoot("stream-dimkeyed")
+    val checkpoint = root.resolve("checkpoint").toString
+    def runStream(): Unit = StreamingIngest.start(spark, root.toString,
+      checkpoint, archiveSource = false).awaitTermination()
+    TestFixtures.writeMetadata(root, "2024-03-01", 1)
+    runStream()
+    // a later micro-batch: the same simulation's metadata again, and a new
+    // simulation with its CSV
+    TestFixtures.writeMetadata(root, "2024-03-02", 1, dateRun = "2024-03-02")
+    TestFixtures.writeMetadata(root, "2024-03-02", 2)
+    TestFixtures.writeCsv(root, "2024-03-02", 2, 4)
+    runStream()
+    val layout = Layout(root.toString)
+    val dim = spark.read.parquet(layout.dimTable)
+      .select("simulation_id", "simulation_num").collect()
+      .map(x => x.getString(0) -> x.getInt(1)).toSeq.sorted
+    assert(dim == Seq(TestFixtures.simUuid(1) -> 1, TestFixtures.simUuid(2) -> 2))
+    val fact = spark.read.parquet(layout.factTable)
+    assert(fact.count() == 4 && fact.filter(col("simulation_num") === 2).count() == 4)
+    val meta = graft.ops.Ledger.read(spark, layout.ledger)
+      .filter(col("etl_type") === graft.ops.Ledger.EtlTypeMetadata)
+      .select("simulation_id", "status", "records_inserted").collect()
+      .map(x => (x.getString(0), x.getString(1), x.getLong(2))).toSeq.sorted
+    assert(meta == Seq((TestFixtures.simUuid(1), "success", 0L),
+      (TestFixtures.simUuid(1), "success", 1L),
+      (TestFixtures.simUuid(2), "success", 1L)))
+    // one ledger file per micro-batch: both stages' rows in one append
+    assert(Files.list(root.resolve("warehouse/etl_run_log")).iterator()
+      .asScala.count(_.getFileName.toString.endsWith(".parquet")) == 2)
   }
 
   test("streaming ingest quarantines id-mismatch files via the shared ledger gate") {
