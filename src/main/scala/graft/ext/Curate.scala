@@ -66,13 +66,14 @@ object Curate {
     * plan (exchange count, join strategy) can be inspected WITHOUT the
     * per-round checkpoint that hides it from `explain`.
     *
-    * Round-17 exchange fusion (`fused = true`, guide §2.4 — the LPA
-    * subset-rule pattern): each half-round's closing `distinct()` used
-    * to plan its own Exchange hashpartitioning(u, v), and small-star's
-    * canonicalization re-keyed through ANOTHER hashpartitioning(u) —
-    * 4 edge-sized exchanges per round. Deduplicating through an
-    * explicit repartition(u) instead lets HashPartitioning(u) satisfy
-    * the dropDuplicates(u, v) clustering requirement (subset rule),
+    * Exchange fusion (guide §2.4 — the LPA subset-rule pattern; verdict
+    * in OPTIMIZATION_r17 §1): a closing `distinct()` per half-round
+    * would plan its own Exchange hashpartitioning(u, v), and a
+    * canonicalizing small-star would re-key through ANOTHER
+    * hashpartitioning(u) — 4 edge-sized exchanges per round.
+    * Deduplicating through an explicit repartition(u) instead lets
+    * HashPartitioning(u) satisfy the dropDuplicates(u, v) clustering
+    * requirement (subset rule),
     * and — because large-star's output is canonical by construction
     * (new u = old v > old u ≥ m = new v) — small-star's groupBy(u),
     * its self-join on u, AND the fixpoint pointer aggregate all reuse
@@ -81,10 +82,9 @@ object Curate {
     * hash(u) layout is exact (same keys; partial map-side combine
     * bounds any hot-u reduce partition by its DISTINCT pair count,
     * the same bound the groupBy(u) half-rounds already carry). */
-  private[graft] def ccRound(e0: DataFrame, fused: Boolean): DataFrame = {
+  private[graft] def ccRound(e0: DataFrame): DataFrame = {
     def dedup(e: DataFrame): DataFrame =
-      if (fused) e.repartition(col("u")).dropDuplicates("u", "v")
-      else e.distinct()
+      e.repartition(col("u")).dropDuplicates("u", "v")
     // large-star(u): every neighbor v > u re-points to
     // m = min(N(u) ∪ {u}); keeps components connected while halving
     // long-path distances (Kiveris et al., Lemma 1)
@@ -98,20 +98,16 @@ object Curate {
         .select(col("v").as("u"), col("m").as("v"))
         .filter(col("u") =!= col("v")))
     }
-    // small-star(u): orient every edge toward the smaller endpoint,
-    // then re-point each node's smaller neighbors (and itself) to the
-    // neighborhood minimum — flattens the stars large-star built. In
-    // the fused form the input IS large-star's output, whose every
-    // edge already satisfies u > v, so the greatest/least
-    // canonicalization is the identity — skipping it (fused path only)
-    // preserves the hash(u) partitioning that a computed
-    // greatest(u, v) projection would discard.
+    // small-star(u): with every edge oriented toward the smaller
+    // endpoint, re-point each node's smaller neighbors (and itself) to
+    // the neighborhood minimum — flattens the stars large-star built.
+    // The input IS large-star's output, whose every edge already
+    // satisfies u > v, so no greatest/least canonicalization runs: a
+    // computed greatest(u, v) projection would discard the hash(u)
+    // partitioning
     def smallStar(e: DataFrame): DataFrame = {
-      val can = if (fused) e
-        else e.select(greatest(col("u"), col("v")).as("u"),
-          least(col("u"), col("v")).as("v"))
-      val mins = can.groupBy(col("u")).agg(min(col("v")).as("m"))
-      dedup(can.join(mins, "u")
+      val mins = e.groupBy(col("u")).agg(min(col("v")).as("m"))
+      dedup(e.join(mins, "u")
         .select(col("v").as("u"), col("m").as("v"))
         .union(mins.select(col("u"), col("m").as("v")))
         .filter(col("u") =!= col("v")))
@@ -120,11 +116,6 @@ object Curate {
   }
 
   def connectedComponents(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
-    // `graft.ccfuse=off` (session conf) forces the round-16
-    // 4-exchange round shape — the interleaved-A/B kill-switch,
-    // Tables.spreadScan precedent. See [[ccRound]].
-    val fused =
-      pairs.sparkSession.conf.get("graft.ccfuse", "on") != "off"
     def signature(e: DataFrame): (Long, Long, Long) = {
       // xor folds, not sums: ANSI mode makes a Σ of 64-bit hashes
       // overflow; xor is closed over longs and order-free, and the edge
@@ -145,7 +136,7 @@ object Curate {
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
-      val next = ccRound(edges, fused).localCheckpoint(eager = false)
+      val next = ccRound(edges).localCheckpoint(eager = false)
       val nextSig = signature(next)
       converged = nextSig == sig
       edges = next

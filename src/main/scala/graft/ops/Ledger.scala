@@ -67,12 +67,16 @@ object Ledger {
     try Some(spark.read.schema(schema).parquet(path))
     catch { case _: org.apache.spark.sql.AnalysisException => None }
 
-  /** Read the ledger; empty-but-typed DataFrame when absent (first run). */
+  /** A table read with its declared schema; empty but typed when absent
+    * (a first run). */
+  def readOrEmpty(spark: SparkSession, path: String,
+      schema: StructType): DataFrame =
+    present(spark, path, schema).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
+
+  /** Read the ledger; empty when absent. */
   def read(spark: SparkSession, ledgerPath: String): DataFrame =
-    present(spark, ledgerPath, Schemas.etlRunLogSchema).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        Schemas.etlRunLogSchema))
+    readOrEmpty(spark, ledgerPath, Schemas.etlRunLogSchema)
 
   /** Latest status per (simulation_id, etl_type) — the UPDATE-free read of
     * the reference's mutable row. Two rows of one key share a

@@ -1,11 +1,12 @@
 package graft.pipeline
 
+import java.net.URI
 import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
 import graft.ops.{Clean, Enrich, Ledger}
@@ -17,25 +18,29 @@ import graft.schema.Schemas
   *
   *   0. state read: the ledger's latest outcome per key and the dim's
   *      (simulation_id, simulation_num), in one job ([[Ledger.readState]]);
-  *   1. metadata stage: new `metadata_<uuid>.json` → renamed, validated,
+  *   1. metadata stage: new `metadata_<uuid>.json` → validated and
   *      surrogate-numbered on the driver (sequence semantics: order by
   *      date_run, simulation_id, offset by the dim's high-water mark),
   *      appended to the dim table; an id the dim already holds is not
   *      numbered again;
   *   2. fact stage: new `rxndata_<uuid>.csv` → a pre-scan of the id
-  *      column decides each file on the driver, then one streaming scan
-  *      of the files that passed, rename/validate/drop (clean), enriched
+  *      column, then one scan of the files that passed, cleaned by one
+  *      projection per header shape ([[Clean.readCleaned]]), enriched
   *      against the *current* dim via broadcast join at write time (the
   *      reference's post-hoc batched UPDATE loop disappears), appended to
   *      the day-partitioned fact table. Nothing is cached;
   *   3. one ledger append holding both stages' rows, after the fact write.
   *
+  * Each rule lives in one place: the file-name rule ([[fileName]]), the
+  * claim rule that the first file of an id in path order claims it
+  * ([[decide]]), the ledger rows of a stage ([[outcome]]) and the header
+  * rule ([[Clean.shape]]).
+  *
   * Every job a run launches reads or writes data. A warm run (ledger and
   * dim already written) with both kinds of files launches:
   *
   *   - state read: 1 (a union of two scans, collected; no shuffle);
-  *   - metadata stage: 2 — the validated batch collected (1), the dim
-  *     append (1);
+  *   - metadata stage: 2 — the batch collected (1), the dim append (1);
   *   - fact stage: 3 — the id pre-scan, one partial per file and
   *     partition merged on the driver (1), the dim broadcast (1), the
   *     fact append (1);
@@ -87,31 +92,37 @@ object FilePipeline {
   private def fs(spark: SparkSession): FileSystem =
     FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
-  private def listIncoming(spark: SparkSession, layout: Layout,
-      suffix: String): Seq[Path] = {
+  /** Every file under `incoming/<day>/`, in path order. */
+  private def listIncoming(spark: SparkSession, layout: Layout): Seq[Path] = {
     val f = fs(spark)
     val base = new Path(layout.incoming)
     if (!f.exists(base)) Seq.empty
     else
       f.listStatus(base).filter(_.isDirectory).flatMap { day =>
-        f.listStatus(day.getPath).filter(s =>
-          s.isFile && s.getPath.getName.endsWith(suffix)).map(_.getPath)
+        f.listStatus(day.getPath).filter(_.isFile).map(_.getPath)
       }.toSeq.sortBy(_.toString)
   }
 
-  private val SimIdRe = ".*_([0-9a-fA-F-]{36})\\.(?:csv|json)$".r
+  /** The file-name rule of both stages (FIXTURES.md §1): any
+    * `<prefix>_<uuid>.csv|json` carries the simulation id its ledger rows
+    * are keyed by; only `rxndata_<uuid>.csv` and `metadata_<uuid>.json`
+    * are well formed. */
+  private val NameRe = "(.*)_([0-9a-fA-F-]{36})\\.(csv|json)".r
 
-  private def simId(p: Path): Option[String] = p.getName match {
-    case SimIdRe(id) => Some(id)
+  private case class FileName(id: String, wellFormed: Boolean)
+
+  private def fileName(p: Path): Option[FileName] = p.getName match {
+    case NameRe(prefix, id, ext) =>
+      Some(FileName(id, prefix == (if (ext == "csv") "rxndata" else "metadata")))
     case _ => None
   }
 
-  /** Keep only files whose simulation_id has no ledger success yet for
-    * `etlType`. */
+  /** Keep only files whose name carries a simulation id with no ledger
+    * success yet for `etlType`. */
   private def newFiles(files: Seq[Path], state: Ledger.RunState,
       etlType: String): Seq[Path] = {
     val ids = state.succeeded(etlType)
-    files.filter(p => simId(p).exists(id => !ids.contains(id)))
+    files.filter(p => fileName(p).exists(n => !ids.contains(n.id)))
   }
 
   private def archiveFiles(spark: SparkSession, layout: Layout,
@@ -126,13 +137,7 @@ object FilePipeline {
   }
 
   def readDim(spark: SparkSession, layout: Layout): DataFrame =
-    try spark.read.schema(Schemas.dimRxnSchema).parquet(layout.dimTable)
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          Schemas.dimRxnSchema)
-    }
+    Ledger.readOrEmpty(spark, layout.dimTable, Schemas.dimRxnSchema)
 
   /** The fact table as written: [[Schemas.factSimSchema]] plus the `day`
     * partition, typed as partition inference would type it. */
@@ -142,27 +147,64 @@ object FilePipeline {
   def readFact(spark: SparkSession, layout: Layout): DataFrame =
     spark.read.schema(factTableSchema).parquet(layout.factTable)
 
-  /** What one fact-stage ingest did: rows appended, files safe to archive
-    * once its ledger rows are appended, one ledger row per file. */
-  case class CsvIngest(rowsInserted: Long, okFiles: Seq[Path],
+  /** What one stage's ingest did: rows appended (fact rows, or dim rows),
+    * files safe to archive once its ledger rows are appended, one ledger
+    * row per file whose name carries an id. */
+  case class StageIngest(rowsInserted: Long, okFiles: Seq[Path],
       ledgerRows: Seq[Ledger.Entry]) {
     def failures: Int = ledgerRows.count(_.status == "failed")
+  }
+
+  /** A listed file's identity as `<day>/<name>`, comparable between the
+    * listing and a scanned file's `_metadata.file_path` URI. */
+  private def fileKey(p: Path): String = s"${p.getParent.getName}/${p.getName}"
+
+  private def fileKey(uri: String): String = fileKey(new Path(new URI(uri)))
+
+  /** The claim rule of both stages, in path order: a file fails with its
+    * own reason when `check` gives one; otherwise the first file of an id
+    * claims it, and each later file of that id fails as a duplicate and
+    * stays in `incoming/`. */
+  private def decide(files: Seq[Path],
+      check: Path => Option[String]): Seq[(Path, Option[String])] = {
+    val claimed = scala.collection.mutable.Set.empty[String]
+    files.sortBy(_.toString).map { p =>
+      p -> check(p).orElse(Option.when(
+        fileName(p).exists(n => !claimed.add(n.id)))(
+        "duplicate simulation_id in batch"))
+    }
+  }
+
+  /** A stage's result from its decided files: one final-status ledger row
+    * per file whose name carries an id, with `records(file)` rows for a
+    * success and none for a failure; the passing files are the ones to
+    * archive. */
+  private def outcome(etlType: String, t0: Timestamp,
+      decided: Seq[(Path, Option[String])], records: Path => Long): StageIngest = {
+    val t1 = new Timestamp(System.currentTimeMillis())
+    val ok = decided.collect { case (p, None) => p }
+    StageIngest(ok.map(records).sum, ok, decided.flatMap { case (p, failure) =>
+      fileName(p).map(n => Ledger.Entry(n.id, etlType, t0, t1,
+        if (failure.isEmpty) records(p) else 0L,
+        if (failure.isEmpty) "success" else "failed", failure))
+    })
   }
 
   /** Fact-stage ingest of a concrete file list (K1+K3+K6) — shared by the
     * batch [[run]] and the streaming foreachBatch body so both get the
     * same hardening:
     *
-    *   - files are read grouped by exact header shape (no positional
-    *     mis-binding when artifact and artifact-less files share a batch);
-    *   - files whose header can never validate (missing required columns
-    *     after rename, or empty) are quarantined whole — ledger 'failed',
-    *     zero rows written — instead of failing the batch;
-    *   - the in-file SimulationID must agree with the filename uuid
-    *     (FIXTURES.md contract); violating files are quarantined whole;
+    *   - files are read grouped by exact header shape, each shape through
+    *     one projection ([[Clean.readCleaned]]), so artifact and
+    *     artifact-less files of one batch bind by name;
+    *   - a file whose header fails [[Clean.shape]] (a required column
+    *     missing after rename), or that is empty, is quarantined whole —
+    *     ledger 'failed', zero rows written — instead of failing the batch;
+    *   - a file not named `rxndata_<uuid>.csv`, or whose in-file
+    *     SimulationID disagrees with that uuid (FIXTURES.md contract), is
+    *     quarantined whole, header-only or not;
     *   - an id carried by two files of the batch is ingested once, from
-    *     the first file in path order; each later file is ledgered failed
-    *     and stays in `incoming/`;
+    *     the first file in path order ([[decide]]);
     *   - surviving rows are enriched against the current dim at write
     *     time and appended to the day-partitioned fact table;
     *   - one final-status ledger row per file, returned for the caller
@@ -171,40 +213,32 @@ object FilePipeline {
     * Two passes over the files, nothing cached: a pre-scan that parses
     * only the id column and returns, per file, its row count, null ids
     * and least and greatest id ([[Clean.scanFileIds]]); the driver then
-    * decides each file (the filename regex runs once per file, not per
+    * decides each file (the file-name rule runs once per file, not per
     * row), and one streaming write reads only the files that passed.
     *
     * Driver work is O(files) (header peek, per-file decisions and ledger
     * rows); all row-level compute is distributed. */
   def ingestCsvFiles(spark: SparkSession, layout: Layout,
-      csvFiles: Seq[Path]): CsvIngest = {
-    if (csvFiles.isEmpty) return CsvIngest(0L, Seq.empty, Seq.empty)
+      csvFiles: Seq[Path]): StageIngest = {
     val t0 = new Timestamp(System.currentTimeMillis())
-    val byHeader = Clean.groupByHeader(spark, csvFiles.map(_.toString))
-    val goodGroups = byHeader.filter { case (h, _) => Clean.headerIsValid(h) }
+    val goodGroups = Clean.groupByHeader(spark, csvFiles.map(_.toString))
+      .filter { case (h, _) => Clean.shape(h).isRight }
     // files absent here are headerless, empty or miss a required column
     val validHeader =
       goodGroups.values.flatten.map(s => fileKey(new Path(s))).toSet
     val idScan =
       if (goodGroups.isEmpty) Map.empty[String, Clean.FileIds]
-      else Clean.scanFileIds(spark, goodGroups)
-        .map(f => fileKey(new Path(new java.net.URI(f.path))) -> f).toMap
-
-    // each file's fate, in path order: the first passing file of an id
-    // claims it; a file with no data row has no id to disagree with
-    val claimed = scala.collection.mutable.Set.empty[String]
-    val decided = csvFiles.sortBy(_.toString).map { p =>
+      else Clean.scanFileIds(spark, goodGroups).map(f => fileKey(f.path) -> f).toMap
+    // a file with no data row has no in-file id to disagree with its name
+    val decided = decide(csvFiles, { p =>
       val k = fileKey(p)
-      p -> (
-        if (!validHeader(k))
-          Some("header missing required columns or file unreadable")
-        else if (!idScan.get(k).forall(f =>
-            Clean.csvNameId(p.getName).exists(f.allAre)))
-          Some("in-file SimulationID disagrees with filename")
-        else if (simId(p).exists(id => !claimed.add(id)))
-          Some("duplicate simulation_id in batch")
-        else None)
-    }
+      if (!validHeader(k))
+        Some("header missing required columns or file unreadable")
+      else if (!fileName(p).exists(n =>
+          n.wellFormed && idScan.get(k).forall(_.allAre(n.id))))
+        Some("in-file SimulationID disagrees with filename")
+      else None
+    })
     val passed = decided.collect { case (p, None) => fileKey(p) }.toSet
     // dim ids are unique, so the enrichment's left join writes exactly
     // the pre-scan's counts
@@ -218,10 +252,8 @@ object FilePipeline {
     }.filter(_._2.nonEmpty)
 
     if (toWrite.nonEmpty) {
-      def cleaned(groups: Map[String, Seq[String]]) =
-        Clean.clean(Clean.readGroupedCsvs(spark, groups))
       val enriched = Enrich.enrichFact(
-        cleaned(toWrite).withColumns(Map(
+        Clean.readCleaned(spark, toWrite).withColumns(Map(
           "row_id" -> monotonically_increasing_id(),
           "simulation_num" -> lit(null).cast("int"))),
         readDim(spark, layout))
@@ -234,62 +266,39 @@ object FilePipeline {
       // two writes
       layout.jdbc.foreach(t =>
         graft.sources.JdbcSink.append(out.drop("day"), t, "fact_sim"))
-      // B1 parity: the reference's cleaned-CSV processed/<day>/ tree. The
-      // driver knows each file's day, so each day's write reads only that
-      // day's files; the loop is bounded by the batch's day count
+      // B1 parity: the reference's cleaned-CSV processed/<day>/ tree
+      // (header kept, no index column, like df.to_csv(index=False) at
+      // file_manager.py:63), appended so successive runs accumulate. Its
+      // file names are Spark task parts: provenance lives in the ledger.
+      // The driver knows each file's day, so each day's write reads only
+      // that day's files; the loop is bounded by the batch's day count
       if (layout.processedParity)
         toWrite.toSeq.flatMap { case (h, ps) => ps.map(s => (h, s)) }
           .groupBy { case (_, s) => new Path(s).getParent.getName }
           .toSeq.sortBy(_._1).foreach { case (day, hs) =>
-            Clean.writeProcessedCsv(
-              cleaned(hs.groupMap(_._1)(_._2))
-                .select(Schemas.requiredCols.map(col): _*),
-              s"${layout.processed}/$day")
+            Clean.readCleaned(spark, hs.groupMap(_._1)(_._2))
+              .select(Schemas.requiredCols.map(col): _*)
+              .write.option("header", "true").mode("append")
+              .csv(s"${layout.processed}/$day")
           }
     }
-    val t1 = new Timestamp(System.currentTimeMillis())
-    val ledgerRows = decided.flatMap { case (p, failure) =>
-      simId(p).map(id => Ledger.Entry(id, Ledger.EtlTypeCsv, t0, t1,
-        if (failure.isEmpty) rowsOf(p) else 0L,
-        if (failure.isEmpty) "success" else "failed", failure))
-    }
-    val okFiles = decided.collect { case (p, None) => p }
-    CsvIngest(okFiles.map(rowsOf).sum, okFiles, ledgerRows)
-  }
-
-  /** What one metadata-stage ingest did: dim rows appended, files safe to
-    * archive once its ledger rows are appended, one ledger row per file. */
-  case class MetaIngest(dimRowsInserted: Long, okFiles: Seq[Path],
-      ledgerRows: Seq[Ledger.Entry]) {
-    def failures: Int = ledgerRows.count(_.status == "failed")
-  }
-
-  /** A listed file's identity as `<day>/<name>`, comparable between the
-    * listing and a scanned file's `_metadata.file_path` URI. */
-  private def fileKey(p: Path): String = s"${p.getParent.getName}/${p.getName}"
-
-  private val MetaNameIdRe =
-    "metadata_([0-9a-fA-F-]{36})\\.json".r.unanchored
-
-  /** The simulation id a metadata file's name carries. */
-  private def metaNameId(name: String): Option[String] = name match {
-    case MetaNameIdRe(id) => Some(id)
-    case _ => None
+    outcome(Ledger.EtlTypeCsv, t0, decided, rowsOf)
   }
 
   /** Metadata-stage ingest of a concrete file list (K4, fixed:
     * validate-then-skip, real row count; per-file reconciliation BEFORE
-    * the dim append so a failed file contributes zero dim rows — the
-    * in-file id must match the filename uuid, same gate as the fact
-    * stage). Shared by the batch [[run]] and the streaming foreachBatch
-    * body so both modes produce dim rows from `metadata_<uuid>.json`.
+    * the dim append so a failed file contributes zero dim rows). Shared by
+    * the batch [[run]] and the streaming foreachBatch body so both modes
+    * produce dim rows from `metadata_<uuid>.json`.
     *
     * The batch is one row per file, as large as the file list the driver
     * already holds, so its rows come to the driver in one job (bounded by
     * [[Enrich.DimRowCap]]) and are validated and numbered there
-    * ([[Enrich.numberDim]]). An id carried by two files of the batch is
-    * numbered once, from the first file in path order; each later file is
-    * ledgered failed and stays in `incoming/`.
+    * ([[Enrich.numberDim]]). A file passes only when it is named
+    * `metadata_<uuid>.json` and parses to exactly one row whose id is
+    * that uuid; a JSON array of objects fails whole. An id carried by two
+    * passing files of the batch is numbered once, from the first file in
+    * path order ([[decide]]).
     *
     * Keyed by the dim, so idempotent: an id `state` says the dim already
     * holds is ledgered success with zero rows and archived, not numbered
@@ -299,8 +308,8 @@ object FilePipeline {
     * are numbered from `state`'s high-water mark. The ledger rows are
     * returned for the caller to append ([[ingestBatch]]). */
   def ingestMetadataFiles(spark: SparkSession, layout: Layout,
-      metaFiles: Seq[Path], state: Ledger.RunState): MetaIngest = {
-    if (metaFiles.isEmpty) return MetaIngest(0L, Seq.empty, Seq.empty)
+      metaFiles: Seq[Path], state: Ledger.RunState): StageIngest = {
+    if (metaFiles.isEmpty) return StageIngest(0L, Seq.empty, Seq.empty)
     val t0 = new Timestamp(System.currentTimeMillis())
     // one JSON object per file (not JSONL) — multiLine, like json.load
     val batch = spark.read.schema(Schemas.metadataJsonSchema)
@@ -317,22 +326,16 @@ object FilePipeline {
       .collect().toSeq
     Enrich.requireDimRows(rows.size.toLong, Enrich.DimRowCap,
       "ingestMetadataFiles")
-    // a row is valid when its id is the one its file name carries; the
-    // name is matched once per file, here on the driver
-    val pathOrder = metaFiles.map(fileKey).zipWithIndex.toMap
-    val keyed = rows.map(r =>
-      fileKey(new Path(new java.net.URI(r.getAs[String]("_file")))) -> r)
-      .filter { case (k, r) =>
-        val id = r.getAs[String]("simulation_id")
-        id != null && metaNameId(k).contains(id)
-      }
-    val firsts = keyed.sortBy { case (k, _) => pathOrder(k) }
-      .distinctBy { case (_, r) => r.getAs[String]("simulation_id") }
-    val validFiles = keyed.map(_._1).toSet
-    val acceptedFiles = firsts.map(_._1).toSet
-    val fresh = firsts.filterNot { case (_, r) =>
-      state.dimNums.contains(r.getAs[String]("simulation_id")) }
-    val numberedFiles = fresh.map(_._1).toSet
+    def idOf(r: Row) = r.getAs[String]("simulation_id")
+    val byFile = rows.groupBy(r => fileKey(r.getAs[String]("_file")))
+    val decided = decide(metaFiles, p =>
+      byFile.getOrElse(fileKey(p), Nil) match {
+        case Seq(r) if fileName(p).exists(n => n.wellFormed && n.id == idOf(r)) =>
+          None
+        case _ => Some("metadata validation failed or id/filename mismatch")
+      })
+    val fresh = decided.collect { case (p, None) => p -> byFile(fileKey(p)).head }
+      .filterNot { case (_, r) => state.dimNums.contains(idOf(r)) }
     if (fresh.nonEmpty) {
       val numbered = spark.createDataFrame(
         Enrich.numberDim(fresh.map(_._2), state.highWaterMark).asJava,
@@ -342,19 +345,9 @@ object FilePipeline {
       layout.jdbc.foreach(t =>
         graft.sources.JdbcSink.append(numbered, t, "dim_rxn"))
     }
-    val t1 = new Timestamp(System.currentTimeMillis())
-    val ledgerRows = metaFiles.flatMap(p => simId(p).map { id =>
-      val k = fileKey(p)
-      if (acceptedFiles(k))
-        Ledger.Entry(id, Ledger.EtlTypeMetadata, t0, t1,
-          if (numberedFiles(k)) 1L else 0L, "success", None)
-      else
-        Ledger.Entry(id, Ledger.EtlTypeMetadata, t0, t1, 0L, "failed", Some(
-          if (validFiles(k)) "duplicate simulation_id in batch"
-          else "metadata validation failed or id/filename mismatch"))
-    })
-    MetaIngest(fresh.size.toLong,
-      metaFiles.filter(p => acceptedFiles(fileKey(p))), ledgerRows)
+    val numberedFiles = fresh.map(_._1).toSet
+    outcome(Ledger.EtlTypeMetadata, t0, decided,
+      p => if (numberedFiles(p)) 1L else 0L)
   }
 
   /** Both stages over one batch of files, then one ledger append holding
@@ -365,7 +358,7 @@ object FilePipeline {
     * selects the same files again and the metadata stage reconciles any
     * dim rows this one left. `state` supplies the dim's keys. */
   def ingestBatch(spark: SparkSession, layout: Layout, metaFiles: Seq[Path],
-      csvFiles: Seq[Path], state: Ledger.RunState): (MetaIngest, CsvIngest) = {
+      csvFiles: Seq[Path], state: Ledger.RunState): (StageIngest, StageIngest) = {
     val meta = ingestMetadataFiles(spark, layout, metaFiles, state)
     val csv = ingestCsvFiles(spark, layout, csvFiles)
     Ledger.append(spark, layout.ledger, meta.ledgerRows ++ csv.ledgerRows)
@@ -378,8 +371,8 @@ object FilePipeline {
     run(spark, Layout(root))
 
   def run(spark: SparkSession, layout: Layout): RunReport = {
-    val listedMeta = listIncoming(spark, layout, ".json")
-    val listedCsv = listIncoming(spark, layout, ".csv")
+    val (listedMeta, listedCsv) = listIncoming(spark, layout)
+      .filter(fileName(_).isDefined).partition(_.getName.endsWith(".json"))
     // one read of ledger and dim keys serves both stages. Nothing listed,
     // nothing read — an idle run launches no job
     val state =
@@ -398,7 +391,7 @@ object FilePipeline {
     val archived = archiveFiles(spark, layout, ingest.okFiles ++ meta.okFiles)
 
     RunReport(csvFiles.size, ingest.rowsInserted, metaFiles.size,
-      meta.dimRowsInserted, archived, meta.failures + ingest.failures)
+      meta.rowsInserted, archived, meta.failures + ingest.failures)
   }
 
   /** K5 backfill — enrich fact rows whose metadata arrived in a later run.

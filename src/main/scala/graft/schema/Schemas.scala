@@ -28,29 +28,10 @@ object Schemas {
     "t (sec)" -> "rxn_time"
   )
 
-  /** Pandas index artifact column, dropped when present
-    * (file_manager.py:61-62). */
-  val indexArtifactCol = "Unnamed: 0"
-
   /** Required post-rename columns (required_cols.json:2-9). */
   val requiredCols: Seq[String] = Seq(
     "simulation_id", "ca", "cb", "cc", "cd",
     "temperature", "t_sensor", "rxn_time")
-
-  /** Raw incoming CSV schema — the keys of [[columnMap]] in file order,
-    * with the optional pandas index artifact. Explicit DoubleType for all
-    * measurements (the reference lets pandas infer; we do not). */
-  val rawCsvSchema: StructType = StructType(Seq(
-    StructField(indexArtifactCol, LongType, nullable = true),
-    StructField("SimulationID", StringType, nullable = true),
-    StructField("CA (mol/m^3)", DoubleType, nullable = true),
-    StructField("CB (mol/m^3)", DoubleType, nullable = true),
-    StructField("CC (mol/m^3)", DoubleType, nullable = true),
-    StructField("CD (mol/m^3)", DoubleType, nullable = true),
-    StructField("T (K)", DoubleType, nullable = true),
-    StructField("Tsensor (K)", DoubleType, nullable = true),
-    StructField("t (sec)", DoubleType, nullable = true)
-  ))
 
   /** fact_sim target schema (create_tables.sql:2-14). `row_id` and
     * `simulation_num` are engine-generated, not in the CSV. */

@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -71,8 +72,8 @@ object Probe {
   private def time(spark: SparkSession, dir: String, names: Seq[String]): Unit = {
     val c = new Counters
     spark.sparkContext.addSparkListener(c)
-    // the listener bus is asynchronous: let it drain before reading
-    def settle(): Unit = Thread.sleep(300)
+    // the listener bus is asynchronous: deliver every event before reading
+    def settle(): Unit = GraftBus.drain(spark.sparkContext)
     println(f"${"query"}%-26s ${"s/run"}%7s ${"jobs"}%5s ${"stage"}%5s ${"tasks"}%6s ${"runS"}%7s ${"cpuS"}%7s ${"gcS"}%6s ${"shR_MB"}%7s ${"shW_MB"}%7s ${"spillMB"}%7s")
     names.foreach { n =>
       try {

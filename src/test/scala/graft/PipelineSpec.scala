@@ -399,14 +399,60 @@ class PipelineSpec extends SparkSpecBase {
     val f = TestFixtures.writeCsv(root, "2024-03-01", 94, 3)
     Files.move(f, f.resolveSibling(s"foo_$id.csv"))
     TestFixtures.writeCsv(root, "2024-03-01", 95, 3)
+    // the name check does not depend on the file having a data row
+    val headerOnlyId = TestFixtures.simUuid(100)
+    val h = TestFixtures.writeCsv(root, "2024-03-01", 100, 0)
+    Files.move(h, h.resolveSibling(s"foo_$headerOnlyId.csv"))
+    // nor on the stage: a misnamed metadata file fails too
+    val metaId = TestFixtures.simUuid(101)
+    val m = TestFixtures.writeMetadata(root, "2024-03-01", 101)
+    Files.move(m, m.resolveSibling(s"foo_$metaId.json"))
     val r = FilePipeline.run(spark, root.toString)
-    assert(r.csvFilesIngested == 2 && r.factRowsInserted == 3)
+    assert(r.csvFilesIngested == 3 && r.factRowsInserted == 3)
+    assert(r.metadataFilesIngested == 1 && r.dimRowsInserted == 0)
+    assert(r.failures == 3 && r.filesArchived == 1)
+    val layout = FilePipeline.Layout(root.toString)
+    assert(failedMessages(layout) == Map(
+      id -> "in-file SimulationID disagrees with filename",
+      headerOnlyId -> "in-file SimulationID disagrees with filename"))
+    assert(Ledger.read(spark, layout.ledger)
+      .filter(col("etl_type") === Ledger.EtlTypeMetadata)
+      .select("simulation_id", "status").collect()
+      .map(x => (x.getString(0), x.getString(1))).toSeq ==
+      Seq((metaId, "failed")))
+    Seq(s"foo_$id.csv", s"foo_$headerOnlyId.csv", s"foo_$metaId.json")
+      .foreach(n => assert(Files.exists(root.resolve(s"incoming/2024-03-01/$n"))))
+    assertLedgerCountsMatchFact(layout)
+    // no success was ledgered for the misnamed ids: their real files
+    // are still selected and ingested
+    TestFixtures.writeCsv(root, "2024-03-02", 100, 2)
+    TestFixtures.writeMetadata(root, "2024-03-02", 101)
+    val r2 = FilePipeline.run(spark, root.toString)
+    assert(r2.factRowsInserted == 2 && r2.dimRowsInserted == 1)
+    assert(Files.exists(root.resolve(s"archive/2024-03-02/rxndata_$headerOnlyId.csv")))
+    assert(Files.exists(root.resolve(s"archive/2024-03-02/metadata_$metaId.json")))
+  }
+
+  test("a metadata file holding a JSON array of objects is quarantined") {
+    val root = TestFixtures.tempRoot("pipe-metaarray")
+    val id = TestFixtures.simUuid(102)
+    val f = TestFixtures.writeMetadata(root, "2024-03-01", 102)
+    val one = Files.readString(f)
+    // two objects, both carrying the file's own id
+    Files.writeString(f, s"[$one,\n${one.replace("converged", "timeout")}]")
+    TestFixtures.writeMetadata(root, "2024-03-01", 103)
+    val r = FilePipeline.run(spark, root.toString)
+    assert(r.metadataFilesIngested == 2 && r.dimRowsInserted == 1)
     assert(r.failures == 1 && r.filesArchived == 1)
     val layout = FilePipeline.Layout(root.toString)
-    assert(failedMessages(layout) ==
-      Map(id -> "in-file SimulationID disagrees with filename"))
-    assert(Files.exists(root.resolve(s"incoming/2024-03-01/foo_$id.csv")))
-    assertLedgerCountsMatchFact(layout)
+    assert(FilePipeline.readDim(spark, layout).select("simulation_id")
+      .collect().map(_.getString(0)).toSeq == Seq(TestFixtures.simUuid(103)))
+    assert(Ledger.read(spark, layout.ledger)
+      .filter(col("status") === "failed")
+      .select("simulation_id", "error_message").collect()
+      .map(x => (x.getString(0), x.getString(1))).toSeq ==
+      Seq((id, "metadata validation failed or id/filename mismatch")))
+    assert(Files.exists(f))
   }
 
   test("a non-numeric measurement fails the run before anything commits") {
@@ -484,7 +530,7 @@ class PipelineSpec extends SparkSpecBase {
 
   test("the fact stage caches nothing and evaluates no per-row regex") {
     import scala.collection.mutable
-    import org.apache.spark.SpecBus
+    import org.apache.spark.GraftBus
     import org.apache.spark.sql.catalyst.expressions.RegExpExtract
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -508,11 +554,11 @@ class PipelineSpec extends SparkSpecBase {
     }
     val sc = spark.sparkContext
     val cachedBefore = sc.getPersistentRDDs.size
-    SpecBus.drain(sc)
+    GraftBus.drain(sc)
     spark.listenerManager.register(listener)
     val r = try {
       val r = FilePipeline.run(spark, root.toString)
-      SpecBus.drain(sc)
+      GraftBus.drain(sc)
       r
     } finally spark.listenerManager.unregister(listener)
     assert(r.factRowsInserted == 10 && r.failures == 0)

@@ -25,13 +25,17 @@ class PropertySpec extends SparkSpecBase {
     }, minTests = 100)
   }
 
-  test("missingColumns reports exactly the dropped required columns") {
-    import spark.implicits._
-    val base = Seq.empty[(String, Double, Double, Double, Double, Double, Double, Double)]
-      .toDF(Schemas.requiredCols: _*)
+  test("shape reports exactly the dropped required columns") {
+    // the reference's header, pandas index artifact included
+    val header = "Unnamed: 0" +: Schemas.columnMap.keys.toSeq
     check(Prop.forAll(Gen.someOf(Schemas.requiredCols)) { dropped =>
-      val df = dropped.foldLeft(base)((d, c) => d.drop(c))
-      Clean.missingColumns(df).toSet == dropped.toSet
+      val kept = header.filterNot(c =>
+        dropped.contains(Schemas.columnMap.getOrElse(c, c)))
+      Clean.shape(kept.mkString(",")) match {
+        case Left(missing) => missing.toSet == dropped.toSet
+        case Right(pairs) => dropped.isEmpty &&
+          pairs.map(_._1) == Schemas.requiredCols
+      }
     })
   }
 

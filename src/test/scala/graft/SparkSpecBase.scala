@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.SpecBus
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,11 +24,11 @@ trait SparkSpecBase extends AnyFunSuite {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    SpecBus.drain(sc)
+    GraftBus.drain(sc)
     sc.addSparkListener(listener)
     try {
       body
-      SpecBus.drain(sc)
+      GraftBus.drain(sc)
     } finally sc.removeSparkListener(listener)
     jobs.get
   }
