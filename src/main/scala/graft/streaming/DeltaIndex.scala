@@ -4,24 +4,26 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** The shared write/read recipe for ADDITIVE streaming delta indexes —
-  * one definition of the three moves every delta-index module makes:
+/** The one `batch_id` sink recipe every streaming stage in this package
+  * follows — its moves are defined here and nowhere else:
   *
   *   - delete the batch's own `batch_id=` partition up front, so a
   *     replay rewrites byte-identically and an EMPTIED replay clears
   *     stale rows instead of keeping them;
-  *   - write the batch's delta rows tagged with `src_batch` provenance
-  *     under that partition (after any data files the delta accounts
-  *     for, so delta-present implies data-present);
+  *   - overwrite ONLY that partition with the batch's rows; index and
+  *     delta rows also carry their origin batch as the `src_batch` data
+  *     column (after any data files the delta accounts for, so
+  *     delta-present implies data-present);
   *   - read the whole index under the refuse-foreign-state contract: a
   *     missing or just-bootstrapped dir is EMPTY, anything other than
   *     `batch_id=` partitions carrying the expected schema is refused,
-  *     never silently summed.
+  *     never silently summed;
+  *   - compact into the reserved `batch_id=-1` partition: materialize →
+  *     commit −1 → delete the sources, `src_batch` kept verbatim so a
+  *     batch replayed after compaction still excludes its own rows.
   *
-  * [[StreamingCrawl]] and [[StreamingRedirects]] build on this; the
-  * five older indexed modules (Shards, DomainCaps, NearDup, Quantiles,
-  * RepeatSpans) predate it and keep their in-place copies — several
-  * interleave module-specific compaction into the same moves. */
+  * Each module keeps only its own decisions: its schema, its
+  * compaction fold, and which sinks it writes. */
 private[streaming] object DeltaIndex {
 
   /** Delete `outDir/batch_id=N` if present (call FIRST, even for an
@@ -33,17 +35,20 @@ private[streaming] object DeltaIndex {
     if (fs.exists(p)) fs.delete(p, true)
   }
 
-  /** Write `delta` as the batch's rows: `src_batch` + `batch_id`
-    * appended, one file (delta frames are aggregate-sized). */
-  def writeDelta(delta: DataFrame, batchId: Long, outDir: String): Unit =
-    delta
-      .withColumn("src_batch", lit(batchId))
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1)
+  /** Write `df` as partition `batch_id=N` of `outDir`, overwriting that
+    * partition only (dynamic partition overwrite). */
+  def writeBatch(df: DataFrame, batchId: Long, outDir: String): Unit =
+    df.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(outDir)
+
+  /** Write `delta` as the batch's rows: `src_batch` + `batch_id`
+    * appended, one file (delta frames are aggregate-sized). */
+  def writeDelta(delta: DataFrame, batchId: Long, outDir: String): Unit =
+    writeBatch(delta.withColumn("src_batch", lit(batchId)).coalesce(1),
+      batchId, outDir)
 
   /** Read all committed delta rows under the shared contract. `what`
     * names the index in refusal messages. */
@@ -71,6 +76,9 @@ private[streaming] object DeltaIndex {
         s"$what at $outDir contains non-partition entries " +
           s"${stray.mkString(", ")} next to its batch_id= partitions — " +
           "refusing to fold foreign files into the index")
+      // a forced-schema read would null-fill a missing column (e.g. a
+      // pre-provenance index without src_batch), and a src_batch =!= N
+      // replay filter over nulls drops every row silently
       val onDisk = spark.read.parquet(outDir).schema.fieldNames.toSet
       val missing = schema.fieldNames.filterNot(onDisk)
       require(missing.isEmpty,
@@ -78,5 +86,26 @@ private[streaming] object DeltaIndex {
           s"${missing.mkString(", ")} — refusing to read it")
       spark.read.schema(schema).parquet(outDir)
     }
+  }
+
+  /** Fold every partition but `batch_id=-1` into `batch_id=-1`: read
+    * the whole index under [[readDeltas]], apply the module's `fold`
+    * (which must keep each kept row's `src_batch`), materialize BEFORE
+    * overwriting what was read, commit −1, then delete the sources. A
+    * crash between the commit and the deletes leaves duplicate rows,
+    * which each module's fold tolerates and the next compaction drops.
+    * A missing dir is a no-op. */
+  def compact(spark: SparkSession, dir: String, schema: StructType,
+      what: String)(fold: DataFrame => DataFrame): Unit = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(root)) return
+    val old = fs.listStatus(root).map(_.getPath)
+      .filter(p => p.getName.startsWith("batch_id=") &&
+        p.getName != "batch_id=-1")
+    val compacted = fold(readDeltas(spark, dir, schema, what))
+      .localCheckpoint(eager = false)
+    writeBatch(compacted, -1L, dir)
+    old.foreach(p => fs.delete(p, true))
   }
 }

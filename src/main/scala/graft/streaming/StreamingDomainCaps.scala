@@ -46,29 +46,12 @@ object StreamingDomainCaps {
     StructField("src_batch", LongType),
     StructField("batch_id", LongType)))
 
+  private val what = "StreamingDomainCaps admission index"
+
   /** Read the admission index — missing/bare reads empty, anything
-    * unexpected fails loudly (the shared index-read contract). */
-  def readIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val entries =
-      if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName) else Array.empty[String]
-    if (!entries.exists(_.startsWith("batch_id="))) {
-      val stray = entries.filterNot(n => n.startsWith("_") || n.startsWith("."))
-      require(stray.isEmpty,
-        s"admission index at $indexDir has no batch_id= partitions but " +
-          s"contains ${stray.mkString(", ")} — not a StreamingDomainCaps " +
-          "index; refusing to read it as empty")
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], indexSchema)
-    } else {
-      val onDisk = spark.read.parquet(indexDir).schema.fieldNames.toSet
-      val missing = indexSchema.fieldNames.filterNot(onDisk)
-      require(missing.isEmpty,
-        s"admission index at $indexDir is missing column(s) " +
-          s"${missing.mkString(", ")}; rebuild it")
-      spark.read.schema(indexSchema).parquet(indexDir)
-    }
-  }
+    * unexpected fails loudly ([[DeltaIndex.readDeltas]]). */
+  def readIndex(spark: SparkSession, indexDir: String): DataFrame =
+    DeltaIndex.readDeltas(spark, indexDir, indexSchema, what)
 
   /** One micro-batch over (doc_id, url) rows. Package-visible for
     * direct testing without a streaming harness. */
@@ -77,11 +60,8 @@ object StreamingDomainCaps {
       cap: Int = UrlCurate.DomainCap,
       robots: Boolean = false): Unit = {
     val spark = batch.sparkSession
-    Seq(admittedDir, rejectedDir, indexDir).foreach { dir =>
-      val p = new org.apache.hadoop.fs.Path(dir, s"batch_id=$batchId")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    Seq(admittedDir, rejectedDir, indexDir)
+      .foreach(DeltaIndex.deleteBatchPartition(spark, _, batchId))
     if (batch.isEmpty) return
     val cur = UrlCurate.blocklistOf(UrlCurate.registrableDomainOf(
         UrlCurate.canonicalizeOf(batch)))
@@ -132,15 +112,10 @@ object StreamingDomainCaps {
       .unionByName(robotsRejected)
       .unionByName(ranked.filter(col("_n") + col("_rk") > cap)
         .select(col("doc_id"), col("domain"), lit("over_cap").as("reason")))
-    def writeBatch(df: DataFrame, dir: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(dir)
-    writeBatch(admitted, admittedDir)
-    writeBatch(rejected, rejectedDir)
-    writeBatch(admitted.select(col("domain"), col("doc_id"))
-      .withColumn("src_batch", lit(batchId)), indexDir)
+    DeltaIndex.writeBatch(admitted, batchId, admittedDir)
+    DeltaIndex.writeBatch(rejected, batchId, rejectedDir)
+    DeltaIndex.writeBatch(admitted.select(col("domain"), col("doc_id"))
+      .withColumn("src_batch", lit(batchId)), batchId, indexDir)
   }
 
   /** Start the stage over a streaming (doc_id, url) frame. With
@@ -159,26 +134,12 @@ object StreamingDomainCaps {
       .start()
 
   /** Compact the admission index into the reserved batch_id=-1
-    * partition — the shared recipe: dedup by doc_id keeping the
-    * min-src_batch copy WITH its provenance, materialize → commit −1 →
-    * delete sources. */
-  def compactIndex(spark: SparkSession, indexDir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return
-    val old = fs.listStatus(root).map(_.getPath)
-      .filter(p => p.getName.startsWith("batch_id=") &&
-        p.getName != "batch_id=-1")
-    val compacted = readIndex(spark, indexDir)
-      .groupBy(col("doc_id"))
-      .agg(min(struct(col("src_batch"), col("domain"))).as("first"))
-      .select(col("first.domain").as("domain"), col("doc_id"),
-        col("first.src_batch").as("src_batch"))
-      .localCheckpoint(eager = false)
-    compacted.withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(indexDir)
-    old.foreach(p => fs.delete(p, true))
-  }
+    * partition ([[DeltaIndex.compact]]): dedup by doc_id keeping the
+    * min-src_batch copy WITH its provenance. */
+  def compactIndex(spark: SparkSession, indexDir: String): Unit =
+    DeltaIndex.compact(spark, indexDir, indexSchema, what)(
+      _.groupBy(col("doc_id"))
+        .agg(min(struct(col("src_batch"), col("domain"))).as("first"))
+        .select(col("first.domain").as("domain"), col("doc_id"),
+          col("first.src_batch").as("src_batch")))
 }

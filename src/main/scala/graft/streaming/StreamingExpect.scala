@@ -18,34 +18,28 @@ import graft.ops.Expect
   * salvage is a policy the caller can implement downstream of
   * quarantine; the gate's job is containment.
   *
-  * Idempotence: both sinks partition by batch_id and clear their own
-  * partition before writing (same replay posture as
-  * [[StreamingNearDup]]/[[StreamingCdc]]).
+  * Idempotence: all sinks partition by batch_id and clear their own
+  * partition before writing, even for an empty batch (the
+  * [[DeltaIndex]] recipe).
   */
 object StreamingExpect {
 
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
       expectations: Seq[Expect.Expectation], liveDir: String,
       quarantineDir: String): Unit = {
-    if (batch.isEmpty) return
+    // clear all three partitions BEFORE the empty check: an emptied
+    // replay must not keep the earlier attempt's rows
     val spark = batch.sparkSession
-    Seq(liveDir, quarantineDir, quarantineDir + "_reports").foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d, s"batch_id=$batchId")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    Seq(liveDir, quarantineDir, quarantineDir + "_reports")
+      .foreach(DeltaIndex.deleteBatchPartition(spark, _, batchId))
+    if (batch.isEmpty) return
     val staged = batch.localCheckpoint(eager = false) // audit and write see ONE snapshot
     val rep = Expect.report(staged, expectations).localCheckpoint(eager = false)
     val green = rep.agg(min(col("pass"))).head().getInt(0) == 1
-    def write(df: DataFrame, dir: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(dir)
-    if (green) write(staged, liveDir)
+    if (green) DeltaIndex.writeBatch(staged, batchId, liveDir)
     else {
-      write(staged, quarantineDir)
-      write(rep, quarantineDir + "_reports")
+      DeltaIndex.writeBatch(staged, batchId, quarantineDir)
+      DeltaIndex.writeBatch(rep, batchId, quarantineDir + "_reports")
     }
   }
 

@@ -50,39 +50,12 @@ object StreamingNearDup {
     StructField("src_batch", LongType),
     StructField("batch_id", LongType)))
 
-  /** Read the signature index, tolerating its absence (first batch). */
-  def readIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    // probe the path explicitly: ONLY a genuinely-missing index (first
-    // batch) reads as empty — a corrupt or schema-broken index must fail
-    // loudly, not silently under-flag a batch (a blanket AnalysisException
-    // catch here used to swallow both cases). Verify the on-disk columns
-    // too: a forced-schema read would fill a missing src_batch with
-    // nulls, and the =!= filter over nulls drops every row silently.
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val entries =
-      if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName) else Array.empty[String]
-    val hasParts = entries.exists(_.startsWith("batch_id="))
-    if (!hasParts) {
-      // legitimately empty only when missing, bare, or holding nothing
-      // beyond write-job metadata (_SUCCESS etc.); anything else is not
-      // our index and must not silently read as empty
-      val stray = entries.filterNot(n => n.startsWith("_") || n.startsWith("."))
-      require(stray.isEmpty,
-        s"signature index at $indexDir has no batch_id= partitions but " +
-          s"contains ${stray.mkString(", ")} — not a StreamingNearDup " +
-          "index; refusing to read it as empty")
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sigSchema)
-    } else {
-      val onDisk = spark.read.parquet(indexDir).schema.fieldNames.toSet
-      val missing = sigSchema.fieldNames.filterNot(onDisk)
-      require(missing.isEmpty,
-        s"signature index at $indexDir is missing column(s) " +
-          s"${missing.mkString(", ")} — not a StreamingNearDup index " +
-          "(or pre-provenance format); rebuild it")
-      spark.read.schema(sigSchema).parquet(indexDir)
-    }
-  }
+  private val what = "StreamingNearDup signature index"
+
+  /** Read the signature index: missing (first batch) reads empty, a
+    * foreign or pre-provenance index is refused ([[DeltaIndex.readDeltas]]). */
+  def readIndex(spark: SparkSession, indexDir: String): DataFrame =
+    DeltaIndex.readDeltas(spark, indexDir, sigSchema, what)
 
   /** One micro-batch: flag near-dups of the index AND of lower-id docs
     * within the batch itself (without the self pass, two copies arriving
@@ -93,16 +66,11 @@ object StreamingNearDup {
       indexDir: String, admittedDir: String, flaggedDir: String,
       tau: Double): Unit = {
     val spark = batch.sparkSession
-    // a re-run attempt must not inherit the failed attempt's partition:
-    // dynamic overwrite only replaces partitions PRESENT in the new
-    // data, so a re-run that computes an empty set (or an empty batch)
-    // would otherwise leave the stale rows — e.g. a doc both flagged
-    // and admitted. Drop batch_id=N from every sink up front.
-    Seq(flaggedDir, admittedDir, indexDir).foreach { dir =>
-      val p = new org.apache.hadoop.fs.Path(dir, s"batch_id=$batchId")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    // a re-run attempt must not inherit the failed attempt's partition
+    // (e.g. a doc both flagged and admitted): drop batch_id=N from every
+    // sink up front
+    Seq(flaggedDir, admittedDir, indexDir)
+      .foreach(DeltaIndex.deleteBatchPartition(spark, _, batchId))
     if (batch.isEmpty) return
     val sigs = Dedup.minhashSignaturesOf(batch).localCheckpoint(eager = false)
     // idempotent re-run: exclude THIS batch's prior contribution by its
@@ -121,19 +89,12 @@ object StreamingNearDup {
       .select(col("doc_id"), col("best.near_dup_of").as("near_dup_of"),
         col("best.est_jaccard").as("est_jaccard"))
       .localCheckpoint(eager = false)
-    // idempotent per batch: each write lands in its own batch_id
-    // partition (cleared above) and overwrites ONLY that partition
-    def writeBatch(df: DataFrame, dir: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(dir)
-    writeBatch(flagged, flaggedDir)
-    writeBatch(batch.join(flagged.select(col("doc_id")),
-      Seq("doc_id"), "left_anti"), admittedDir)
-    writeBatch(sigs.join(flagged.select(col("doc_id")),
+    DeltaIndex.writeBatch(flagged, batchId, flaggedDir)
+    DeltaIndex.writeBatch(batch.join(flagged.select(col("doc_id")),
+      Seq("doc_id"), "left_anti"), batchId, admittedDir)
+    DeltaIndex.writeBatch(sigs.join(flagged.select(col("doc_id")),
       Seq("doc_id"), "left_anti")
-      .withColumn("src_batch", lit(batchId)), indexDir)
+      .withColumn("src_batch", lit(batchId)), batchId, indexDir)
   }
 
   /** Start the stage over a streaming (doc_id, text) frame. */
@@ -149,35 +110,18 @@ object StreamingNearDup {
       .start()
 
   /** Compact the signature index into the single reserved
-    * `batch_id=-1` partition — the [[StreamingRepeatSpans.compactIndex]]
-    * recipe applied to the signatures: one partition directory per
-    * micro-batch otherwise accumulates forever (small-files, not size —
-    * the index stays 8×64 bytes per admitted doc). Dedup by doc_id
-    * keeping the min-src_batch copy is defensive only (admission writes
-    * each doc once). Each kept row's `src_batch` provenance is preserved
-    * so a later replay of any batch can still exclude its own rows (see
-    * the class doc). Same crash ordering: materialize → commit −1 →
-    * delete sources; duplicates from an in-between crash admit/flag
-    * identically (the banded join is set-shaped) and vanish next
-    * compaction. Cadence is the caller's knob (every N batches or a
+    * `batch_id=-1` partition ([[DeltaIndex.compact]]): one partition
+    * directory per micro-batch otherwise accumulates forever
+    * (small-files, not size — the index stays 8×64 bytes per admitted
+    * doc). Dedup by doc_id keeping the min-src_batch copy is defensive
+    * only (admission writes each doc once); duplicates from a crash
+    * between commit and delete admit/flag identically (the banded join
+    * is set-shaped). Cadence is the caller's knob (every N batches or a
     * maintenance job); flag equality is spec-pinned. */
-  def compactIndex(spark: SparkSession, indexDir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return
-    val old = fs.listStatus(root).map(_.getPath)
-      .filter(p => p.getName.startsWith("batch_id=") &&
-        p.getName != "batch_id=-1")
-    val compacted = readIndex(spark, indexDir)
-      .groupBy(col("doc_id"))
-      .agg(min(struct(col("src_batch"), col("sig"))).as("first"))
-      .select(col("doc_id"), col("first.sig").as("sig"),
-        col("first.src_batch").as("src_batch"))
-      .localCheckpoint(eager = false) // materialize BEFORE overwriting what was read
-    compacted.withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(indexDir)
-    old.foreach(p => fs.delete(p, true))
-  }
+  def compactIndex(spark: SparkSession, indexDir: String): Unit =
+    DeltaIndex.compact(spark, indexDir, sigSchema, what)(
+      _.groupBy(col("doc_id"))
+        .agg(min(struct(col("src_batch"), col("sig"))).as("first"))
+        .select(col("doc_id"), col("first.sig").as("sig"),
+          col("first.src_batch").as("src_batch")))
 }

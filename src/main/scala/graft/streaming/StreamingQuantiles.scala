@@ -20,7 +20,7 @@ import graft.functions.{DetMix, HashSample}
   * batches, spec-pinned. State is ≤ k rows × groups after compaction
   * (24 B + value per row), never the stream.
   *
-  * Recipes inherited from the round-11 streaming family:
+  * State follows the [[DeltaIndex]] recipe:
   *   - exactly-once: index/count/output partitions for batch N are
   *     deleted up front; a replay rewrites byte-identically;
   *   - provenance: every index row carries `src_batch` as a DATA
@@ -29,12 +29,12 @@ import graft.functions.{DetMix, HashSample}
   *     k smallest) — the replay filter excludes on `src_batch`, never
   *     the partition column, so a batch replayed AFTER compaction
   *     cannot count its own folded rows as corpus state;
-  *   - counts are ADDITIVE DELTAS (the StreamingShards recipe): one
-  *     (grp, n, src_batch) row per group per batch, summed at read
-  *     time — a batch whose sample rows were all evicted by later
-  *     compaction still counts, so `n` stays exact forever;
-  *   - a corrupt or pre-provenance index fails loudly, never reads as
-  *     empty.
+  *   - counts are ADDITIVE DELTAS: one (grp, n, src_batch) row per
+  *     group per batch, summed at read time — a batch whose sample rows
+  *     were all evicted by later compaction still counts, so `n` stays
+  *     exact forever;
+  *   - a foreign, corrupt or pre-provenance index fails loudly, never
+  *     reads as empty.
   */
 object StreamingQuantiles {
 
@@ -55,36 +55,14 @@ object StreamingQuantiles {
     StructField("src_batch", LongType),
     StructField("batch_id", LongType)))
 
-  private def readDir(spark: SparkSession, dir: String,
-      schema: StructType, what: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val entries =
-      if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName)
-      else Array.empty[String]
-    val hasParts = entries.exists(_.startsWith("batch_id="))
-    if (!hasParts) {
-      val stray = entries.filterNot(n => n.startsWith("_") || n.startsWith("."))
-      require(stray.isEmpty,
-        s"$what at $dir has no batch_id= partitions but contains " +
-          s"${stray.mkString(", ")} — refusing to read it as empty")
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    } else {
-      val onDisk = spark.read.parquet(dir).schema.fieldNames.toSet
-      val missing = schema.fieldNames.filterNot(onDisk)
-      require(missing.isEmpty,
-        s"$what at $dir is missing column(s) ${missing.mkString(", ")} " +
-          "— not a StreamingQuantiles artifact (or pre-provenance " +
-          "format); rebuild it")
-      spark.read.schema(schema).parquet(dir)
-    }
-  }
+  private val what = "StreamingQuantiles sample index"
 
   def readIndex(spark: SparkSession, indexDir: String): DataFrame =
-    readDir(spark, indexDir, idxSchema, "quantile sample index")
+    DeltaIndex.readDeltas(spark, indexDir, idxSchema, what)
 
   def readCounts(spark: SparkSession, countDir: String): DataFrame =
-    readDir(spark, countDir, cntSchema, "quantile count deltas")
+    DeltaIndex.readDeltas(spark, countDir, cntSchema,
+      "StreamingQuantiles count deltas")
 
   /** Quantile snapshot from state rows + count rows: one [[HashSample]]
     * aggregate realizes k-smallest-of-union, then the q141 ceil-rank
@@ -117,12 +95,8 @@ object StreamingQuantiles {
       indexDir: String, countDir: String, outDir: String,
       k: Int = K): Unit = {
     val spark = batch.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
-    Seq(indexDir, countDir, outDir).foreach { dir =>
-      val p = new org.apache.hadoop.fs.Path(dir, s"batch_id=$batchId")
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    Seq(indexDir, countDir, outDir)
+      .foreach(DeltaIndex.deleteBatchPartition(spark, _, batchId))
     if (batch.isEmpty) return
     // replay safety: exclude THIS batch's prior contribution by
     // provenance (compaction may have folded it into batch_id=-1)
@@ -143,27 +117,14 @@ object StreamingQuantiles {
         Window.partitionBy(col("grp")).orderBy(col("h"), col("key"))))
       .filter(col("_rn") <= k).drop("_rn")
       .localCheckpoint(eager = false)
-    batchK.withColumn("src_batch", lit(batchId))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(indexDir)
-    batch.groupBy(col("grp")).agg(count(lit(1)).as("n"))
-      .withColumn("src_batch", lit(batchId))
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(countDir)
-    val newCounts = batch.groupBy(col("grp"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("src_batch", lit(batchId))
-    snapshotOf(prior.unionByName(batchK),
-        priorCounts.unionByName(newCounts), k)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(outDir)
+    DeltaIndex.writeBatch(batchK.withColumn("src_batch", lit(batchId)),
+      batchId, indexDir)
+    val counts = batch.groupBy(col("grp")).agg(count(lit(1)).as("n"))
+    DeltaIndex.writeDelta(counts, batchId, countDir)
+    DeltaIndex.writeBatch(snapshotOf(prior.unionByName(batchK),
+        priorCounts.unionByName(counts.withColumn("src_batch",
+          lit(batchId))), k),
+      batchId, outDir)
   }
 
   /** Fold every index partition into `batch_id=-1`, keeping only each
@@ -173,24 +134,11 @@ object StreamingQuantiles {
     * sized and their per-src_batch identity is what replay exclusion
     * filters on). */
   def compactIndex(spark: SparkSession, indexDir: String,
-      k: Int = K): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return
-    val old = fs.listStatus(root).map(_.getPath)
-      .filter(p => p.getName.startsWith("batch_id=") &&
-        p.getName != "batch_id=-1")
-    val compacted = readIndex(spark, indexDir)
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("grp")).orderBy(col("h"), col("key"))))
-      .filter(col("_rn") <= k).drop("_rn", "batch_id")
-      .localCheckpoint(eager = false) // materialize BEFORE overwriting what was read
-    compacted.withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(indexDir)
-    old.foreach(p => fs.delete(p, true))
-  }
+      k: Int = K): Unit =
+    DeltaIndex.compact(spark, indexDir, idxSchema, what)(
+      _.withColumn("_rn", row_number().over(
+          Window.partitionBy(col("grp")).orderBy(col("h"), col("key"))))
+        .filter(col("_rn") <= k).drop("_rn", "batch_id"))
 
   /** Start the quantile-monitoring sink over a streaming (grp, key, v)
     * frame. */

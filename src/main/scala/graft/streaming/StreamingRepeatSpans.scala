@@ -56,40 +56,13 @@ object StreamingRepeatSpans {
     StructField("src_batch", LongType),
     StructField("batch_id", LongType)))
 
-  /** Read the window index, tolerating ONLY its absence (first batch):
-    * the path is probed explicitly, so a corrupt or schema-broken index
-    * fails loudly instead of silently reading as empty and under-marking
-    * the batch (a blanket AnalysisException catch used to swallow both).
-    * The on-disk columns are verified against the expected schema first:
-    * a forced-schema read would fill a missing `src_batch` with nulls,
-    * and `src_batch =!= batchId` over nulls silently drops every row —
-    * the exact under-marking this method exists to prevent. */
-  def readIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val entries =
-      if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName) else Array.empty[String]
-    val hasParts = entries.exists(_.startsWith("batch_id="))
-    if (!hasParts) {
-      // legitimately empty only when missing, bare, or holding nothing
-      // beyond write-job metadata (_SUCCESS etc.) — e.g. every batch so
-      // far produced zero index rows; any OTHER content is not ours
-      val stray = entries.filterNot(n => n.startsWith("_") || n.startsWith("."))
-      require(stray.isEmpty,
-        s"window index at $indexDir has no batch_id= partitions but " +
-          s"contains ${stray.mkString(", ")} — not a StreamingRepeatSpans " +
-          "index; refusing to read it as empty")
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], indexSchema)
-    } else {
-      val onDisk = spark.read.parquet(indexDir).schema.fieldNames.toSet
-      val missing = indexSchema.fieldNames.filterNot(onDisk)
-      require(missing.isEmpty,
-        s"window index at $indexDir is missing column(s) " +
-          s"${missing.mkString(", ")} — not a StreamingRepeatSpans " +
-          "index (or pre-provenance format); rebuild it")
-      spark.read.schema(indexSchema).parquet(indexDir)
-    }
-  }
+  private val what = "StreamingRepeatSpans window index"
+
+  /** Read the window index: missing (first batch) reads empty; a
+    * foreign, corrupt or pre-provenance index fails loudly instead of
+    * under-marking the batch ([[DeltaIndex.readDeltas]]). */
+  def readIndex(spark: SparkSession, indexDir: String): DataFrame =
+    DeltaIndex.readDeltas(spark, indexDir, indexSchema, what)
 
   /** One micro-batch: mark occurrences repeating the index OR a
     * lower-(doc_id, p) occurrence within the batch, merge to spans,
@@ -103,14 +76,10 @@ object StreamingRepeatSpans {
       indexDir: String, spansDir: String, k: Int,
       cutDir: Option[String] = None, compactEvery: Int = 0): Unit = {
     val spark = batch.sparkSession
-    // clear this attempt's partitions up front — dynamic overwrite only
-    // replaces partitions PRESENT in the new data, so a re-run that
-    // computes an empty span set would otherwise keep stale rows
-    (Seq(spansDir, indexDir) ++ cutDir).foreach { dir =>
-      val p = new org.apache.hadoop.fs.Path(dir, s"batch_id=$batchId")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    // clear this attempt's partitions up front, so a re-run that
+    // computes an empty span set cannot keep stale rows
+    (Seq(spansDir, indexDir) ++ cutDir)
+      .foreach(DeltaIndex.deleteBatchPartition(spark, _, batchId))
     if (batch.isEmpty) return
     val wins = Dedup.windowHashes(batch, k).localCheckpoint(eager = false)
     // idempotent re-run: exclude THIS batch's prior contribution by its
@@ -144,14 +113,11 @@ object StreamingRepeatSpans {
         col("doc_id") === col("first.doc_id") &&
         col("p") === col("first.p"))
       .select(col("h"), col("doc_id"), col("p"))
-    def writeBatch(df: DataFrame, dir: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(dir)
-    writeBatch(spans, spansDir)
-    writeBatch(fresh.withColumn("src_batch", lit(batchId)), indexDir)
-    cutDir.foreach(dir => writeBatch(Dedup.cutSpansOf(batch, spans), dir))
+    DeltaIndex.writeBatch(spans, batchId, spansDir)
+    DeltaIndex.writeBatch(fresh.withColumn("src_batch", lit(batchId)),
+      batchId, indexDir)
+    cutDir.foreach(
+      DeltaIndex.writeBatch(Dedup.cutSpansOf(batch, spans), batchId, _))
     // the cadence knob made concrete: fold the index every Nth batch,
     // AFTER this batch's own partition committed. Safe under replay
     // because compaction preserves src_batch: if the driver dies after
@@ -181,46 +147,27 @@ object StreamingRepeatSpans {
       .option("checkpointLocation", checkpointDir)
       .start()
 
-  /** Compact the window-hash index: without compaction the parquet
-    * index accrues one `batch_id=N` partition per micro-batch forever —
-    * a small-files problem, not a size problem (the index stays one
-    * 24-byte row per distinct window content regardless). Rewrites the
-    * whole index into the single reserved `batch_id=-1` partition,
-    * defensively deduplicating by h with the min (doc_id, p) occurrence
-    * kept (the same first-copy rule the batch q120 keeper uses).
-    * Each row's `src_batch` provenance travels with the kept occurrence,
-    * so a later replay of any batch can still exclude its own rows (see
-    * the class doc — this is what makes compaction safe under
-    * at-least-once foreachBatch replay). Crash-ordering: rows are materialized
-    * (localCheckpoint) BEFORE any write, the -1 partition commit is the
-    * parquet job commit, and source partitions are deleted only after
-    * it — a crash in between leaves duplicate h rows, which under-mark
-    * nothing (seen = existence) and vanish on the next compaction.
+  /** Compact the window-hash index ([[DeltaIndex.compact]]): without
+    * compaction the parquet index accrues one `batch_id=N` partition
+    * per micro-batch forever — a small-files problem, not a size
+    * problem (the index stays one 24-byte row per distinct window
+    * content regardless). Rewrites the whole index into the single
+    * reserved `batch_id=-1` partition, defensively deduplicating by h
+    * with the min (doc_id, p) occurrence kept (the same first-copy rule
+    * the batch q120 keeper uses), its `src_batch` travelling with it.
+    * Duplicate h rows from a crash between commit and delete under-mark
+    * nothing (seen = existence). One `batch_id=-1` DIRECTORY, not one
+    * file: files follow the shuffle parallelism, so a billion-window
+    * index still compacts through every executor.
     *
     * Cadence is the caller's knob: every N batches from inside
     * `foreachBatch`, or a daily maintenance job — marks are identical
     * either way (spec-pinned in StreamingRepeatSpanSpec). */
-  def compactIndex(spark: SparkSession, indexDir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return
-    val old = fs.listStatus(root).map(_.getPath)
-      .filter(p => p.getName.startsWith("batch_id=") &&
-        p.getName != "batch_id=-1")
-    val compacted = readIndex(spark, indexDir)
-      .groupBy(col("h"))
-      .agg(min(struct(col("doc_id"), col("p"), col("src_batch")))
-        .as("first"))
-      .select(col("h"), col("first.doc_id").as("doc_id"),
-        col("first.p").as("p"), col("first.src_batch").as("src_batch"))
-      // one batch_id=-1 DIRECTORY, not one file: files follow the
-      // shuffle parallelism, so a billion-window index still compacts
-      // through every executor
-      .localCheckpoint(eager = false) // materialize BEFORE overwriting what was read
-    compacted.withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(indexDir)
-    old.foreach(p => fs.delete(p, true))
-  }
+  def compactIndex(spark: SparkSession, indexDir: String): Unit =
+    DeltaIndex.compact(spark, indexDir, indexSchema, what)(
+      _.groupBy(col("h"))
+        .agg(min(struct(col("doc_id"), col("p"), col("src_batch")))
+          .as("first"))
+        .select(col("h"), col("first.doc_id").as("doc_id"),
+          col("first.p").as("p"), col("first.src_batch").as("src_batch")))
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types._
 import graft.ext.Shards
 
 /** Streaming shard append — the q143 training-shard layout as a
@@ -12,9 +13,9 @@ import graft.ext.Shards
   * whether it arrived in batch 0 or batch 40), appended under
   * `data/batch_id=N/shard_id=K/`, and accounted in an ADDITIVE
   * manifest: the batch writes its per-shard delta rows (tagged with
-  * their `src_batch` provenance, the round-11 recipe) and the current
-  * manifest is simply the sum over deltas — exact because q143's
-  * content fingerprint is an order-independent integer sum, so
+  * their `src_batch` provenance, the [[DeltaIndex]] recipe) and the
+  * current manifest is simply the sum over deltas — exact because
+  * q143's content fingerprint is an order-independent integer sum, so
   * "merge manifests" is `sum()`, never a recomputation.
   *
   * Exactly-once: both the batch's data partition and its delta rows
@@ -32,13 +33,8 @@ object StreamingShards {
       outDir: String, nShards: Int = Shards.NShards,
       seed: Long = Shards.Seed): Unit = {
     val spark = batch.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
-    for (sub <- Seq("data", "manifest")) {
-      val p = new org.apache.hadoop.fs.Path(s"$outDir/$sub",
-        s"batch_id=$batchId")
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    Seq("data", "manifest").foreach(sub =>
+      DeltaIndex.deleteBatchPartition(spark, s"$outDir/$sub", batchId))
     if (batch.isEmpty) return
     Shards.shardAssignOf(batch, nShards, seed)
       .withColumn("batch_id", lit(batchId))
@@ -48,81 +44,36 @@ object StreamingShards {
       .partitionBy("batch_id", "shard_id")
       .parquet(s"$outDir/data")
     // delta AFTER data: manifest-present implies data-present
-    Shards.manifestOf(Shards.shardAssignOf(batch, nShards, seed))
-      .withColumn("src_batch", lit(batchId))
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(s"$outDir/manifest")
+    DeltaIndex.writeDelta(
+      Shards.manifestOf(Shards.shardAssignOf(batch, nShards, seed)),
+      batchId, s"$outDir/manifest")
   }
 
-  private val deltaSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("shard_id",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("n_docs",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("n_tokens",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("min_doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("max_doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("checksum",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("src_batch",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("batch_id",
-      org.apache.spark.sql.types.LongType)))
+  private val deltaSchema = StructType(Seq(
+    StructField("shard_id", IntegerType),
+    StructField("n_docs", LongType),
+    StructField("n_tokens", LongType),
+    StructField("min_doc_id", LongType),
+    StructField("max_doc_id", LongType),
+    StructField("checksum", LongType),
+    StructField("src_batch", LongType),
+    StructField("batch_id", LongType)))
 
   /** The CURRENT manifest: sum of all committed deltas — exact by the
     * additivity of every manifest column (counts, sums, min/max, the
-    * order-independent checksum). Same read contract as the other
-    * streaming indexes (StreamingQuantiles.readDir): a missing or
-    * only-just-bootstrapped dir is an EMPTY manifest, a dir holding
-    * anything other than batch_id= partitions with the delta schema is
-    * refused — never silently summed. */
-  def readManifest(spark: org.apache.spark.sql.SparkSession,
-      outDir: String): DataFrame = {
-    val dir = s"$outDir/manifest"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val entries =
-      if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName)
-      else Array.empty[String]
-    val raw = if (!entries.exists(_.startsWith("batch_id="))) {
-      val stray = entries.filterNot(n => n.startsWith("_") || n.startsWith("."))
-      require(stray.isEmpty,
-        s"shard manifest at $dir has no batch_id= partitions but " +
-          s"contains ${stray.mkString(", ")} — refusing to read it as empty")
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], deltaSchema)
-    } else {
-      // populated-side refuse-foreign-state: stray non-partition files
-      // next to batch_id= partitions must refuse, never silently sum
-      val stray = entries.filterNot(n =>
-        n.startsWith("batch_id=") || n.startsWith("_") || n.startsWith("."))
-      require(stray.isEmpty,
-        s"shard manifest at $dir contains non-partition entries " +
-          s"${stray.mkString(", ")} next to its batch_id= partitions — " +
-          "refusing to fold foreign files into the manifest")
-      val onDisk = spark.read.parquet(dir).schema.fieldNames.toSet
-      val missing = deltaSchema.fieldNames.filterNot(onDisk)
-      require(missing.isEmpty,
-        s"shard manifest at $dir is missing column(s) " +
-          s"${missing.mkString(", ")} — not a StreamingShards delta " +
-          "manifest; rebuild it")
-      spark.read.schema(deltaSchema).parquet(dir)
-    }
-    raw
+    * order-independent checksum). Read under [[DeltaIndex.readDeltas]]:
+    * a missing or only-just-bootstrapped dir is an EMPTY manifest, a
+    * dir holding anything other than batch_id= partitions with the
+    * delta schema is refused — never silently summed. */
+  def readManifest(spark: SparkSession, outDir: String): DataFrame =
+    DeltaIndex.readDeltas(spark, s"$outDir/manifest", deltaSchema,
+        "StreamingShards manifest")
       .groupBy(col("shard_id"))
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col("n_tokens")).as("n_tokens"),
         min(col("min_doc_id")).as("min_doc_id"),
         max(col("max_doc_id")).as("max_doc_id"),
         sum(col("checksum")).as("checksum"))
-  }
 
   /** Start the shard-append sink over a streaming (doc_id, text)
     * frame. */

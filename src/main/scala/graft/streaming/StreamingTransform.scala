@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Stateless streaming stages — the foreachBatch shape for per-document
@@ -12,11 +11,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * ≡ the batch operator over the union of batches by construction —
   * spec-pinned anyway, because "by construction" has been wrong before.
   *
-  * Exactly-once: the batch_id partition is deleted up front (dynamic
-  * overwrite alone keeps a failed attempt's rows when the re-run
-  * computes an empty set), and a replay rewrites it byte-identically —
-  * a per-doc transform has nothing to go stale. No index, so none of
-  * the compaction/provenance machinery applies.
+  * Exactly-once: the [[DeltaIndex]] partition moves — the batch_id
+  * partition is deleted up front (dynamic overwrite alone keeps a
+  * failed attempt's rows when the re-run computes an empty set), and a
+  * replay rewrites it byte-identically — a per-doc transform has
+  * nothing to go stale. No index, so none of the compaction/provenance
+  * machinery applies.
   */
 object StreamingTransform {
 
@@ -24,16 +24,9 @@ object StreamingTransform {
     * Package-visible for direct testing without a streaming harness. */
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
       outDir: String, transform: DataFrame => DataFrame): Unit = {
-    val spark = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(outDir, s"batch_id=$batchId")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.delete(p, true)
+    DeltaIndex.deleteBatchPartition(batch.sparkSession, outDir, batchId)
     if (batch.isEmpty) return
-    transform(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(outDir)
+    DeltaIndex.writeBatch(transform(batch), batchId, outDir)
   }
 
   /** Start a stateless transform stage over any streaming frame. */

@@ -22,11 +22,11 @@ import graft.{GraftSession, SparkEntry}
   *     tasks, executor run and CPU time, GC, shuffle read/write and
   *     spill (per-run averages).
   *   - `ab <sfDir> k=v,... [q...]` — interleaved A/B: session A applies
-  *     the listed confs, session B keeps the defaults; after one warm
-  *     run each, [[Runs]] alternating rounds A, B, A, B... so co-tenant
-  *     weather hits both sides alike. Reports each side's MIN (the
-  *     noise-robust statistic on a host with steal waves), the ratio,
-  *     and every round.
+  *     the listed confs, session B keeps the defaults; after
+  *     [[WarmRounds]] interleaved warm rounds, [[Runs]] alternating
+  *     rounds A, B, A, B... so co-tenant weather hits both sides alike.
+  *     Reports each side's MIN (the noise-robust statistic on a host
+  *     with steal waves), the ratio, and every round.
   *   - `plan <sfDir> [--exec] [--out dir] [q...]` — the formatted
   *     physical plan; `--exec` also runs the query and prints the final
   *     adaptive plan (AQE stage reuse only shows after execution);
@@ -35,6 +35,9 @@ import graft.{GraftSession, SparkEntry}
   * `sbt "runMain graft.tools.Probe time /path/to/sf0.1 q107_bigram_logprob"` */
 object Probe {
   private val Runs = 4
+  /** Untimed A, B rounds before `ab` times anything: after one, the
+    * first timed round still ran 1.3–2× the later ones. */
+  private val WarmRounds = 2
 
   private class Counters extends SparkListener {
     val jobs, stages, tasks, runMs, cpuNs, gcMs, shufR, shufW, spill =
@@ -100,7 +103,7 @@ object Probe {
     println(f"${"query"}%-26s ${"A_min"}%7s ${"B_min"}%7s ${"A/B"}%6s  rounds")
     names.foreach { n =>
       try {
-        timed(sA, dir, n); timed(sB, dir, n) // warm both sides
+        (1 to WarmRounds).foreach { _ => timed(sA, dir, n); timed(sB, dir, n) }
         val rounds = (1 to Runs).map(_ => (timed(sA, dir, n), timed(sB, dir, n)))
         val (as, bs) = rounds.unzip
         println(f"$n%-26s ${as.min}%7.3f ${bs.min}%7.3f ${as.min / bs.min}%6.2f  A=${fmt(as)} B=${fmt(bs)}")

@@ -1,0 +1,30 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The `batch_id` sink recipe (delete the batch's partition, overwrite
+  * only it, read under the refuse-foreign-state contract, compact into
+  * `batch_id=-1`) lives in `streaming/DeltaIndex.scala` alone: a second
+  * copy is how the readers drifted apart before. */
+class DeltaIndexSpec extends AnyFunSuite {
+
+  test("no streaming module other than DeltaIndex builds a batch_id= " +
+      "partition path or an empty index frame of its own") {
+    val dir = Paths.get("src/main/scala/graft/streaming")
+    val files = Files.list(dir).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.getFileName.toString == "DeltaIndex.scala"))
+    val copies = files
+      .filterNot(_.getFileName.toString == "DeltaIndex.scala")
+      .filter { f =>
+        val src = Files.readString(f)
+        src.contains("batch_id=$") || src.contains("emptyRDD[")
+      }
+      .map(_.getFileName.toString).sorted
+    assert(copies.isEmpty,
+      s"${copies.mkString(", ")} carry their own copy of the " +
+        "DeltaIndex recipe")
+  }
+}

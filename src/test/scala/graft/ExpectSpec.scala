@@ -197,5 +197,15 @@ class ExpectSpec extends SparkSpecBase {
     // replay of a red batch is idempotent (partition replaced, not doubled)
     StreamingExpect.processBatch(b(3L -> 99.0, 4L -> 3.0), 1L, exp, live, quar)
     assert(spark.read.parquet(quar).count() == 2)
+    // an EMPTIED replay of batch 1 clears its partitions instead of
+    // keeping the earlier attempt's rows
+    StreamingExpect.processBatch(b(), 1L, exp, live, quar)
+    def batch1Rows(dir: String): Long = {
+      val part = java.nio.file.Paths.get(dir, "batch_id=1")
+      if (Files.exists(part)) spark.read.parquet(part.toString).count()
+      else 0L
+    }
+    assert(Seq(live, quar, quar + "_reports").map(batch1Rows) ==
+      Seq(0L, 0L, 0L))
   }
 }

@@ -132,6 +132,28 @@ class StreamingDomainCapsSpec extends SparkSpecBase {
     assert(ids(adm) == Set(1L, 2L, 3L))
   }
 
+  test("readIndex: missing reads empty; a stray file or a " +
+      "pre-provenance index fails loudly instead of miscounting") {
+    assert(StreamingDomainCaps.readIndex(spark, tmp() + "/absent")
+      .count() == 0)
+    val (idx, adm, rej) = (tmp(), tmp(), tmp())
+    StreamingDomainCaps.processBatch(urls(1L -> u("x.a.com", 1)), 0L,
+      idx, adm, rej)
+    Files.writeString(java.nio.file.Paths.get(idx, "stray.parquet"), "x")
+    val e = intercept[IllegalArgumentException] {
+      StreamingDomainCaps.readIndex(spark, idx)
+    }
+    assert(e.getMessage.contains("refusing"))
+    import spark.implicits._
+    val legacy = tmp() + "/legacy"
+    Seq(("a.com", 1L, 0L)).toDF("domain", "doc_id", "batch_id")
+      .write.partitionBy("batch_id").parquet(legacy)
+    val e2 = intercept[IllegalArgumentException] {
+      StreamingDomainCaps.readIndex(spark, legacy)
+    }
+    assert(e2.getMessage.contains("src_batch"))
+  }
+
   test("end-to-end through writeStream with the synthesized corpus") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -191,5 +191,15 @@ class StreamingNearDupSpec extends SparkSpecBase {
       StreamingNearDup.readIndex(spark, legacy)
     }
     assert(e.getMessage.contains("src_batch"))
+    // a stray file next to the batch_id= partitions is refused, not
+    // read (or left to a partition-discovery failure)
+    val idx = tmp()
+    StreamingNearDup.processBatch(df(1L -> docA), 0L, idx, tmp(), tmp(),
+      0.5)
+    Files.writeString(java.nio.file.Paths.get(idx, "stray.parquet"), "x")
+    val e2 = intercept[IllegalArgumentException] {
+      StreamingNearDup.readIndex(spark, idx)
+    }
+    assert(e2.getMessage.contains("refusing"))
   }
 }

@@ -99,6 +99,14 @@ class StreamingQuantilesSpec extends SparkSpecBase {
       StreamingQuantiles.readIndex(spark, idx2)
     }
     assert(e2.getMessage.contains("src_batch"))
+    // a stray file next to real batch_id= partitions is refused too
+    val (idx3, cnt3, out3) = (tmp(), tmp(), tmp())
+    StreamingQuantiles.processBatch(rows(b0), 0L, idx3, cnt3, out3)
+    Files.writeString(java.nio.file.Paths.get(idx3, "stray.parquet"), "x")
+    val e3 = intercept[IllegalArgumentException] {
+      StreamingQuantiles.readIndex(spark, idx3)
+    }
+    assert(e3.getMessage.contains("refusing"))
   }
 
   test("end-to-end through writeStream across real micro-batches") {

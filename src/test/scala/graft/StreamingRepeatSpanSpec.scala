@@ -272,5 +272,15 @@ class StreamingRepeatSpanSpec extends SparkSpecBase {
       StreamingRepeatSpans.readIndex(spark, legacy)
     }
     assert(e.getMessage.contains("src_batch"))
+    // a stray file next to the batch_id= partitions is refused, never
+    // read as index rows
+    val idx = tmp()
+    StreamingRepeatSpans.processBatch(df(1L -> "a b c d"), 0L, idx, tmp(),
+      k = 3)
+    Files.writeString(java.nio.file.Paths.get(idx, "stray.parquet"), "x")
+    val e2 = intercept[IllegalArgumentException] {
+      StreamingRepeatSpans.readIndex(spark, idx)
+    }
+    assert(e2.getMessage.contains("refusing"))
   }
 }
