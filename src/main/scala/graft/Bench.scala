@@ -21,15 +21,14 @@ import org.apache.spark.sql.SparkSession
   * The noop write evaluates the full plan the oracle checks and discards
   * rows at the sink.
   *
-  * The artifact self-adjudicates machine weather — and, since round 15,
-  * self-DEFENDS. Hypervisor steal is measured (tools.StealProbe — spin
-  * all cores, read the /proc/stat steal delta) before, after, and on a
-  * ROLLING basis before every ~20-query window (round 16: the round-15
-  * driver artifact verdicted "quiet" while a wave confined to the
-  * q140-q157 stretch ran 1.5-36x inflated between the old sparse
-  * 1/3-2/3 probes), and the three canary medians (q115 pure-codegen
-  * floor, q23 shuffle-bound, q71 decode-bound — all untouched for many
-  * rounds) ride along in the JSON. Every per-query entry in the detail
+  * The artifact self-adjudicates machine weather and self-DEFENDS.
+  * Hypervisor steal is measured (tools.StealProbe — spin all cores,
+  * read the /proc/stat steal delta) before, after, and on a ROLLING
+  * basis before every ~20-query window (a wave confined between sparse
+  * probes is invisible otherwise), and the three canary medians (q115
+  * pure-codegen floor, q23 shuffle-bound, q71 decode-bound — queries
+  * kept unchanged so their bands stay valid) ride along in the JSON.
+  * Every per-query entry in the detail
   * artifact carries the steal stamp of its window. The verdict rule:
   * a run is CONTAMINATED when any mid/post steal probe is double-digit
   * or a canary median exceeds 2x its committed quiet band
@@ -62,33 +61,29 @@ object Bench {
     min: Double, max: Double, ok: Boolean, steal: Double)
 
   /** Queries per rolling steal probe, and the probe's spin length.
-    * Round 15 proved the 1/3-2/3 sampling has a false-negative window:
-    * the driver's artifact verdicted "quiet" while the contiguous
-    * q140-q157 stretch ran 1.5-36x inflated — the wave fell between
-    * the two probes and touched no canary. A probe before every
-    * ~20-query window (the ScaleSmoke recipe: refresh BEFORE timing,
-    * so each row's stamp reflects the window it actually ran in)
-    * bounds any undetected wave to one window; 1.5 s of spin reads a
-    * multi-query wave fine and keeps probe overhead ~15 s per pass,
-    * all outside the per-query timers. */
-  private val ProbeEvery = 20
-  private val RollingProbeMs = 1500L
+    * Sparse probes have a false-negative window: a wave that falls
+    * between two probes and touches no canary goes unseen. A probe
+    * before every ~20-query window, refreshed BEFORE timing so each
+    * row's stamp reflects the window it actually ran in (`Probe scale`
+    * stamps its rows the same way), bounds any undetected wave to one
+    * window; 1.5 s of spin reads a multi-query wave fine and keeps
+    * probe overhead ~15 s per pass, all outside the per-query timers. */
+  private[graft] val ProbeEvery = 20
+  private[graft] val RollingProbeMs = 1500L
 
   /** One full measuring pass: per-query medians over `runs`, with a
     * rolling steal probe before every [[ProbeEvery]]-query window (a
     * steal WAVE confined to a stretch between sparse probes is
-    * invisible — observed live in r14_c AND in the round-15 driver
-    * artifact). Probe wall-clock is outside every per-query timer. */
+    * invisible). Probe wall-clock is outside every per-query timer. */
   private def measurePass(spark: SparkSession, sfDir: String,
       sorted: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
       runs: Int, stealPre: Double): (Seq[QRow], Seq[Double]) = {
     def exec(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
-    // A query that throws must not masquerade as a fast median (round 8:
-    // q114 crashed at plan time, and its 0.076 s time-to-crash was
-    // counted in the 118-query total). Record the wall time AND whether
-    // any run failed; failed queries are flagged in the detail artifact
-    // and excluded from the headline total.
+    // A query that throws must not masquerade as a fast median: its
+    // time-to-crash would count in the total. Record the wall time AND
+    // whether any run failed; failed queries are flagged in the detail
+    // artifact and excluded from the headline total.
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok = try { exec(fn(spark, sfDir)); true }
@@ -112,8 +107,7 @@ object Bench {
     (results, stealMid.toSeq)
   }
 
-  /** The contamination rule, from the round-14 adjudication: double-
-    * digit steal in ANY probe (pre included — a retry pass launched
+  /** The contamination rule: double-digit steal in ANY probe (pre included — a retry pass launched
     * into a still-noisy window whose wave dies before the one-third
     * probe would otherwise read as quiet while its first-third medians
     * are inflated), or any passing canary median above 2x its
@@ -176,11 +170,10 @@ object Bench {
   /** Poll for a quiet window before a retry pass: probe every ~20 s
     * until steal < 5% or the wait budget elapses. Bounded so a
     * permanently noisy host still produces an artifact (with the
-    * contaminated verdict on it). Round 17 raised the per-retry budget
-    * from 5 to 10 minutes: the round-16 official artifact retried
-    * straight back into the same co-tenant wave (steal 17.4% after the
-    * retry) and closed the round contaminated — waiting out a
-    * multi-minute wave is cheaper than shipping a disclaimed number. */
+    * contaminated verdict on it). The 10-minute default outlasts a
+    * multi-minute co-tenant wave: a retry launched straight back into
+    * the wave measures it again, and waiting one out is cheaper than
+    * shipping a disclaimed number. */
   private def awaitQuietWindow(): Double = {
     val waitSec =
       GraftSession.envNum(sys.env, "SPARK_GRAFT_BENCH_QUIET_WAIT", 600L).max(0L)
@@ -207,11 +200,11 @@ object Bench {
       // leaves localCheckpoint blocks behind that the ContextCleaner
       // only reclaims after a driver GC notices the dead RDD refs; the
       // default periodic-GC interval (30 min) is longer than the whole
-      // bench, so storage pressure built up monotonically and inflated
-      // late-alphabet decode-heavy rows (q110 0.4 s isolated vs 1.1-1.6 s
-      // in-bench, round-16 measurement). One minute keeps the session
-      // young; the timer lives in Spark's cleaner thread, outside every
-      // per-query timer. (guide §5: caching competes with execution.)
+      // bench, so storage pressure would build up monotonically and
+      // inflate late-alphabet decode-heavy rows. One minute keeps the
+      // session young; the timer lives in Spark's cleaner thread,
+      // outside every per-query timer. (guide §5: caching competes with
+      // execution.)
       .config("spark.cleaner.periodicGC.interval", "60s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -290,12 +283,12 @@ object Bench {
     val reasonsJson = reasons.map(jstr).mkString("[", ",", "]")
     val midJson = stealMid.map(fmt1).mkString("[", ",", "]")
     val weather = s""""steal_pct_pre":${fmt1(stealPre)},"steal_pct_mid":$midJson,"steal_pct_post":${fmt1(stealPost)},"canaries":$canaryJson,"weather_verdict":${jstr(verdict)},"retried":$retried,"weather_reasons":$reasonsJson"""
-    // The driver records only the LAST ~2000 chars of output (r5 proved
-    // it: a headline printed FIRST was cut, "parsed" came back null), so
-    // ordering is: the full line with spreads first (humans, full
-    // captures), then LAST a line guaranteed to survive a tail capture
-    // and parse — per-query medians if that fits the tail budget,
-    // otherwise just the headline total.
+    // The driver records only the LAST ~2000 chars of output (a
+    // headline printed FIRST is cut and parses as null), so ordering
+    // is: the full line with spreads first (humans, full captures),
+    // then LAST a line guaranteed to survive a tail capture and parse —
+    // per-query medians if that fits the tail budget, otherwise just
+    // the headline total.
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"n_failed":${failed.length},$weather,"queries":$qs,"spread":$spread,"sf":"$sfDir"}""")
     def fmt2(v: Double): String = BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
     val qs2 = results.map(r => "\"" + r.name + "\":" + fmt2(r.median))
@@ -307,12 +300,12 @@ object Bench {
     // fields are the whole point of the artifact.
     println(if (mediansLine.length <= 1900) mediansLine
       else s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,$weather,"n_queries":${results.length},"sf":"$sfDir"}""")
-    // The driver's tail capture has never fit the 108-query medians map
-    // ("parsed": null in every round), so per-query history would be
-    // invisible without a committed artifact: write the full detail to a
-    // file (default BENCH_DETAIL.json in the cwd, overridable) that gets
-    // checked in — the next round's judge diffs medians from the repo
-    // alone instead of re-running the whole bench.
+    // The driver's tail capture cannot fit the per-query medians map,
+    // so per-query history would be invisible without a committed
+    // artifact: write the full detail to a file (default
+    // BENCH_DETAIL.json in the cwd, overridable) that gets checked in,
+    // so medians can be diffed from the repo alone instead of
+    // re-running the whole bench.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "BENCH_DETAIL.json")
     val detail = results.map { r =>

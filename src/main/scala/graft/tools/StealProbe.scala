@@ -2,17 +2,15 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicBoolean
 
-/** Hypervisor-steal probe — the round-13 bench post-mortem protocol,
-  * productionized so the official bench artifact self-adjudicates
+/** Hypervisor-steal probe, so a bench artifact self-adjudicates
   * weather.
   *
-  * Why this exists: guest load average CANNOT see host co-tenancy. In
-  * round 13 four successive bench runs of a byte-identical binary
-  * returned 117.8–172.8 s (vs a 94.3 s quiet posture) while `uptime`
-  * read 0.09 at launch; spinning all 32 vCPUs and reading the
-  * /proc/stat `steal` column measured 31–34% hypervisor steal — the
-  * host was giving this guest two-thirds of its nominal CPU. A bench
-  * number recorded without the steal measurement is uninterpretable.
+  * Why this exists: guest load average CANNOT see host co-tenancy. A
+  * byte-identical binary can bench far slower than its quiet posture
+  * while `uptime` reads near zero, because the host is taking a third
+  * of the guest's CPU; only spinning every vCPU and reading the
+  * /proc/stat `steal` column shows it. A bench number recorded without
+  * the steal measurement is uninterpretable.
   *
   * Protocol: saturate every core with busy-spin threads for `millis`
   * (steal only accrues to runnable-but-not-running vCPUs, so an IDLE
@@ -73,7 +71,7 @@ object StealProbe {
     measure(Runtime.getRuntime.availableProcessors(), 5000L)
 
   /** Standalone gate: `runMain graft.tools.StealProbe [threads] [ms]` —
-    * the launch-only-below-~5% protocol from the round-13 post-mortem. */
+    * launch a bench only while steal reads below ~5%. */
   def main(args: Array[String]): Unit = {
     val threads =
       if (args.length > 0) args(0).toInt
