@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-scoped memo for derived artifacts over the STATIC test
-  * tables — materialized pair indexes, trained model tables, decoded
-  * fingerprint frames.
+/** Session-scoped memo for the STATIC test tables' resolved relations
+  * ([[Tables]]) and the artifacts derived from them — materialized pair
+  * indexes, trained model tables, decoded fingerprint frames.
   *
   * Several registered queries are index/model READS that share one
   * expensive deterministic derivation (the n-gram Jaccard pair set

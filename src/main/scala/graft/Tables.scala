@@ -19,28 +19,16 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType}
   */
 object Tables {
 
-  /** Resolved-relation cache. `spark.read.parquet` costs ~80-100 ms per
-    * call on this box (file listing + footer schema read + relation
-    * resolution), and the bench executes 157 queries × 3 runs × 1-3
-    * table reads each — re-reading an immutable footer thousands of
-    * times was ~0.1-0.25 s of pure fixed overhead per query. The test
-    * tables are static, so the resolved DataFrame (schema + file index)
-    * is safely reusable for the lifetime of its session; keying by the
-    * session reference keeps test suites with their own sessions from
-    * ever seeing a stopped session's plan. */
-  private val cache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, String), DataFrame]
-
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // SessionMemo's sweep, mirrored: entries of stopped sessions only
-    // pin dead plan state — drop them whenever the cache is touched, so
-    // a long-lived JVM cycling sessions (the test runner) cannot
-    // accumulate them
-    cache.keysIterator.filter(_._1.sparkContext.isStopped)
-      .foreach(cache.remove)
-    cache.getOrElseUpdate((spark, dir, name), load(spark, dir, name))
-  }
+  /** A resolved relation, memoized per session ([[SessionMemo]]).
+    * `spark.read.parquet` costs ~80-100 ms per call on this box (file
+    * listing + footer schema read + relation resolution), and the bench
+    * executes 157 queries × 3 runs × 1-3 table reads each — re-reading
+    * an immutable footer thousands of times was ~0.1-0.25 s of pure
+    * fixed overhead per query. The test tables are static, so the
+    * resolved DataFrame (schema + file index) is safely reusable for
+    * the lifetime of its session. */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    SessionMemo(spark, s"table:$dir/$name")(load(spark, dir, name))
 
   /** Per-table spread key — the table's hot join/aggregation key, so
     * the repartition that buys scan parallelism ALSO seeds a reusable

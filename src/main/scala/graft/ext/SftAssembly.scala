@@ -56,8 +56,9 @@ object SftAssembly {
 
   /** `spread = true` only for q193's registered entry (A/B-measured
     * win on its collect_list aggregate); every composed consumer
-    * keeps the plain scan — the round-16 A/B showed the forced
-    * 32-task stage REGRESSES the packing-family compositions. */
+    * keeps the plain scan — an A/B showed the forced 32-task stage
+    * REGRESSES the packing-family compositions (OPTIMIZATION_r16.md
+    * §1). */
   private def turnEvents(spark: SparkSession, dir: String,
       spread: Boolean = false): DataFrame =
     turnColumnsOf((if (spread) graft.Tables.spreadScan(spark, dir, "events")
@@ -292,9 +293,7 @@ object SftAssembly {
     import spark.implicits._
     // a composed delivery stage reads the shared thread artifact
     // (the q196 convention; q193 derives fresh)
-    val threads = graft.SessionMemo(spark, s"sft-threads:$dir") {
-      conversationThreadsOf(turnEvents(spark, dir)).localCheckpoint()
-    }
+    val threads = threadsMemo(spark, dir)
     // the packed key is only invertible for 0 <= day < 10^6 (epoch
     // days reach 10^6 around year 4700; negative days are pre-1970
     // timestamps, which turnColumnsOf supports but this key does
@@ -397,12 +396,17 @@ object SftAssembly {
     * ORDER BY = oracle determinism only. */
   def tokenPacking(spark: SparkSession, dir: String,
       budget: Long = PackTokenBudget): DataFrame = {
-    val threads = graft.SessionMemo(spark, s"sft-threads:$dir") {
-      conversationThreadsOf(turnEvents(spark, dir)).localCheckpoint()
-    }
+    val threads = threadsMemo(spark, dir)
     val (toks, nDocs) = docTokens(spark, dir)
     tokenPackingOf(threads, turnEvents(spark, dir), toks, nDocs, budget)
   }
+
+  /** The conversation threads, memoized per dir: every composed stage
+    * reads this one artifact (the q196 convention); q193 derives fresh. */
+  private def threadsMemo(spark: SparkSession, dir: String): DataFrame =
+    graft.SessionMemo(spark, s"sft-threads:$dir") {
+      conversationThreadsOf(turnEvents(spark, dir)).localCheckpoint()
+    }
 
   /** ONE definition of the (doc_id, toks) token table + its modulus —
     * q200/q202 both read it; the tokenizer projection must not fork.
@@ -806,7 +810,7 @@ object SftAssembly {
     // And not the last FROZEN sequence — a frozen export's final
     // sequence may hold a since-invalidated thread, and appending
     // into it would overwrite shipped bytes. Rides the DAG as a 1-row
-    // broadcast cross join (round-17) instead of an eager collect —
+    // broadcast cross join instead of an eager collect —
     // no blocking driver round trip per call; the seq_id arithmetic
     // is the identical exact BIGINT either way.
     val baseDf = prev.agg(sum(col("n_tokens")).as("_ptok"))
@@ -879,9 +883,7 @@ object SftAssembly {
     * window). ORDER BY = oracle determinism only. */
   def bpeTokenPacking(spark: SparkSession, dir: String,
       budget: Long = PackTokenBudget): DataFrame = {
-    val threads = graft.SessionMemo(spark, s"sft-threads:$dir") {
-      conversationThreadsOf(turnEvents(spark, dir)).localCheckpoint()
-    }
+    val threads = threadsMemo(spark, dir)
     // the whitespace token table is NOT read — only the turn→text
     // modulus is shared with q200 (same memoized scalar)
     val nDocs = nDocsOf(spark, dir)
@@ -1314,9 +1316,7 @@ object SftAssembly {
     // the thread and pair frames are shared artifacts (the q60
     // convention): q193/q194 derive fresh, the composed card reads
     // the memos
-    val threads = graft.SessionMemo(spark, s"sft-threads:$dir") {
-      conversationThreadsOf(turnEvents(spark, dir)).localCheckpoint()
-    }
+    val threads = threadsMemo(spark, dir)
     val pairs = graft.SessionMemo(spark, s"sft-pairs:$dir") {
       preferencePairsOf(spark, dir).localCheckpoint()
     }

@@ -18,19 +18,17 @@ import org.apache.spark.sql.functions._
   *   - the forget set is dimension-sized (requests, not corpus) —
   *     broadcast semi/anti joins, the corpus never shuffles;
   *   - only partitions that actually contain a matching key are
-  *     rewritten (copy-on-write); untouched directories stay
+  *     rewritten ([[Rewrite.partitions]]); untouched directories stay
   *     byte-identical — a handful of erasure requests against a
-  *     100 TB corpus rewrites a handful of day/source partitions;
-  *   - partitions left empty by the delete are removed outright
-  *     (dynamic overwrite only replaces partitions present in the new
-  *     data, so emptied ones need the explicit drop);
+  *     100 TB corpus rewrites a handful of day/source partitions, and
+  *     partitions left empty by the delete are removed outright;
   *   - idempotent: re-running with the same forget set finds no
   *     matching partitions and writes nothing.
   */
 object Forget {
 
   /** Directory name Spark/Hive use for a null partition value. */
-  val HiveDefaultPartition = "__HIVE_DEFAULT_PARTITION__"
+  val HiveDefaultPartition: String = Rewrite.HiveDefaultPartition
 
   /** Delete every row of the parquet dataset at `dir` whose `keyCol`
     * appears in `forgetKeys`, rewriting only affected `partitionCol`
@@ -44,35 +42,17 @@ object Forget {
     import spark.implicits._
     val keys = forgetKeys.select(col(keyCol)).distinct()
     val target = spark.read.parquet(dir)
-    // null partition values are written by Spark as the Hive default
-    // directory — normalize them to that name so the affected set, the
-    // rewrite filter, and the emptied-directory cleanup all agree (a
-    // REAL string value equal to the sentinel would collide; Hive-style
-    // partitioning cannot distinguish the two on disk either)
-    val partNorm = coalesce(col(partitionCol).cast("string"),
-      lit(HiveDefaultPartition))
     // partitions that actually hold a to-be-forgotten row (bounded:
     // one string per affected partition)
     val affected = target.join(broadcast(keys), Seq(keyCol), "left_semi")
-      .groupBy(partNorm.as("partition"))
+      .groupBy(Rewrite.value(partitionCol).as("partition"))
       .agg(count(lit(1)).as("n_deleted"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     if (affected.nonEmpty) {
-      val inAffected = partNorm.isInCollection(affected.keys.toSeq)
-      val kept = target.filter(inAffected)
-        .join(broadcast(keys), Seq(keyCol), "left_anti")
-        // materialize BEFORE the overwrite starts deleting what it reads
-        .localCheckpoint(true)
-      kept.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCol).parquet(dir)
-      val written = kept.select(partNorm)
-        .distinct().collect().map(_.getString(0)).toSet
-      (affected.keySet -- written).foreach { v =>
-        val p = new org.apache.hadoop.fs.Path(dir, s"$partitionCol=$v")
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        if (fs.exists(p)) fs.delete(p, true)
-      }
+      val parts = affected.keys.toSeq
+      Rewrite.partitions(spark, dir, partitionCol, parts,
+        Rewrite.slice(target, partitionCol, parts)
+          .join(broadcast(keys), Seq(keyCol), "left_anti"))
     }
     val audit = affected.toSeq.sortBy(_._1)
       .toDF("partition", "n_deleted")

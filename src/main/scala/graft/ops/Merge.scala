@@ -17,7 +17,7 @@ import graft.Tables
   * update-where-matched / delete-where-matched / insert-where-not —
   * this file provides it, split into a pure relational core (usable as
   * a read-only query, oracled as q73) and a partition-scoped
-  * copy-on-write writer in the mold of `backfillEnrichment`.
+  * copy-on-write writer on [[Rewrite.partitions]].
   */
 object Merge {
 
@@ -74,63 +74,30 @@ object Merge {
   }
 
   /** Partition-scoped copy-on-write MERGE INTO a `partitionBy`-laid-out
-    * parquet table: only partitions that contain a matched key or
-    * receive a source row are rewritten; every other partition
-    * directory is left byte-identical (MergeSpec asserts untouched
-    * files). Returns the affected partition values.
+    * parquet table through [[Rewrite.partitions]]: only partitions that
+    * contain a matched key or receive a source row are rewritten, a
+    * partition the merge empties (every row deleted or moved) is
+    * removed, and every other partition directory is left
+    * byte-identical (MergeSpec asserts untouched files). Returns the
+    * affected partition values.
     *
-    * Mechanics, in the mold of
-    * [[graft.pipeline.FilePipeline.backfillEnrichment]]:
-    *   1. affected = target partitions holding matched keys ∪ source
-    *      rows' own partitions (a bounded collect — partition VALUES,
-    *      never rows);
-    *   2. merge only the affected slice, localCheckpoint it so the
-    *      write doesn't read from the path it replaces;
-    *   3. dynamic-partition overwrite — each partition commit goes
-    *      through Spark's staging protocol, so a partition is swapped,
-    *      not missing, mid-write;
-    *   4. a partition whose merged content came out EMPTY (every row
-    *      deleted or moved) is removed explicitly — dynamic overwrite
-    *      cannot express "this partition now has zero rows" (the same
-    *      failure mode [[graft.streaming.StreamingNearDup]] guards).
-    *
-    * An update may move a row across partitions (its destination is by
-    * definition one of the source rows' partitions, hence affected and
-    * rewritten). At 100 TB this is the whole point: a MERGE touching
-    * one day of a year-partitioned fact table rewrites 1/365th of the
-    * table, and the shuffle is sized by the affected slice, not the
-    * table. */
+    * affected = target partitions holding matched keys ∪ the source
+    * rows' own partitions, so an update that moves a row across
+    * partitions lands in a rewritten one, and the shuffle is sized by
+    * the affected slice, not the table. */
   def mergeIntoParquet(spark: SparkSession, dir: String,
       source: DataFrame, keys: Seq[String], partitionCol: String,
       deleteWhen: Option[Column] = None,
       extraSourceCols: Seq[String] = Nil): Seq[String] = {
     val target = spark.read.parquet(dir)
-    // null partition values are written by Spark as the Hive default
-    // directory — normalize (as in ops/Forget) so the affected set, the
-    // slice filter, and the emptied-dir cleanup all agree
-    val partNorm = coalesce(col(partitionCol).cast("string"),
-      lit(Forget.HiveDefaultPartition))
-    def partsOf(df: DataFrame): Array[String] =
-      df.select(partNorm).distinct()
-        .collect().map(_.getString(0))
-    val tParts = partsOf(
-      target.join(source.select(keys.map(col): _*), keys, "left_semi"))
-    val affected = (tParts ++ partsOf(source)).distinct.toSeq
-    if (affected.isEmpty) return Nil
-    def slice(df: DataFrame): DataFrame = df.filter(partNorm.isInCollection(affected))
-    val merged = mergeView(slice(target), slice(source), keys, deleteWhen,
-        extraSourceCols)
-      .localCheckpoint(true)
-    val written = merged.select(partNorm)
-      .distinct().collect().map(_.getString(0)).toSet
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol).parquet(dir)
-    affected.filterNot(written).foreach { v =>
-      val p = new org.apache.hadoop.fs.Path(dir, s"$partitionCol=$v")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val affected = (Rewrite.valuesOf(
+        target.join(source.select(keys.map(col): _*), keys, "left_semi"),
+        partitionCol) ++
+      Rewrite.valuesOf(source, partitionCol)).distinct
+    if (affected.nonEmpty)
+      Rewrite.partitions(spark, dir, partitionCol, affected,
+        mergeView(Rewrite.slice(target, partitionCol, affected), source,
+          keys, deleteWhen, extraSourceCols))
     affected
   }
 

@@ -122,9 +122,9 @@ object Scd {
     *      — per-key histories are change-count-sized, so the rebuild
     *      is entity-local work, and re-running the same batch is
     *      idempotent by construction;
-    *   3. dynamic-partition overwrite of the affected buckets:
-    *      untouched keys in those buckets are carried over unchanged,
-    *      untouched buckets are left byte-identical.
+    *   3. [[Rewrite.partitions]] of the affected buckets: untouched
+    *      keys in those buckets are carried over unchanged, untouched
+    *      buckets are left byte-identical.
     *
     * Late-data contract: a late row older than the latest RECORDED
     * change re-collapses against the recorded change rows only — rows
@@ -150,11 +150,8 @@ object Scd {
           .write.mode("overwrite").partitionBy("bucket").parquet(dir)
       case Some(history) =>
         val keys = batch.select(col(key)).distinct().localCheckpoint(eager = false)
-        val affected = keys.select(bucket.cast("int").as("b"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        val slice = history
-          .filter(col("bucket").isInCollection(affected))
-          .localCheckpoint(eager = false) // the write below replaces what it reads
+        val affected = Rewrite.valuesOf(keys.withColumn("bucket", bucket), "bucket")
+        val slice = Rewrite.slice(history, "bucket", affected)
         val touched = slice.join(keys, Seq(key), "left_semi")
         val carried = slice.join(keys, Seq(key), "left_anti")
         // stored versions -> change rows, re-collapsed with the batch
@@ -165,10 +162,8 @@ object Scd {
               batch.select((col(key) +: col(ts) +: col(tieBreak) +:
                 attrs.map(col)): _*)),
           key, ts, tieBreak, attrs)
-        carried.unionByName(rebuilt.withColumn("bucket", bucket))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bucket").parquet(dir)
+        Rewrite.partitions(spark, dir, "bucket", affected,
+          carried.unionByName(rebuilt.withColumn("bucket", bucket)))
     }
   }
 
@@ -217,16 +212,14 @@ object Scd {
     // whenever the scan dominates (the 100 TB posture). Same
     // documented tradeoff as Profile's string min/max pass.
     //
-    // The winner ordering is TOTAL (round-16 inherited-state fix): the
-    // version alone is the contract, but a feed that violates it — two
-    // rows tying on `version` with DIFFERENT payloads (sf0.001 has
-    // exactly one such pair, l_orderkey 1294) — made the winner
-    // partition-order-dependent and cross-engine divergent. Ties now
-    // break lexicographically on (op, payload...), ONE shared ordering
-    // struct for every max_by so the winning columns always come from
-    // the SAME row; non-tied keys (every key at the previously gated
-    // SFs) are bit-identical to the old rule. The q96 oracle pins the
-    // identical total order via a window.
+    // The winner ordering is TOTAL: the version alone is the contract,
+    // but a feed that violates it — two rows tying on `version` with
+    // DIFFERENT payloads (sf0.001 has exactly one such pair, l_orderkey
+    // 1294) — would make the winner partition-order-dependent and
+    // cross-engine divergent. Ties break lexicographically on (op,
+    // payload...), ONE shared ordering struct for every max_by so the
+    // winning columns always come from the SAME row. The q96 oracle
+    // pins the identical total order via a window.
     val ord = struct((version +: op +: payload).map(col): _*)
     changelog.groupBy(keys.map(col): _*)
       .agg(max(col(version)).as("last_version"),
@@ -243,11 +236,9 @@ object Scd {
     * test data; packing holds while partkey, suppkey < 2^20), so the
     * winner's OUTPUT is deterministic either way. */
   def q96CdcApply(spark: SparkSession, dir: String): DataFrame = {
-    // spreadScan (round 16): safe ONLY because applyChangelogKeepOps'
-    // winner ordering is now total — under the old version-only rule
-    // the sf0.001 tie at l_orderkey 1294 made the winner depend on
-    // partition evaluation order, and this repartition flipped it
-    // (caught by the sf0.001 oracle gate, fixed at the operator).
+    // spreadScan is safe ONLY because applyChangelogKeepOps' winner
+    // ordering is total: under a version-only rule this repartition
+    // flips the winner of the sf0.001 tie at l_orderkey 1294.
     val log = graft.Tables.spreadScan(spark, dir, "lineitem")
       .select(col("l_orderkey"),
         (col("l_linenumber").cast("long") * lit(1099511627776L) +

@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
-import graft.ops.{Clean, Enrich, Ledger}
+import graft.ops.{Clean, Enrich, Ledger, Rewrite}
 import graft.schema.Schemas
 
 /** Batch-mode incremental file pipeline — the reference's whole `main()`
@@ -394,32 +394,24 @@ object FilePipeline {
       meta.rowsInserted, archived, meta.failures + ingest.failures)
   }
 
-  /** K5 backfill — enrich fact rows whose metadata arrived in a later run.
-    * Partition-scoped: only day partitions that actually contain null-key
-    * rows are rewritten, via dynamic-partition overwrite — a one-day
-    * backfill pays one day's rewrite, not a full-table one, and untouched
-    * day directories are left byte-identical. The affected slice is
-    * materialized (localCheckpoint) before the overwrite so the write
-    * doesn't read from the path it replaces; partition commits go through
-    * Spark's staging protocol, so there is no delete→rename window in
-    * which the table is missing. (A Delta MERGE is the managed-format
+  /** K5 backfill — enrich fact rows whose metadata arrived in a later run:
+    * the reference's batched join-UPDATE as a partition-scoped
+    * [[graft.ops.Rewrite.partitions]]. Only day partitions that contain
+    * null-key rows are rewritten, so a one-day backfill pays one day's
+    * rewrite, not a full-table one, and untouched day directories are
+    * left byte-identical. (A Delta MERGE is the managed-format
     * equivalent.) */
   def backfillEnrichment(spark: SparkSession, root: String): Long = {
     val layout = Layout(root)
     val fact = readFact(spark, layout)
-    // `day` reads back as DATE — compare as string
     val perDay = fact.filter(col("simulation_num").isNull)
-      .groupBy(col("day").cast("string").as("day")).count().collect()
+      .groupBy(Rewrite.value("day")).count().collect()
     val nullRows = perDay.map(_.getLong(1)).sum
     if (nullRows == 0) return 0L
     val days = perDay.map(_.getString(0)).toSeq
-    val affected = fact.filter(col("day").cast("string").isInCollection(days))
-    val enriched = Enrich.enrichFact(affected, readDim(spark, layout))
-      .select((Schemas.factSimSchema.fieldNames.map(col) :+ col("day")): _*)
-      .localCheckpoint(true)
-    enriched.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("day").parquet(layout.factTable)
+    Rewrite.partitions(spark, layout.factTable, "day", days,
+      Enrich.enrichFact(Rewrite.slice(fact, "day", days), readDim(spark, layout))
+        .select((Schemas.factSimSchema.fieldNames.map(col) :+ col("day")): _*))
     nullRows
   }
 }

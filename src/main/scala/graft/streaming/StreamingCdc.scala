@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{Merge, Scd}
+import graft.ops.{Merge, Rewrite, Scd}
 
 /** Streaming CDC apply: fold a Debezium-shaped changelog stream
   * (key columns, a monotone `version` offset, an `op` code with 'D'
@@ -24,7 +24,7 @@ import graft.ops.{Merge, Scd}
   * TOMBSTONES ARE RETAINED, not physically deleted: a delete upserts
   * the key's row with `_deleted = true` and the tombstone's version as
   * `last_version`. This is what makes the staleness guard total — if a
-  * delete removed the row (round 6's behavior), a later-arriving batch
+  * delete removed the row, a later-arriving batch
   * carrying an OLDER upsert for that key would see no stored offset and
   * silently resurrect deleted data. With the watermark row retained,
   * stale post-delete upserts compare against the tombstone's version
@@ -126,33 +126,17 @@ object StreamingCdc {
     * `horizonVersion` — i.e. old enough that, per the pipeline's
     * delivery-skew contract, no out-of-order change referencing them
     * can still arrive. Rewrites only partitions holding an expirable
-    * tombstone (copy-on-write, like the merge itself); partitions left
-    * empty are removed. Returns the rewritten partition values. */
+    * tombstone ([[Rewrite.partitions]], like the merge itself);
+    * partitions left empty are removed. Returns the rewritten partition
+    * values. */
   def vacuumTombstones(spark: SparkSession, targetDir: String,
       partitionCol: String, horizonVersion: Long): Seq[String] = {
     val t = spark.read.parquet(targetDir)
     val expired = col("_deleted") && col("last_version") < horizonVersion
-    // null partition values live on disk as the Hive default directory —
-    // normalize like ops/Forget so the affected set, the rewrite filter,
-    // and the directory cleanup agree
-    val partNorm = coalesce(col(partitionCol).cast("string"),
-      lit(graft.ops.Forget.HiveDefaultPartition))
-    val parts = t.filter(expired)
-      .select(partNorm)
-      .distinct().collect().map(_.getString(0)).toSeq
-    if (parts.isEmpty) return Nil
-    val inParts = partNorm.isInCollection(parts)
-    val kept = t.filter(inParts && !expired).localCheckpoint(true)
-    val written = kept.select(partNorm)
-      .distinct().collect().map(_.getString(0)).toSet
-    kept.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol).parquet(targetDir)
-    parts.filterNot(written).foreach { v =>
-      val p = new org.apache.hadoop.fs.Path(targetDir, s"$partitionCol=$v")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val parts = Rewrite.valuesOf(t.filter(expired), partitionCol)
+    if (parts.nonEmpty)
+      Rewrite.partitions(spark, targetDir, partitionCol, parts,
+        Rewrite.slice(t, partitionCol, parts).filter(!expired))
     parts
   }
 

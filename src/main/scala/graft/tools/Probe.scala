@@ -200,9 +200,39 @@ object Probe {
     }
   }
 
+  /** Per-replica rewrite of the content no key shift separates, so no
+    * two replicas share an exact text or vector: replica r moves each
+    * word of `documents.text` r places along the table's sorted
+    * vocabulary (`n_chars` follows) and rotates each
+    * `embeddings.embedding` by r coordinates. Both are bijections, so
+    * a replica keeps the 1x table's duplicate, shingle and distance
+    * structure within itself instead of duplicating the 1x rows across
+    * replicas; replica 0 is the 1x table. */
+  private def perturb(t: String, src: DataFrame): (DataFrame, Int) => DataFrame =
+    t match {
+      case "documents" =>
+        val vocab = src.select(explode(split(col("text"), " "))).distinct()
+          .collect().map(_.getString(0)).sorted
+        require(vocab.length >= Replicas,
+          s"${vocab.length} words cannot tell $Replicas replicas apart")
+        (d, r) => {
+          val moved = typedLit(vocab.indices
+            .map(i => vocab(i) -> vocab((i + r) % vocab.length)).toMap)
+          d.withColumn("text", array_join(
+              transform(split(col("text"), " "), w => element_at(moved, w)), " "))
+            .withColumn("n_chars", length(col("text")).cast("long"))
+        }
+      case "embeddings" =>
+        val e = col("embedding")
+        (d, r) => d.withColumn("embedding",
+          transform(e, (_, i) => element_at(e, pmod(i + r, size(e)) + 1)))
+      case _ => (d, _) => d
+    }
+
   /** Writes the [[Replicas]]-fold tree of every table in `sfDir` into
     * `outDir`: each table of [[KeyShifts]] as `Replicas` copies with
-    * its keys shifted per copy, every other table once. */
+    * its keys shifted and its content [[perturb]]ed per copy, every
+    * other table once. */
   private[graft] def synthesize(spark: SparkSession, sfDir: String,
       outDir: String): Unit = {
     val tables = Option(new File(sfDir).list()).toSeq.flatten
@@ -212,10 +242,11 @@ object Probe {
       val src = Tables(spark, sfDir, t)
       val shifts = KeyShifts.getOrElse(t, Nil)
       val copies = if (shifts.isEmpty) 1 else Replicas
+      val content = perturb(t, src)
       (0 until copies).map { r =>
-        shifts.foldLeft(src) { case (d, (k, step)) =>
+        content(shifts.foldLeft(src) { case (d, (k, step)) =>
           d.withColumn(k, col(k) + lit(r * step))
-        }
+        }, r)
       }.reduce(_ union _)
         .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     }

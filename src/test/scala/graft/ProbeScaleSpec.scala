@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions.col
 /** `Probe scale` compares 1x against a synthesized 10x tree. The ratios
   * only mean scaling if the tree is whole and each replica joins only
   * itself: every table present, the fact-like tables 10x, the
-  * dimensions once, and each key join matching exactly 10x its 1x rows. */
+  * dimensions once, each key join matching exactly 10x its 1x rows,
+  * and 10x the distinct texts and vectors, so dedup and similarity
+  * queries do not see each document nine more times. */
 class ProbeScaleSpec extends SparkSpecBase {
 
   private val Replicated = Seq("customer", "documents", "embeddings",
@@ -33,6 +35,13 @@ class ProbeScaleSpec extends SparkSpecBase {
         assert(rows(big, t) == 10 * rows(sf0001, t), t)
       }
       Dims.foreach(t => assert(rows(big, t) == rows(sf0001, t), t))
+      // no replica copies another's text or vector verbatim
+      Seq("documents" -> "text", "embeddings" -> "embedding").foreach {
+        case (t, c) =>
+          def distinct(dir: String): Long =
+            Tables(spark, dir, t).select(col(c)).distinct().count()
+          assert(distinct(big) == 10 * distinct(sf0001), s"$t.$c")
+      }
       Seq(("lineitem", "l_orderkey", "orders", "o_orderkey"),
           ("orders", "o_custkey", "customer", "c_custkey"),
           ("lineitem", "l_partkey", "part", "p_partkey"),
