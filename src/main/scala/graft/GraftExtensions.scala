@@ -35,146 +35,83 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
 
-    ext.injectFunction((
-      FunctionIdentifier("fingerprint64"),
-      new ExpressionInfo(classOf[Fingerprint64].getName, "fingerprint64"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c) => Fingerprint64(c)
-        case _ => throw new IllegalArgumentException(
-          "fingerprint64(text) takes exactly one argument")
-      }))
+    /** Register SQL function `name` of expression class `cls`: `build`
+      * maps the arguments it accepts, and any other argument list raises
+      * `usage`. */
+    def register(name: String, cls: Class[_], usage: String)(
+        build: PartialFunction[Seq[Expression], Expression]): Unit =
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (args: Seq[Expression]) => build.applyOrElse(args,
+          (_: Seq[Expression]) => throw new IllegalArgumentException(usage))))
 
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c) => ShingleHashes(c, 3)
-        case Seq(c, Literal(k: Int, _)) => ShingleHashes(c, k)
-        case _ => throw new IllegalArgumentException(
-          "shingle_hashes(text[, k: int literal])")
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hashes_md5"),
-      new ExpressionInfo(
-        classOf[ShingleHashesMd5].getName, "shingle_hashes_md5"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c) => ShingleHashesMd5(c, 3)
-        case Seq(c, Literal(k: Int, _)) => ShingleHashesMd5(c, k)
-        case _ => throw new IllegalArgumentException(
-          "shingle_hashes_md5(text[, k: int literal])")
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c) => NfcNormalize(c)
-        case _ => throw new IllegalArgumentException(
-          "nfc_normalize(text) takes exactly one argument")
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("trigram_lang_scores"),
-      new ExpressionInfo(
-        classOf[TrigramLangScores].getName, "trigram_lang_scores"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c) => TrigramLangScores(c)
-        case _ => throw new IllegalArgumentException(
-          "trigram_lang_scores(text) takes exactly one argument")
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("trigram_lang_score_sums"),
-      new ExpressionInfo(
-        classOf[TrigramLangScoreSums].getName, "trigram_lang_score_sums"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c) => TrigramLangScoreSums(c)
-        case _ => throw new IllegalArgumentException(
-          "trigram_lang_score_sums(text) takes exactly one argument")
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(
-        classOf[CosineSimilarity].getName, "cosine_similarity"),
-      (args: Seq[Expression]) => args match {
-        case Seq(a, b) => CosineSimilarity(a, b)
-        case _ => throw new IllegalArgumentException(
-          "cosine_similarity(a: array<float>, b: array<float>)")
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("int_dot"),
-      new ExpressionInfo(classOf[IntDot].getName, "int_dot"),
-      (args: Seq[Expression]) => args match {
-        case Seq(a, b) => IntDot(a, b)
-        case _ => throw new IllegalArgumentException(
-          "int_dot(a: array<bigint>, b: array<bigint>)")
-      }))
+    register("fingerprint64", classOf[Fingerprint64],
+        "fingerprint64(text) takes exactly one argument") {
+      case Seq(c) => Fingerprint64(c)
+    }
+    register("shingle_hashes", classOf[ShingleHashes],
+        "shingle_hashes(text[, k: int literal])") {
+      case Seq(c) => ShingleHashes(c, 3)
+      case Seq(c, Literal(k: Int, _)) => ShingleHashes(c, k)
+    }
+    register("shingle_hashes_md5", classOf[ShingleHashesMd5],
+        "shingle_hashes_md5(text[, k: int literal])") {
+      case Seq(c) => ShingleHashesMd5(c, 3)
+      case Seq(c, Literal(k: Int, _)) => ShingleHashesMd5(c, k)
+    }
+    register("nfc_normalize", classOf[NfcNormalize],
+        "nfc_normalize(text) takes exactly one argument") {
+      case Seq(c) => NfcNormalize(c)
+    }
+    register("trigram_lang_scores", classOf[TrigramLangScores],
+        "trigram_lang_scores(text) takes exactly one argument") {
+      case Seq(c) => TrigramLangScores(c)
+    }
+    register("trigram_lang_score_sums", classOf[TrigramLangScoreSums],
+        "trigram_lang_score_sums(text) takes exactly one argument") {
+      case Seq(c) => TrigramLangScoreSums(c)
+    }
+    register("cosine_similarity", classOf[CosineSimilarity],
+        "cosine_similarity(a: array<float>, b: array<float>)") {
+      case Seq(a, b) => CosineSimilarity(a, b)
+    }
+    register("int_dot", classOf[IntDot],
+        "int_dot(a: array<bigint>, b: array<bigint>)") {
+      case Seq(a, b) => IntDot(a, b)
+    }
 
     // sketch aggregates: a builder may return the bare AggregateFunction —
     // the analyzer wraps it in an AggregateExpression
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sketch"),
-      new ExpressionInfo(classOf[MinHashAgg].getName, "minhash_sketch"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c) => MinHashAgg(c, 64)
-        case Seq(c, Literal(k: Int, _)) => MinHashAgg(c, k)
-        case _ => throw new IllegalArgumentException(
-          "minhash_sketch(feature_hash: bigint[, k: int literal])")
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("simhash_sketch"),
-      new ExpressionInfo(classOf[SimHashAgg].getName, "simhash_sketch"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c) => SimHashAgg(c)
-        case _ => throw new IllegalArgumentException(
-          "simhash_sketch(feature_hash: bigint) takes exactly one argument")
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("kmv_sketch"),
-      new ExpressionInfo(classOf[KmvAgg].getName, "kmv_sketch"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c) => KmvAgg(c, 256)
-        case Seq(c, Literal(k: Int, _)) => KmvAgg(c, k)
-        case _ => throw new IllegalArgumentException(
-          "kmv_sketch(feature_hash: bigint[, k: int literal])")
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("bloom_build"),
-      new ExpressionInfo(classOf[BloomBuildAgg].getName, "bloom_build"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c) => BloomBuildAgg(c, 1 << 20, 7)
-        case Seq(c, Literal(bits: Int, _), Literal(h: Int, _)) =>
-          BloomBuildAgg(c, bits.toLong, h)
-        case Seq(c, Literal(bits: Long, _), Literal(h: Int, _)) =>
-          BloomBuildAgg(c, bits, h)
-        case _ => throw new IllegalArgumentException(
-          "bloom_build(feature_hash: bigint[, bits, hashes: int literals])")
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("might_contain"),
-      new ExpressionInfo(
-        classOf[BloomMightContain].getName, "might_contain"),
-      (args: Seq[Expression]) => args match {
-        case Seq(f, k) => BloomMightContain(f, k)
-        case _ => throw new IllegalArgumentException(
-          "might_contain(filter: binary, feature_hash: bigint)")
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("misra_gries"),
-      new ExpressionInfo(classOf[MisraGriesAgg].getName, "misra_gries"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c) => MisraGriesAgg(c, 64)
-        case Seq(c, Literal(k: Int, _)) => MisraGriesAgg(c, k)
-        case _ => throw new IllegalArgumentException(
-          "misra_gries(token: string[, k: int literal])")
-      }))
+    register("minhash_sketch", classOf[MinHashAgg],
+        "minhash_sketch(feature_hash: bigint[, k: int literal])") {
+      case Seq(c) => MinHashAgg(c, 64)
+      case Seq(c, Literal(k: Int, _)) => MinHashAgg(c, k)
+    }
+    register("simhash_sketch", classOf[SimHashAgg],
+        "simhash_sketch(feature_hash: bigint) takes exactly one argument") {
+      case Seq(c) => SimHashAgg(c)
+    }
+    register("kmv_sketch", classOf[KmvAgg],
+        "kmv_sketch(feature_hash: bigint[, k: int literal])") {
+      case Seq(c) => KmvAgg(c, 256)
+      case Seq(c, Literal(k: Int, _)) => KmvAgg(c, k)
+    }
+    register("bloom_build", classOf[BloomBuildAgg],
+        "bloom_build(feature_hash: bigint[, bits, hashes: int literals])") {
+      case Seq(c) => BloomBuildAgg(c, 1 << 20, 7)
+      case Seq(c, Literal(bits: Int, _), Literal(h: Int, _)) =>
+        BloomBuildAgg(c, bits.toLong, h)
+      case Seq(c, Literal(bits: Long, _), Literal(h: Int, _)) =>
+        BloomBuildAgg(c, bits, h)
+    }
+    register("might_contain", classOf[BloomMightContain],
+        "might_contain(filter: binary, feature_hash: bigint)") {
+      case Seq(f, k) => BloomMightContain(f, k)
+    }
+    register("misra_gries", classOf[MisraGriesAgg],
+        "misra_gries(token: string[, k: int literal])") {
+      case Seq(c) => MisraGriesAgg(c, 64)
+      case Seq(c, Literal(k: Int, _)) => MisraGriesAgg(c, k)
+    }
   }
 }

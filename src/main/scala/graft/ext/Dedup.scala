@@ -533,8 +533,8 @@ object Dedup {
     * span strings themselves). */
   def spanDedup(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     // sort = oracle determinism only; the reusable Of form is sort-free.
-    // NOT spread: re-measured round-17 under the gap-slice cut shape
-    // (the r16 rejection predated it) — still flat (1.03/0.99)
+    // NOT spread: flat under the gap-slice cut shape (1.03/0.99,
+    // OPTIMIZATION_r17.md §10)
     spanDedupOf(Tables(spark, dir, "documents"), k)
       .orderBy(col("doc_id"))
 
@@ -674,9 +674,9 @@ object Dedup {
   def repeatSpans(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     // sort = oracle determinism only; the reusable Of form (whose span
     // merge StreamingRepeatSpans pays per micro-batch) stays sort-free.
-    // spreadScan: round-17 re-measure under the gap-slice cut shape
-    // (the r16 rejection predated it) — A/B 1.13/1.18 across two runs;
-    // q120's cost IS the windowed span build above the single-task scan
+    // spreadScan: A/B 1.13/1.18 across two runs under the gap-slice cut
+    // shape (OPTIMIZATION_r17.md §10); q120's cost IS the windowed span
+    // build above the single-task scan
     repeatSpansOf(Tables.spreadScan(spark, dir, "documents"), k)
       .orderBy(col("doc_id"), col("span_start"))
 
@@ -733,8 +733,8 @@ object Dedup {
   def repeatSpanRemoval(spark: SparkSession, dir: String,
       k: Int = 10): DataFrame =
     // sort = oracle determinism only; the reusable Of form is sort-free.
-    // NOT spread: re-measured round-17 under the gap-slice cut shape —
-    // still a loss (0.85/0.92; the cut join reads the scan twice and
+    // NOT spread: a loss under the gap-slice cut shape (0.85/0.92,
+    // OPTIMIZATION_r17.md §10; the cut join reads the scan twice and
     // the added exchanges outprice the narrow span build)
     repeatSpanRemovalOf(Tables(spark, dir, "documents"), k)
       .orderBy(col("doc_id"))

@@ -212,9 +212,9 @@ object Similarity {
       maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
     import spark.implicits._
     // NOT spread: parallelizing the single-file embeddings scan before
-    // the table keying A/B'd 0.76/0.65 (round-17, two runs) — the
-    // candidate join + cap stages dominate and the added exchange is
-    // pure price here
+    // the table keying A/B'd 0.76/0.65 (two runs, OPTIMIZATION_r17.md
+    // §10) — the candidate join + cap stages dominate and the added
+    // exchange is pure price here
     val ds = vecs(spark, dir)
     val bits = if (nBits > 0) nBits else autoBits(ds.count())
     // the guard's anti-join fronts the bucket keys — reselect the tuple
@@ -352,8 +352,9 @@ object Similarity {
     // persisted: read once for the count, the table keying, and both
     // sides of the candidate scoring join (same fix annIvf got — without
     // it the parquet is re-scanned 4x per call). NOT spread: repartition
-    // before the persist A/B'd 0.82/0.87 (round-17, two runs) — the
-    // window top-k and candidate-join stages dominate, not the keying.
+    // before the persist A/B'd 0.82/0.87 (two runs, OPTIMIZATION_r17.md
+    // §10) — the window top-k and candidate-join stages dominate, not
+    // the keying.
     val ds = vecs(spark, dir).persist()
     try {
     // keyspace grows with the corpus (nBits ≤ 0 → autoBits) so bucket
@@ -1212,7 +1213,7 @@ object Similarity {
     * unchanged while recall (measured exactly by q199) rises from the
     * 25–50%% the single-list filter scored on the fixtures. Raise P
     * toward nLists for recall → 1 at proportional candidate cost;
-    * P = 1 is the round-14 single-list behavior. */
+    * P = 1 is the single-list filter. */
   private[graft] val SemDecProbes = 4
 
   /** q190: semantic (embedding-level) decontamination — flag corpus

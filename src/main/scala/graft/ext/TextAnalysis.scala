@@ -379,8 +379,8 @@ object TextAnalysis {
     * deterministic fixed-point log — built only from IEEE-correctly-
     * rounded ops, bit-identical in every engine — quantized to BIGINT
     * micro-nats and summed exactly, so neither libm ulp drift nor float
-    * summation order can flip the output anywhere (round 6's q78
-    * failure mode, eliminated rather than made unlikely). */
+    * summation order can flip the output anywhere (eliminated rather
+    * than made unlikely). */
   def unigramLogprob(spark: SparkSession, dir: String): DataFrame =
     // sort = oracle determinism only; the reusable Of form is sort-free
     unigramLogprobOf(Tables(spark, dir, "documents"))
@@ -415,12 +415,10 @@ object TextAnalysis {
       .agg(count(lit(1)).as("k"))
     val counts = docTok.groupBy(col("w")).agg(sum(col("k")).as("c"))
       .localCheckpoint(eager = false)
-    // the eager `total` scalar stays (round-17 measured): folding it
-    // into the DAG as a 1-row broadcast cross join (the q107 pattern)
-    // A/B'd 0.96 — the broadcast-build job replaces the scalar job one
-    // for one and the head() usefully materializes the checkpointed
-    // counts before the two downstream readers, same finding as
-    // round 16's q107 n-fold examination
+    // the eager `total` scalar stays: a 1-row broadcast cross join in
+    // its place would swap the scalar job for a broadcast-build job one
+    // for one, and the head() materializes the checkpointed counts
+    // before the two downstream readers (OPTIMIZATION_r17.md §6)
     val total = counts.agg(sum(col("c"))).head().getLong(0)
     // per-WORD deterministic micro-nat score, computed once on the
     // vocabulary table: lnFix(c) − lnFix(total) quantized to BIGINT
@@ -466,10 +464,9 @@ object TextAnalysis {
     * multiply and order-free summation, no libm dependence. */
   def bigramLogprob(spark: SparkSession, dir: String): DataFrame =
     // sort = oracle determinism only; the reusable Of form is sort-free.
-    // NOT spread: the round-16 interleaved A/B rejected spreading the
-    // documents scan here (0.87 — the chain is multi-stage and its
-    // exchanges already parallelize the heavy aggregates; the added
-    // 32-task stage is pure price on the narrow head)
+    // NOT spread: the chain is multi-stage and its exchanges already
+    // parallelize the heavy aggregates, so a spread scan's added
+    // 32-task stage is pure price on the narrow head (A/B 0.87)
     bigramLogprobOf(Tables(spark, dir, "documents"))
       .orderBy(col("doc_id"))
 
@@ -647,8 +644,8 @@ object TextAnalysis {
     // integer ratio:
     //   ln((c_tgt+1)/T') − ln(c_raw/T) = ln((c_tgt+1)·T) − ln(c_raw·T')
     // scored per VOCABULARY word with DetLn's engine-invariant lnFix and
-    // quantized to BIGINT micro-nats — the round-6 q78 driver-vs-local
-    // divergence (libm ulp drift under round(·,6)) is structurally gone
+    // quantized to BIGINT micro-nats — libm ulp drift under round(·,6)
+    // cannot split the driver from the local engine
     val scored = DetLn.withLnFix(DetLn.withLnFix(counts,
         "ln_a", s"(c_tgt + 1) * $tRaw"), "ln_b", s"c_raw * $tTgtV")
       .withColumn("lr_micro", expr(DetLn.microSql("ln_a - ln_b")))
@@ -936,8 +933,8 @@ object TextAnalysis {
     // idf = ln(1 + (N−df+0.5)/(df+0.5)) = ln((2N+2)/(2df+1)): an exact
     // integer ratio, scored with DetLn's engine-invariant lnFix; the
     // per-term contribution quantizes to BIGINT micro-nats (exact,
-    // order-free summation — the round-6dp/round-4dp libm knife edges
-    // are structurally gone)
+    // order-free summation — the libm knife edges of a 6- or 4-decimal
+    // round are structurally gone)
     val dfScored = DetLn.withLnFix(DetLn.withLnFix(dfT,
       "ln_a", (2 * n + 2).toString), "ln_b", "2 * df + 1")
     tf.join(broadcast(dfScored), "w")
@@ -1136,7 +1133,7 @@ object TextAnalysis {
     * noise — base64 blobs, minified data, or too-short fragments.
     *
     * One narrow codegen'd map ([[graft.functions.Lzw]]), zero shuffle
-    * at any corpus size. Fully oracled since round 16: the DuckDB twin
+    * at any corpus size. Fully oracled: the DuckDB twin
     * ([[compressionRatioOracle]]) replays the per-byte LZW state
     * machine as a recursive CTE — dictionary carried as a LIST of
     * packed (prefix<<8|byte) keys (code of the k-th appended entry =

@@ -84,12 +84,11 @@ object Unigram {
     * the oracle replays ([[DetLn.withLnFix]]), then collected: a score
     * table is vocab-sized config, never corpus-sized. */
   private[graft] def scoresOf(counts: DataFrame): Map[String, Long] = {
-    // the eager T scalar stays (round-17 measured): riding it into the
-    // DAG as a 1-row broadcast cross join replaces the head() job with
-    // a broadcast-build job one for one (OptProbe: 15 jobs either
-    // way), and the same fold pattern A/B'd 0.96 on q64 — the head()
-    // also usefully materializes the per-round checkpoint before the
-    // score collect reads it
+    // the eager T scalar stays: riding it into the DAG as a 1-row
+    // broadcast cross join swaps the head() job for a broadcast-build
+    // job one for one (OPTIMIZATION_r17.md §6), and the head() also
+    // materializes the per-round checkpoint before the score collect
+    // reads it
     val t = counts.agg(sum(col("c") + 1).as("t")).head().getLong(0)
     DetLn.withLnFix(
         DetLn.withLnFix(counts.withColumn("c1", col("c") + 1),
@@ -150,11 +149,9 @@ object Unigram {
     // lazy checkpoint: the round's result materializes inside the NEXT
     // consumer's job (the following round's score collect), not as its
     // own barrier job. That consumer still evaluates the segment
-    // closure over `bc`, so the broadcast must NOT be destroyed here —
-    // the pre-round-16 eager form could release it eagerly; the lazy
-    // form leaves reclamation to the ContextCleaner once the closure
-    // is unreferenced (local mode masked the hazard via the driver's
-    // broadcast value cache; round-17 removes it).
+    // closure over `bc`, so the broadcast must NOT be destroyed here;
+    // the ContextCleaner reclaims it once the closure is unreferenced
+    // (OPTIMIZATION_r17.md §7).
     vocab.select(col("p"))
       .join(used, Seq("p"), "left")
       .select(col("p"), coalesce(col("u"), lit(0L)).as("c"))

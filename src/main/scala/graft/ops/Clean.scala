@@ -1,6 +1,6 @@
 package graft.ops
 
-import java.io.{BufferedReader, InputStreamReader}
+import java.io.{BufferedReader, FileNotFoundException, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
@@ -14,45 +14,44 @@ import graft.schema.Schemas
   * The reference cleans a CSV in three steps: rename, check the required
   * columns, drop the pandas index artifact (file_manager.py:53-62). All
   * three follow from the header line alone, so here they are one rule,
-  * [[shape]], and one projection per header shape, [[readCleaned]]. The
+  * [[shape]], and one projection per header shape, [[cleanedFiles]]. The
   * reference reads each CSV three times (clean, validate, COPY;
-  * file_manager.py:47, database_manager.py:46-47, 89); here the clean
-  * stage is one distributed scan, and the pipeline adds one
-  * column-pruned pre-scan of the id column ([[scanFileIds]]) so that it
-  * can decide each file before writing any row.
+  * file_manager.py:47, database_manager.py:46-47, 89); here one CSV
+  * relation per header shape serves both reads of the fact stage: a
+  * column-pruned pre-scan of the id column ([[scanFileIds]]), so that
+  * the pipeline can decide each file before writing any row, and the
+  * write of the files that passed.
   */
 object Clean {
 
   /** First line of a file — the CSV header. Bounded metadata-scale I/O
     * (one buffered line per file), the same cost class as the directory
-    * listing that produced the path. */
+    * listing that produced the path. A file gone since it was listed has
+    * none. */
   private def firstLine(conf: org.apache.hadoop.conf.Configuration,
       p: Path): Option[String] = {
-    val in = p.getFileSystem(conf).open(p)
+    val in =
+      try p.getFileSystem(conf).open(p)
+      catch { case _: FileNotFoundException => return None }
     try {
       val r = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
       Option(r.readLine()).filter(_.nonEmpty)
     } finally in.close()
   }
 
-  /** Group files by their exact header line. A Spark CSV read given a
+  /** Group listed files by their exact header line. A Spark CSV read given a
     * user schema binds columns POSITIONALLY (per-file headers ignored
     * under the default enforceSchema), and a schemaless multi-file read
     * takes its header from the FIRST file only — either way, one read
     * over files of mixed shape (with/without the `Unnamed: 0` artifact)
     * silently column-shifts the minority shape. Per-header groups make
-    * each read's schema exactly its files' shape. Empty/unreadable files
-    * are absent from the result (callers quarantine them). */
+    * each read's schema exactly its files' shape. Empty files and files
+    * gone before the header peek are absent from the result (callers
+    * quarantine them). */
   def groupByHeader(spark: SparkSession,
-      paths: Seq[String]): Map[String, Seq[String]] = {
+      files: Seq[Path]): Map[String, Seq[Path]] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val files = paths.flatMap { s => // expand globs; literal paths pass through
-      val p = new Path(s)
-      Option(p.getFileSystem(conf).globStatus(p)).toSeq.flatten
-        .filter(_.isFile).map(_.getPath)
-    }
-    files.flatMap(p => firstLine(conf, p).map(_ -> p.toString))
-      .groupBy(_._1).map { case (h, ps) => h -> ps.map(_._2) }
+    files.flatMap(p => firstLine(conf, p).map(_ -> p)).groupMap(_._1)(_._2)
   }
 
   /** Header lines contain no quoted commas (FIXTURES.md §1.1), so a comma
@@ -89,38 +88,43 @@ object Clean {
     substring_index(
       substring_index(col("_metadata.file_path"), "/", -2), "/", 1)
 
-  /** One schema-bound scan per header shape (header line → paths): each
-    * file's columns bind BY HEADER NAME under an all-strings schema that
-    * matches its own shape. */
-  private def scans(spark: SparkSession,
-      byHeader: Map[String, Seq[String]]): Seq[(String, DataFrame)] = {
+  /** The cleaned frame's column holding each row's `_metadata.file_path`:
+    * the URL-encoded URI its relation lists the file under. */
+  val FilePath = "file_path"
+
+  /** A1 + C1/C2/F1/F2 + C5 — the cleaned rows of pre-grouped CSV files
+    * (header line → paths, [[groupByHeader]]), each with its file. Each
+    * shape is one CSV relation, its columns bound BY HEADER NAME under an
+    * all-strings schema of its own shape, and one `select`: the required
+    * columns, renamed and cast to [[Schemas.factSimSchema]]'s types,
+    * `day` from the file's directory (replacing the reference's
+    * positional filename slicing, main.py:23), then [[FilePath]]. The
+    * selects share one column order, so the shapes combine with a plain
+    * `union`. A filter on [[FilePath]] prunes files before any is read.
+    * Throws naming the missing columns when a header fails [[shape]]. */
+  def cleanedFiles(spark: SparkSession,
+      byHeader: Map[String, Seq[Path]]): DataFrame = {
     require(byHeader.nonEmpty, "no readable CSV files to ingest")
+    val types = Schemas.factSimSchema.fields.map(f => f.name -> f.dataType).toMap
     byHeader.toSeq.sortBy(_._1).map { case (header, ps) =>
       val schema = StructType(headerColumns(header)
         .map(c => StructField(c, StringType, nullable = true)))
-      header -> spark.read.option("header", "true").schema(schema).csv(ps: _*)
-    }
-  }
-
-  /** A1 + C1/C2/F1/F2 + C5 — the cleaned rows of pre-grouped CSV files
-    * (header line → paths, [[groupByHeader]]). Each shape is one scan and
-    * one `select`: the required columns, renamed and cast to
-    * [[Schemas.factSimSchema]]'s types, then `day` from the file's
-    * directory (replacing the reference's positional filename slicing,
-    * main.py:23). The selects share one column order, so the shapes
-    * combine with a plain `union`. Throws naming the missing columns when
-    * a header fails [[shape]]. */
-  def readCleaned(spark: SparkSession,
-      byHeader: Map[String, Seq[String]]): DataFrame = {
-    val types = Schemas.factSimSchema.fields.map(f => f.name -> f.dataType).toMap
-    scans(spark, byHeader).map { case (header, df) =>
-      df.select(validShape(header).map { case (t, s) =>
-        col(s).cast(types(t)).as(t) } :+ dayOfFile.as("day"): _*)
+      spark.read.option("header", "true").schema(schema)
+        .csv(ps.map(_.toString): _*)
+        .select(validShape(header).map { case (t, s) =>
+          col(s).cast(types(t)).as(t) } :+ dayOfFile.as("day") :+
+          col("_metadata.file_path").as(FilePath): _*)
     }.reduce(_.union(_))
   }
 
+  /** [[cleanedFiles]] without the file column. */
+  def readCleaned(spark: SparkSession,
+      byHeader: Map[String, Seq[Path]]): DataFrame =
+    cleanedFiles(spark, byHeader).drop(FilePath)
+
   /** What one file's in-file ids are: its row count, how many rows have
-    * no id, and the least and greatest id (null when every id is). */
+    * no id, and the least and greatest id (null when every id is).
+    * `path` is the file's [[FilePath]] as its relation spells it. */
   case class FileIds(path: String, rows: Long, nullIds: Long,
       minId: String, maxId: String) {
     /** Every row of the file carries `id`. */
@@ -148,20 +152,16 @@ object Clean {
     acc.valuesIterator
   }
 
-  /** The id pre-scan: each group's scan parses only the column that
-    * [[shape]] reads `simulation_id` from, keyed by `_metadata.file_path`
-    * (URL-encoded URI). Each partition folds its rows into one partial
-    * per file and the driver merges the partials (a file split across
-    * partitions has several): one job, no exchange. Files without a data
-    * row are absent from the result. */
-  def scanFileIds(spark: SparkSession,
-      byHeader: Map[String, Seq[String]]): Seq[FileIds] = {
-    import spark.implicits._
-    val ids = scans(spark, byHeader).map { case (header, df) =>
-      val idCol = validShape(header).toMap.apply("simulation_id")
-      df.select(col(idCol).as("id"), col("_metadata.file_path").as("path"))
-    }.reduce(_.union(_))
-    ids.as[(String, String)].mapPartitions(filePartials).collect().toSeq
+  /** The id pre-scan of a [[cleanedFiles]] frame: its (simulation_id,
+    * [[FilePath]]) projection, so each shape's scan parses only the
+    * column that [[shape]] reads `simulation_id` from. Each partition
+    * folds its rows into one partial per file and the driver merges the
+    * partials (a file split across partitions has several): one job, no
+    * exchange. Files without a data row are absent from the result. */
+  def scanFileIds(cleaned: DataFrame): Seq[FileIds] = {
+    import cleaned.sparkSession.implicits._
+    cleaned.select(col("simulation_id"), col(FilePath)).as[(String, String)]
+      .mapPartitions(filePartials).collect().toSeq
       .groupMapReduce(_.path)(identity)(_.merge(_)).values.toSeq
   }
 }

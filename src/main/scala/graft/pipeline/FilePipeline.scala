@@ -23,12 +23,13 @@ import graft.schema.Schemas
   *      date_run, simulation_id, offset by the dim's high-water mark),
   *      appended to the dim table; an id the dim already holds is not
   *      numbered again;
-  *   2. fact stage: new `rxndata_<uuid>.csv` → a pre-scan of the id
-  *      column, then one scan of the files that passed, cleaned by one
-  *      projection per header shape ([[Clean.readCleaned]]), enriched
-  *      against the *current* dim via broadcast join at write time (the
-  *      reference's post-hoc batched UPDATE loop disappears), appended to
-  *      the day-partitioned fact table. Nothing is cached;
+  *   2. fact stage: new `rxndata_<uuid>.csv` → one cleaned frame, one
+  *      CSV relation and projection per header shape
+  *      ([[Clean.cleanedFiles]]); a pre-scan of its id column, then a
+  *      write of the same frame filtered to the files that passed,
+  *      enriched against the *current* dim via broadcast join at write
+  *      time (the reference's post-hoc batched UPDATE loop disappears),
+  *      appended to the day-partitioned fact table. Nothing is cached;
   *   3. one ledger append holding both stages' rows, after the fact write.
   *
   * Each rule lives in one place: the file-name rule ([[fileName]]), the
@@ -155,11 +156,10 @@ object FilePipeline {
     def failures: Int = ledgerRows.count(_.status == "failed")
   }
 
-  /** A listed file's identity as `<day>/<name>`, comparable between the
-    * listing and a scanned file's `_metadata.file_path` URI. */
-  private def fileKey(p: Path): String = s"${p.getParent.getName}/${p.getName}"
-
-  private def fileKey(uri: String): String = fileKey(new Path(new URI(uri)))
+  /** A file's identity on both sides of a scan: the path of its URI, so
+    * a listed `file:/x` and a scanned or streamed `file:///x` are one
+    * file. */
+  private def fileKey(uri: URI): String = uri.getPath
 
   /** The claim rule of both stages, in path order: a file fails with its
     * own reason when `check` gives one; otherwise the first file of an id
@@ -195,11 +195,12 @@ object FilePipeline {
     * same hardening:
     *
     *   - files are read grouped by exact header shape, each shape through
-    *     one projection ([[Clean.readCleaned]]), so artifact and
+    *     one projection ([[Clean.cleanedFiles]]), so artifact and
     *     artifact-less files of one batch bind by name;
     *   - a file whose header fails [[Clean.shape]] (a required column
-    *     missing after rename), or that is empty, is quarantined whole —
-    *     ledger 'failed', zero rows written — instead of failing the batch;
+    *     missing after rename), that is empty or that is gone since it
+    *     was listed, is quarantined whole — ledger 'failed', zero rows
+    *     written — instead of failing the batch;
     *   - a file not named `rxndata_<uuid>.csv`, or whose in-file
     *     SimulationID disagrees with that uuid (FIXTURES.md contract), is
     *     quarantined whole, header-only or not;
@@ -210,50 +211,47 @@ object FilePipeline {
     *   - one final-status ledger row per file, returned for the caller
     *     to append ([[ingestBatch]]).
     *
-    * Two passes over the files, nothing cached: a pre-scan that parses
-    * only the id column and returns, per file, its row count, null ids
-    * and least and greatest id ([[Clean.scanFileIds]]); the driver then
-    * decides each file (the file-name rule runs once per file, not per
-    * row), and one streaming write reads only the files that passed.
+    * One cleaned frame, two passes over its files, nothing cached: a
+    * pre-scan that parses only the id column and returns, per file, its
+    * row count, null ids and least and greatest id
+    * ([[Clean.scanFileIds]]); the driver then decides each file (the
+    * file-name rule runs once per file, not per row), and one streaming
+    * write filters the frame to the passing files' own pre-scan paths,
+    * which prunes the rest before any of their rows is parsed.
     *
     * Driver work is O(files) (header peek, per-file decisions and ledger
     * rows); all row-level compute is distributed. */
   def ingestCsvFiles(spark: SparkSession, layout: Layout,
       csvFiles: Seq[Path]): StageIngest = {
     val t0 = new Timestamp(System.currentTimeMillis())
-    val goodGroups = Clean.groupByHeader(spark, csvFiles.map(_.toString))
+    val byHeader = Clean.groupByHeader(spark, csvFiles)
       .filter { case (h, _) => Clean.shape(h).isRight }
-    // files absent here are headerless, empty or miss a required column
-    val validHeader =
-      goodGroups.values.flatten.map(s => fileKey(new Path(s))).toSet
-    val idScan =
-      if (goodGroups.isEmpty) Map.empty[String, Clean.FileIds]
-      else Clean.scanFileIds(spark, goodGroups).map(f => fileKey(f.path) -> f).toMap
+    // files absent here are empty, gone or miss a required column
+    val validHeader = byHeader.values.flatten.toSet
+    // one relation per header shape: the pre-scan and the write read it
+    lazy val cleaned = Clean.cleanedFiles(spark, byHeader)
+    val scanned =
+      if (byHeader.isEmpty) Map.empty[String, Clean.FileIds]
+      else Clean.scanFileIds(cleaned).map(f => fileKey(new URI(f.path)) -> f).toMap
+    val idsOf = csvFiles.flatMap(p => scanned.get(fileKey(p.toUri)).map(p -> _)).toMap
     // a file with no data row has no in-file id to disagree with its name
     val decided = decide(csvFiles, { p =>
-      val k = fileKey(p)
-      if (!validHeader(k))
+      if (!validHeader(p))
         Some("header missing required columns or file unreadable")
       else if (!fileName(p).exists(n =>
-          n.wellFormed && idScan.get(k).forall(_.allAre(n.id))))
+          n.wellFormed && idsOf.get(p).forall(_.allAre(n.id))))
         Some("in-file SimulationID disagrees with filename")
       else None
     })
-    val passed = decided.collect { case (p, None) => fileKey(p) }.toSet
-    // dim ids are unique, so the enrichment's left join writes exactly
-    // the pre-scan's counts
-    def rowsOf(p: Path): Long = idScan.get(fileKey(p)).fold(0L)(_.rows)
-    // the passing files with a data row, by header shape
-    val toWrite = goodGroups.map { case (h, ps) =>
-      h -> ps.filter { s =>
-        val k = fileKey(new Path(s))
-        passed(k) && idScan.contains(k)
-      }
-    }.filter(_._2.nonEmpty)
+    // the passing files with a data row
+    val toWrite = decided.collect { case (p, None) if idsOf.contains(p) => p }
 
     if (toWrite.nonEmpty) {
+      val passing = cleaned
+        .filter(col(Clean.FilePath).isInCollection(toWrite.map(idsOf(_).path)))
+        .drop(Clean.FilePath)
       val enriched = Enrich.enrichFact(
-        Clean.readCleaned(spark, toWrite).withColumns(Map(
+        passing.withColumns(Map(
           "row_id" -> monotonically_increasing_id(),
           "simulation_num" -> lit(null).cast("int"))),
         readDim(spark, layout))
@@ -270,19 +268,21 @@ object FilePipeline {
       // (header kept, no index column, like df.to_csv(index=False) at
       // file_manager.py:63), appended so successive runs accumulate. Its
       // file names are Spark task parts: provenance lives in the ledger.
-      // The driver knows each file's day, so each day's write reads only
-      // that day's files; the loop is bounded by the batch's day count
+      // Each day's write filters the same frame to that day, which
+      // prunes the other days' files; the loop is bounded by the batch's
+      // day count
       if (layout.processedParity)
-        toWrite.toSeq.flatMap { case (h, ps) => ps.map(s => (h, s)) }
-          .groupBy { case (_, s) => new Path(s).getParent.getName }
-          .toSeq.sortBy(_._1).foreach { case (day, hs) =>
-            Clean.readCleaned(spark, hs.groupMap(_._1)(_._2))
-              .select(Schemas.requiredCols.map(col): _*)
-              .write.option("header", "true").mode("append")
-              .csv(s"${layout.processed}/$day")
-          }
+        toWrite.map(_.getParent.getName).distinct.sorted.foreach { day =>
+          passing.filter(col("day") === day)
+            .select(Schemas.requiredCols.map(col): _*)
+            .write.option("header", "true").mode("append")
+            .csv(s"${layout.processed}/$day")
+        }
     }
-    outcome(Ledger.EtlTypeCsv, t0, decided, rowsOf)
+    // dim ids are unique, so the enrichment's left join writes exactly
+    // the pre-scan's counts
+    outcome(Ledger.EtlTypeCsv, t0, decided,
+      p => idsOf.get(p).fold(0L)(_.rows))
   }
 
   /** Metadata-stage ingest of a concrete file list (K4, fixed:
@@ -327,14 +327,15 @@ object FilePipeline {
     Enrich.requireDimRows(rows.size.toLong, Enrich.DimRowCap,
       "ingestMetadataFiles")
     def idOf(r: Row) = r.getAs[String]("simulation_id")
-    val byFile = rows.groupBy(r => fileKey(r.getAs[String]("_file")))
+    val byFile = rows.groupBy(r => fileKey(new URI(r.getAs[String]("_file"))))
+    val rowsOf = metaFiles.map(p => p -> byFile.getOrElse(fileKey(p.toUri), Nil)).toMap
     val decided = decide(metaFiles, p =>
-      byFile.getOrElse(fileKey(p), Nil) match {
+      rowsOf(p) match {
         case Seq(r) if fileName(p).exists(n => n.wellFormed && n.id == idOf(r)) =>
           None
         case _ => Some("metadata validation failed or id/filename mismatch")
       })
-    val fresh = decided.collect { case (p, None) => p -> byFile(fileKey(p)).head }
+    val fresh = decided.collect { case (p, None) => p -> rowsOf(p).head }
       .filterNot { case (_, r) => state.dimNums.contains(idOf(r)) }
     if (fresh.nonEmpty) {
       val numbered = spark.createDataFrame(

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -20,7 +21,9 @@ import org.apache.spark.sql.types.StructType
   *     never silently summed;
   *   - compact into the reserved `batch_id=-1` partition: materialize →
   *     commit −1 → delete the sources, `src_batch` kept verbatim so a
-  *     batch replayed after compaction still excludes its own rows.
+  *     batch replayed after compaction still excludes its own rows;
+  *   - snapshot an index latest-wins: one row per key, from its latest
+  *     batch.
   *
   * Each module keeps only its own decisions: its schema, its
   * compaction fold, and which sinks it writes. */
@@ -87,6 +90,20 @@ private[streaming] object DeltaIndex {
       spark.read.schema(schema).parquet(outDir)
     }
   }
+
+  /** The latest-wins snapshot rule: one row per `key`, the one from the
+    * latest batch (a re-delivery supersedes its earlier row). Exact
+    * duplicate rows collapse first, and a same-batch conflict is decided
+    * by `tieBreak` ascending, in order — arbitrary but stable, so two
+    * snapshots of identical state always agree. `tieBreak` names every
+    * other column kept; the result is `key` then `tieBreak`. */
+  def latest(rows: DataFrame, key: String, tieBreak: String*): DataFrame =
+    rows.select((key +: tieBreak :+ "batch_id").map(col): _*)
+      .distinct()
+      .withColumn("_rk", row_number().over(Window.partitionBy(col(key))
+        .orderBy(col("batch_id").desc +: tieBreak.map(col): _*)))
+      .filter(col("_rk") === 1)
+      .select((key +: tieBreak).map(col): _*)
 
   /** Fold every partition but `batch_id=-1` into `batch_id=-1`: read
     * the whole index under [[readDeltas]], apply the module's `fold`

@@ -83,15 +83,8 @@ object StreamingCcnet {
     * scored SO FAR — the batch q170 rollup applied to the streamed
     * state after latest-wins revisit dedup. */
   def snapshot(spark: SparkSession, outDir: String): DataFrame = {
-    val latest = readScored(spark, outDir)
-      .select(col("doc_id"), col("pred_lang"), col("alp_i"),
-        col("toks"), col("batch_id"))
-      .distinct()
-      .withColumn("_rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-          .orderBy(col("batch_id").desc, col("alp_i"),
-            col("pred_lang"), col("toks"))))
-      .filter(col("_rk") === 1)
+    val latest = DeltaIndex.latest(readScored(spark, outDir), "doc_id",
+        "alp_i", "pred_lang", "toks")
       .select(col("doc_id"), col("pred_lang"),
         col("alp_i").as("_alp_i"), col("toks").as("_toks"))
     graft.ext.Warc.ccnetRollupOf(latest)

@@ -31,24 +31,27 @@ object StreamingIngest {
     * The stream tracks FILES, not parsed rows: a CSV file source needs a
     * fixed user schema, which binds columns positionally (per-file headers
     * ignored) — a file lacking the optional `Unnamed: 0` artifact would be
-    * silently column-shifted. So the source is a `text` stream (schema is
-    * just `value`; the checkpoint still gives exactly-once per file and
-    * `cleanSource=archive` still moves committed files), and the batch
-    * body splits the batch's file list by suffix and hands both halves
-    * to the batch run's own body ([[FilePipeline.ingestBatch]]): metadata
-    * files first (id/filename reconciliation, dim-keyed numbering from
-    * the high-water mark) so CSVs arriving in the SAME micro-batch enrich
+    * silently column-shifted. So the source is a `binaryFile` stream that
+    * selects only `path`: one row per file and no content read (the
+    * checkpoint still gives exactly-once per file and
+    * `cleanSource=archive` still moves committed files). The batch body
+    * splits the batch's file list by suffix and hands both halves to the
+    * batch run's own body ([[FilePipeline.ingestBatch]]): metadata files
+    * first (id/filename reconciliation, dim-keyed numbering from the
+    * high-water mark) so CSVs arriving in the SAME micro-batch enrich
     * against the fresh dim rows, then fact CSVs (per-header-shape schema
     * binding, invalid-header quarantine, id-mismatch and duplicate-id
     * quarantine, write-time enrichment), then one ledger append. Each
     * micro-batch with metadata files reads the dim's keys once
     * ([[graft.ops.Ledger.readState]] without the ledger: the checkpoint,
-    * not the ledger, selects the files). The file data is read twice
-    * (once by the source, once parsed); micro-batches are bounded by
-    * maxFilesPerTrigger, and correctness beats the extra bounded scan.
-    * Note one streaming-specific deviation: quarantined files are still
+    * not the ledger, selects the files).
+    *
+    * Two streaming-specific deviations: quarantined files are still
     * archived by the source (the checkpoint marks them consumed); their
-    * ledger rows record the failure. */
+    * ledger rows record the failure. And a 0-byte file never reaches the
+    * batch body: the file source skips it, so it gets no ledger row, yet
+    * `cleanSource=archive` still moves it. Batch mode ledgers the same
+    * file as failed and keeps it in `incoming/`. */
   def start(spark: SparkSession, root: String,
       checkpoint: String, maxFilesPerTrigger: Int = 50,
       archiveSource: Boolean = true): StreamingQuery = {
@@ -61,16 +64,18 @@ object StreamingIngest {
         reader.option("cleanSource", "archive")
           .option("sourceArchiveDir", layout.archive)
       else reader
-    val raw = withArchive
-      .text(s"${layout.incoming}/*")
-      .select(input_file_name().as("_file"))
+    val paths = withArchive
+      .format("binaryFile")
+      // a file stream must be given its schema: binaryFile's fixed one
+      .schema("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
+      .load(s"${layout.incoming}/*")
+      .select("path")
 
-    raw.writeStream
+    paths.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val files = batch.select("_file").distinct()
-          .collect().map(r => new Path(r.getString(0)))
+        val files = batch.collect().map(r => new Path(r.getString(0)))
           .toSeq.sortBy(_.toString)
         val (jsonFiles, csvFiles) =
           files.partition(_.getName.endsWith(".json"))

@@ -97,24 +97,18 @@ object StreamingIvf {
     * always agree. Refuses postings from more than one index
     * definition (see class doc). */
   def snapshot(spark: SparkSession, outDir: String): DataFrame = {
-    val all = readPostings(spark, outDir)
-      .select(col("vec_id"), col("list_id"), col("index_fp"),
-        col("batch_id"))
-      .distinct()
+    val postings = readPostings(spark, outDir)
     // distinct fp count is tiny by construction (one per index
     // definition ever written here) — collect them ALL so the refusal
     // message reports the true mix size, not a limit(3) artifact
-    val fps = all.select(col("index_fp")).distinct()
+    val fps = postings.select(col("index_fp")).distinct()
       .collect().map(_.getLong(0)).sorted
     require(fps.length <= 1,
       s"IVF postings at $outDir mix ${fps.length} index definitions " +
         s"(fps ${fps.mkString(", ")}) — postings of different centroid " +
         "sets are not mergeable; re-assign into a fresh index dir")
-    all
-      .withColumn("_rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("vec_id"))
-          .orderBy(col("batch_id").desc, col("list_id"))))
-      .filter(col("_rk") === 1)
+    // one index_fp left, so list_id alone decides a same-batch conflict
+    DeltaIndex.latest(postings, "vec_id", "list_id", "index_fp")
       .select(col("vec_id"), col("list_id"))
   }
 

@@ -63,24 +63,10 @@ object StreamingRedirects {
     * it into duplicate (or contradictory) rows per origin. */
   def snapshot(spark: SparkSession, outDir: String,
       maxHops: Int = Redirects.MaxHops): DataFrame = {
-    // a URL revisited WITHIN one micro-batch ties on batch_id, and an
-    // untiebroken row_number would pick a nondeterministic winner —
-    // snapshot() could flip verdicts between calls on identical state.
-    // Exact duplicates collapse first (distinct); a genuinely
-    // contradictory same-batch pair is decided by the (http_status,
-    // location) order — arbitrary but STABLE, so two snapshots of the
-    // same index always agree.
-    val latest = readFetches(spark, outDir)
-      .select(col("url"), col("http_status"), col("location"),
-        col("batch_id"))
-      .distinct()
-      .withColumn("_rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("url"))
-          .orderBy(col("batch_id").desc, col("http_status"),
-            col("location"))))
-      .filter(col("_rk") === 1)
-      .select(col("url"), col("http_status"), col("location"))
-    Redirects.resolveOf(latest, maxHops)
+    // a URL revisited WITHIN one micro-batch ties on batch_id: a
+    // contradictory same-batch pair is decided by (http_status, location)
+    Redirects.resolveOf(DeltaIndex.latest(readFetches(spark, outDir),
+      "url", "http_status", "location"), maxHops)
   }
 
   /** Start the fetch-index sink over a streaming (url, http_status,

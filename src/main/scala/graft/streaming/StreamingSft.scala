@@ -69,18 +69,8 @@ object StreamingSft {
     * full row key. */
   private def latestTurns(spark: SparkSession,
       outDir: String): DataFrame =
-    readTurns(spark, outDir)
-      .select(col("event_id"), col("user_id"), col("us"),
-        col("event_type"), col("value"), col("batch_id"))
-      .distinct()
-      .withColumn("_rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("event_id"))
-          .orderBy(col("batch_id").desc, col("us"), col("user_id"),
-            col("event_type"), col("value"))))
-      .filter(col("_rk") === 1)
-      .select(col("event_id"), col("user_id"), col("us"),
-        col("event_type"), col("value"))
+    DeltaIndex.latest(readTurns(spark, outDir), "event_id",
+      "us", "user_id", "event_type", "value")
 
   /** q193 over every turn streamed so far — the SAME thread rollup the
     * batch query runs, applied to latest-wins state. */

@@ -1,13 +1,18 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types.{DoubleType, StringType}
 import graft.ops.Clean
 import graft.schema.Schemas
 
 class CleanSpec extends SparkSpecBase {
 
-  private def cleaned(glob: String) =
-    Clean.readCleaned(spark, Clean.groupByHeader(spark, Seq(glob)))
+  private def cleaned(glob: String) = {
+    val p = new Path(glob)
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .globStatus(p).map(_.getPath).toSeq
+    Clean.readCleaned(spark, Clean.groupByHeader(spark, files))
+  }
 
   test("rename maps every unit-annotated header to snake_case") {
     val root = TestFixtures.tempRoot("clean-rename")

@@ -10,21 +10,35 @@ import org.scalatest.funsuite.AnyFunSuite
   * copy is how the readers drifted apart before. */
 class DeltaIndexSpec extends AnyFunSuite {
 
-  test("no streaming module other than DeltaIndex builds a batch_id= " +
-      "partition path or an empty index frame of its own") {
+  /** The streaming modules other than DeltaIndex whose source holds any
+    * of `marks`. */
+  private def copiesOf(marks: String*): Seq[String] = {
     val dir = Paths.get("src/main/scala/graft/streaming")
     val files = Files.list(dir).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".scala")).toSeq
     assert(files.exists(_.getFileName.toString == "DeltaIndex.scala"))
-    val copies = files
+    files
       .filterNot(_.getFileName.toString == "DeltaIndex.scala")
       .filter { f =>
         val src = Files.readString(f)
-        src.contains("batch_id=$") || src.contains("emptyRDD[")
+        marks.exists(src.contains)
       }
       .map(_.getFileName.toString).sorted
+  }
+
+  test("no streaming module other than DeltaIndex builds a batch_id= " +
+      "partition path or an empty index frame of its own") {
+    val copies = copiesOf("batch_id=$", "emptyRDD[")
     assert(copies.isEmpty,
       s"${copies.mkString(", ")} carry their own copy of the " +
         "DeltaIndex recipe")
+  }
+
+  test("no streaming module other than DeltaIndex ranks an index's rows " +
+      "latest batch first") {
+    val copies = copiesOf("col(\"batch_id\").desc")
+    assert(copies.isEmpty,
+      s"${copies.mkString(", ")} carry their own copy of the " +
+        "latest-wins snapshot rule")
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import graft.ops.Ledger
 import graft.pipeline.FilePipeline
@@ -542,6 +543,9 @@ class PipelineSpec extends SparkSpecBase {
     TestFixtures.writeCsv(root, "2024-03-01", 98, 5)
     TestFixtures.writeCsv(root, "2024-03-02", 99, 5, withArtifact = false)
     TestFixtures.writeMetadata(root, "2024-03-01", 98)
+    // the first file's shape, quarantined by the pre-scan
+    TestFixtures.writeCsv(root, "2024-03-01", 97, 5,
+      inFileIdOverride = Some(TestFixtures.simUuid(77)))
     val plans = mutable.Buffer.empty[SparkPlan]
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -561,17 +565,26 @@ class PipelineSpec extends SparkSpecBase {
       GraftBus.drain(sc)
       r
     } finally spark.listenerManager.unregister(listener)
-    assert(r.factRowsInserted == 10 && r.failures == 0)
+    assert(r.factRowsInserted == 10 && r.failures == 1)
     assert(sc.getPersistentRDDs.size <= cachedBefore)
     val nodes = plans.toSeq.map(PlanNodes.all)
-    // in order: the pre-scan's scans read only the id, the write's the rest
-    val csvScans = nodes.map(_.collect {
+    val scanPlans = nodes.map(_.collect {
       case s: FileSourceScanExec
-          if s.relation.fileFormat.isInstanceOf[CSVFileFormat] =>
-        s.requiredSchema.fieldNames.toSeq
+          if s.relation.fileFormat.isInstanceOf[CSVFileFormat] => s
     }).filter(_.nonEmpty)
+    // in order: the pre-scan's scans read only the id, the write's the rest
+    val csvScans = scanPlans.map(_.map(_.requiredSchema.fieldNames.toSeq))
     assert(csvScans.size == 2)
     assert(csvScans.head == Seq(Seq("SimulationID"), Seq("SimulationID")))
+    // one relation per header shape: the write scans the pre-scan's own
+    // file indexes, and reads only the two passing files of the three
+    val Seq(preScans, writeScans) = scanPlans
+    assert(writeScans.forall(w =>
+      preScans.exists(_.relation.location eq w.relation.location)))
+    assert(writeScans.map(_.relation.location).distinct.size == 2)
+    def filesRead(scans: Seq[FileSourceScanExec]) =
+      scans.map(_.metrics("numFiles").value).sum
+    assert(filesRead(preScans) == 3 && filesRead(writeScans) == 2)
     // the pre-scan merges per-file partials on the driver: no exchange
     val preScan = nodes.find(_.exists {
       case s: FileSourceScanExec =>
@@ -584,6 +597,24 @@ class PipelineSpec extends SparkSpecBase {
     assert(!all.exists(_.isInstanceOf[InMemoryTableScanExec]))
     assert(!all.exists(_.expressions.exists(
       _.exists(_.isInstanceOf[RegExpExtract]))))
+  }
+
+  test("a CSV gone between the listing and the header peek is ledgered failed") {
+    val root = TestFixtures.tempRoot("pipe-vanished")
+    val kept = TestFixtures.writeCsv(root, "2024-03-01", 111, 4)
+    val gone = TestFixtures.writeCsv(root, "2024-03-01", 112, 4)
+    Files.delete(gone)
+    // java.nio spells these file:///…, a Hadoop listing file:/…
+    val files = Seq(kept, gone).map(f => new Path(f.toUri))
+    val layout = FilePipeline.Layout(root.toString)
+    val ingest = FilePipeline.ingestCsvFiles(spark, layout, files)
+    assert(ingest.rowsInserted == 4 && ingest.okFiles == files.take(1))
+    assert(FilePipeline.readFact(spark, layout).count() == 4)
+    assert(ingest.ledgerRows.map(e =>
+      (e.simulation_id, e.status, e.records_inserted, e.error_message)) == Seq(
+      (TestFixtures.simUuid(111), "success", 4L, None),
+      (TestFixtures.simUuid(112), "failed", 0L,
+        Some("header missing required columns or file unreadable"))))
   }
 }
 
