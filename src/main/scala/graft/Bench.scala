@@ -43,8 +43,8 @@ object Bench {
   private val CanaryQueries =
     Seq("q115_srp_codes", "q23_ngram_jaccard", "q71_media_content_stats")
 
-  /** Committed quiet-band canary medians (sf0.1, cpus=32, steal-flat
-    * run BENCH_DETAIL_r14_d.json: steal 0.3/[0.1,0.1]/0.1). The 2x
+  /** Committed quiet-band canary medians (sf0.1, cpus=32, from the
+    * steal-flat run named above: steal 0.3/[0.1,0.1]/0.1). The 2x
     * contamination threshold sits far above run-to-run jitter (the
     * canaries' own min/max spread is ~15%) and well below the 5-20x
     * inflation observed under co-tenancy waves. */

@@ -28,9 +28,9 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A query that throws must leave an explicit, machine-readable trace:
-    // round 8 proved a silent row omission (q114 crashed → no parquet dir
-    // → the correctness artifact simply had one fewer row and read as
-    // 100% pass on its own). Collect failures and dump them to
+    // otherwise it leaves no parquet dir, and the correctness artifact
+    // simply has one fewer row and reads as 100% pass on its own
+    // (OPTIMIZATION_r17, history). Collect failures and dump them to
     // errors.json so no registered query can ever vanish from the
     // artifacts without a recorded cause.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()

@@ -57,7 +57,7 @@ object BucketCap {
     * ≤ n/cap hot rows): the earlier eager `head()` probe was one extra
     * driver round-trip job — re-evaluating the banded derivation — per
     * capBuckets call per run, two per incremental-near-dup query
-    * (round-16, guide §1.2). Logging from inside the dataflow (not a
+    * (guide §1.2). Logging from inside the dataflow (not a
     * QueryExecutionListener reading `observe` metrics) keeps the
     * contract through EVERY consumption path: a capped frame that
     * materializes via localCheckpoint / a session-memo build / a

@@ -263,9 +263,9 @@ object Multimodal {
       import spark.implicits._
       // NOT spread: with MediaCodecs' in-memory ImageIO cache the whole
       // corpus decodes in ~0.3 s single-task, below the ~2× stage price
-      // a 32-task exchange must clear — the round-16 interleaved A/B
-      // rejected the spread build 0.42-0.71 on every decode consumer
-      // (OPTIMIZATION_r16.md). The single-partition checkpoint also
+      // a 32-task exchange must clear — an interleaved A/B rejected the
+      // spread build on every decode consumer (OPTIMIZATION_r16 §4).
+      // The single-partition checkpoint also
       // lets every consumer's trailing orderBy(doc_id) plan WITHOUT a
       // range exchange (SinglePartition satisfies OrderedDistribution).
       Tables(spark, dir, "documents")

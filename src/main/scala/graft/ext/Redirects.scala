@@ -8,9 +8,8 @@ import graft.Tables
   * fetch gate and admission: an HTTP 3xx response is not a document,
   * it's an EDGE to the URL that must consume the crawl budget, and a
   * real crawler follows those edges (bounded hops, loop-safe) to a
-  * final canonical URL before admitting anything. Closes the gap the
-  * round-11 review flagged: q154's gate silently dropped the planted
-  * 301s instead of resolving them.
+  * final canonical URL before admitting anything, where q154's gate
+  * once silently dropped the planted 301s instead of resolving them.
   *
   * Spark-first shape: the fetch table (url, http_status, location) is
   * derived once from the parsed records and `localCheckpoint`'ed, then

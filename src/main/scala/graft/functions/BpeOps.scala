@@ -121,8 +121,8 @@ object BpeKernel extends Serializable {
   * earlier form kept symbols as UTF8String and interned through
   * `sym.get(s.toString)` on every adjacent-pair probe — O(symbols ×
   * merge-rounds) fresh java.lang.String allocations per word, which
-  * was the dominant per-task cost of q83/q184/q206's encode stage
-  * (round 16). Here characters resolve to ids once, merge rounds
+  * was the dominant per-task cost of q83/q184/q206's encode stage.
+  * Here characters resolve to ids once, merge rounds
   * rewrite an int array in place, and output strings come from a
   * prebuilt id→UTF8String table — the only steady-state allocations
   * per word are the id array and the emitted token references. The

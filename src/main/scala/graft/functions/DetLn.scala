@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.expr
 
 /** Deterministic, engine-portable natural log of a positive BIGINT —
-  * the fix for the one cross-engine correctness failure the judge found
-  * (round 6: q78's `round(ln(...), 6)` rounded differently between the
+  * the fix for the one cross-engine correctness failure the oracle found
+  * (q78's `round(ln(...), 6)` rounded differently between the
   * JVM's `Math.log` and the driver's DuckDB build's `ln`, because libm
   * transcendentals are not required to be correctly rounded and differ
   * by a few ulps between implementations; any rounding of such a value

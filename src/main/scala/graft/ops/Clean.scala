@@ -3,10 +3,22 @@ package graft.ops
 import java.io.{BufferedReader, FileNotFoundException, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.util.{HashMap => JHashMap}
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.trees.BinaryLike
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.schema.Schemas
 
 /** Clean-stage operators (SURVEY.md §2 C1/C2/F1/F2, A1).
@@ -16,11 +28,11 @@ import graft.schema.Schemas
   * three follow from the header line alone, so here they are one rule,
   * [[shape]], and one projection per header shape, [[cleanedFiles]]. The
   * reference reads each CSV three times (clean, validate, COPY;
-  * file_manager.py:47, database_manager.py:46-47, 89); here one CSV
-  * relation per header shape serves both reads of the fact stage: a
-  * column-pruned pre-scan of the id column ([[scanFileIds]]), so that
-  * the pipeline can decide each file before writing any row, and the
-  * write of the files that passed.
+  * file_manager.py:47, database_manager.py:46-47, 89); here the fact
+  * stage parses each CSV once: the write consumes the rows that carry
+  * their file's id ([[agreeing]]), and the same pass folds each file's
+  * id check into an observation, which the pipeline reads before it
+  * commits the write.
   */
 object Clean {
 
@@ -92,25 +104,52 @@ object Clean {
     * the URL-encoded URI its relation lists the file under. */
   val FilePath = "file_path"
 
+  /** Open cost charged per file when the fact CSVs are split into scan
+    * tasks. Spark's default, 4 MB, lets two ~5 MB files share one split
+    * on four cores; that two-file task runs alone in a second wave while
+    * the other cores idle. At 1 MB no two files of a few MB share a task,
+    * while tiny files still pack together. */
+  private val SplitOpenCostBytes = 1L << 20
+
+  /** A session that differs from `spark` only in the open cost per file
+    * ([[SplitOpenCostBytes]]): the runtime confs `spark` has set are
+    * copied over. A file scan plans its splits from the session of its
+    * relation, not of the query that runs it, so a relation built here
+    * is split by bytes while its query, and every other scan, keeps the
+    * caller's settings. */
+  private def splitSession(spark: SparkSession): SparkSession = {
+    val s = spark.newSession()
+    val fresh = s.conf.getAll
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (!fresh.get(k).contains(v)) s.conf.set(k, v)
+    }
+    s.conf.set(SQLConf.FILES_OPEN_COST_IN_BYTES.key, SplitOpenCostBytes)
+    s
+  }
+
   /** A1 + C1/C2/F1/F2 + C5 — the cleaned rows of pre-grouped CSV files
     * (header line → paths, [[groupByHeader]]), each with its file. Each
     * shape is one CSV relation, its columns bound BY HEADER NAME under an
-    * all-strings schema of its own shape, and one `select`: the required
-    * columns, renamed and cast to [[Schemas.factSimSchema]]'s types,
-    * `day` from the file's directory (replacing the reference's
+    * all-strings schema of its own shape and split by bytes
+    * ([[splitSession]]), and one `select` in the caller's session: the
+    * required columns, renamed and cast to [[Schemas.factSimSchema]]'s
+    * types, `day` from the file's directory (replacing the reference's
     * positional filename slicing, main.py:23), then [[FilePath]]. The
     * selects share one column order, so the shapes combine with a plain
-    * `union`. A filter on [[FilePath]] prunes files before any is read.
-    * Throws naming the missing columns when a header fails [[shape]]. */
+    * `union`. Throws naming the missing columns when a header fails
+    * [[shape]]. */
   def cleanedFiles(spark: SparkSession,
       byHeader: Map[String, Seq[Path]]): DataFrame = {
     require(byHeader.nonEmpty, "no readable CSV files to ingest")
     val types = Schemas.factSimSchema.fields.map(f => f.name -> f.dataType).toMap
+    val split = splitSession(spark)
     byHeader.toSeq.sortBy(_._1).map { case (header, ps) =>
       val schema = StructType(headerColumns(header)
         .map(c => StructField(c, StringType, nullable = true)))
-      spark.read.option("header", "true").schema(schema)
+      val relation = split.read.option("header", "true").schema(schema)
         .csv(ps.map(_.toString): _*)
+        .queryExecution.analyzed.collectFirst { case r: LogicalRelation => r.relation }.get
+      spark.baseRelationToDataFrame(relation)
         .select(validShape(header).map { case (t, s) =>
           col(s).cast(types(t)).as(t) } :+ dayOfFile.as("day") :+
           col("_metadata.file_path").as(FilePath): _*)
@@ -122,46 +161,126 @@ object Clean {
       byHeader: Map[String, Seq[Path]]): DataFrame =
     cleanedFiles(spark, byHeader).drop(FilePath)
 
-  /** What one file's in-file ids are: its row count, how many rows have
-    * no id, and the least and greatest id (null when every id is).
-    * `path` is the file's [[FilePath]] as its relation spells it. */
-  case class FileIds(path: String, rows: Long, nullIds: Long,
-      minId: String, maxId: String) {
-    /** Every row of the file carries `id`. */
-    def allAre(id: String): Boolean =
-      nullIds == 0 && minId == id && maxId == id
+  /** How one file's rows stand against the id its name gives: its row
+    * count, and how many of those rows carry that id. */
+  case class FileIds(rows: Long, agreeing: Long) {
+    /** Every row of the file carries its name's id. */
+    def allAgree: Boolean = agreeing == rows
+  }
 
-    /** The same file's ids over both parts' rows. */
-    def merge(o: FileIds): FileIds = {
-      // a null id is absent, not least
-      def pick(a: String, b: String)(keepA: (String, String) => Boolean) =
-        if (a == null) b else if (b == null || keepA(a, b)) a else b
-      FileIds(path, rows + o.rows, nullIds + o.nullIds,
-        pick(minId, o.minId)(_ <= _), pick(maxId, o.maxId)(_ >= _))
+  private val FileId = "_file_id"
+  private val Agrees = "_agrees"
+
+  /** The rows of a [[cleanedFiles]] frame whose `simulation_id` is
+    * `fileId`, the id each row's file must carry, and the check of every
+    * file against that id: an [[Observation]] of one [[FileIds]] per file
+    * id ([[idsOf]]), folded over all of the frame's rows before the
+    * filter. The fold rides the action that consumes the rows, so the
+    * check launches no job of its own and each file is parsed once; the
+    * observation is ready once that action has run. `fileId` must tell
+    * the frame's files apart; a file without a data row is absent from
+    * the fold. */
+  def agreeing(cleaned: DataFrame, fileId: Column): (DataFrame, Observation) = {
+    val obs = Observation()
+    val rows = cleaned
+      .withColumns(Map(FileId -> fileId,
+        Agrees -> coalesce(col("simulation_id") === fileId, lit(false))))
+      .observe(obs, ColumnBridge.column(FileIdFold(
+        ColumnBridge.expression(col(FileId)), ColumnBridge.expression(col(Agrees)))
+        .toAggregateExpression()).as(FileId))
+      .filter(col(Agrees))
+      .drop(FileId, Agrees)
+    (rows, obs)
+  }
+
+  /** The per-file counts an [[agreeing]] observation folded. */
+  def idsOf(obs: Observation): Map[String, FileIds] =
+    obs.get(FileId).asInstanceOf[scala.collection.Map[String, Row]]
+      .map { case (id, r) => id -> FileIds(r.getLong(0), r.getLong(1)) }.toMap
+}
+
+/** The fold behind [[Clean.agreeing]]: (file id, row agrees) rows into
+  * one (rows, agreeing) count pair per file id, a map of [[Clean.FileIds]]
+  * fields. It reads each row's file id in place, as the scan's own
+  * UTF8String, and copies it only when a file is first seen. A typed
+  * `Aggregator` decodes every row into a Scala tuple and `String` first;
+  * on the bulk benchmark tree that added about 12% to the fact write's
+  * executor CPU, and this fold adds none measurable (NOTES.md, "The fact
+  * stage in one pass"). */
+private[ops] case class FileIdFold(
+    left: Expression,
+    right: Expression,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[JHashMap[UTF8String, Array[Long]]]
+  with BinaryLike[Expression] {
+
+  private type Counts = JHashMap[UTF8String, Array[Long]]
+
+  override def dataType: DataType = MapType(StringType,
+    StructType(Seq(StructField("rows", LongType, nullable = false),
+      StructField("agreeing", LongType, nullable = false))),
+    valueContainsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "file_id_fold"
+
+  override def createAggregationBuffer(): Counts = new JHashMap
+
+  override def update(buf: Counts, input: InternalRow): Counts = {
+    val id = left.eval(input).asInstanceOf[UTF8String]
+    var c = buf.get(id)
+    if (c == null) { c = new Array[Long](2); buf.put(id.clone(), c) }
+    c(0) += 1
+    if (right.eval(input).asInstanceOf[Boolean]) c(1) += 1
+    buf
+  }
+
+  override def merge(a: Counts, b: Counts): Counts = {
+    b.forEach { (id, n) =>
+      val c = a.get(id)
+      if (c == null) a.put(id, n) else { c(0) += n(0); c(1) += n(1) }
     }
+    a
   }
 
-  /** One partition's rows of (id, path), folded into one partial
-    * [[FileIds]] per file. */
-  private def filePartials(rows: Iterator[(String, String)]): Iterator[FileIds] = {
-    val acc = scala.collection.mutable.LinkedHashMap.empty[String, FileIds]
-    rows.foreach { case (id, path) =>
-      val one = FileIds(path, 1L, if (id == null) 1L else 0L, id, id)
-      acc.updateWith(path)(prior => Some(prior.fold(one)(_.merge(one))))
+  override def eval(buf: Counts): Any = {
+    val ids = new Array[Any](buf.size)
+    val counts = new Array[Any](buf.size)
+    var i = 0
+    buf.forEach { (id, c) =>
+      ids(i) = id; counts(i) = InternalRow(c(0), c(1)); i += 1
     }
-    acc.valuesIterator
+    new ArrayBasedMapData(new GenericArrayData(ids), new GenericArrayData(counts))
   }
 
-  /** The id pre-scan of a [[cleanedFiles]] frame: its (simulation_id,
-    * [[FilePath]]) projection, so each shape's scan parses only the
-    * column that [[shape]] reads `simulation_id` from. Each partition
-    * folds its rows into one partial per file and the driver merges the
-    * partials (a file split across partitions has several): one job, no
-    * exchange. Files without a data row are absent from the result. */
-  def scanFileIds(cleaned: DataFrame): Seq[FileIds] = {
-    import cleaned.sparkSession.implicits._
-    cleaned.select(col("simulation_id"), col(FilePath)).as[(String, String)]
-      .mapPartitions(filePartials).collect().toSeq
-      .groupMapReduce(_.path)(identity)(_.merge(_)).values.toSeq
+  override def serialize(buf: Counts): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream
+    val out = new DataOutputStream(bytes)
+    out.writeInt(buf.size)
+    buf.forEach { (id, c) =>
+      val b = id.getBytes
+      out.writeInt(b.length); out.write(b); out.writeLong(c(0)); out.writeLong(c(1))
+    }
+    out.flush()
+    bytes.toByteArray
   }
+
+  override def deserialize(bytes: Array[Byte]): Counts = {
+    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    val buf = createAggregationBuffer()
+    (0 until in.readInt()).foreach { _ =>
+      val b = new Array[Byte](in.readInt())
+      in.readFully(b)
+      buf.put(UTF8String.fromBytes(b), Array(in.readLong(), in.readLong()))
+    }
+    buf
+  }
+
+  override def withNewMutableAggBufferOffset(n: Int): FileIdFold =
+    copy(mutableAggBufferOffset = n)
+  override def withNewInputAggBufferOffset(n: Int): FileIdFold =
+    copy(inputAggBufferOffset = n)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): FileIdFold =
+    copy(left = newLeft, right = newRight)
 }

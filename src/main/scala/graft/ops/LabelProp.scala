@@ -59,12 +59,12 @@ object LabelProp {
     // it. The trade: the exchange ships raw votes instead of
     // partially-aggregated (n, lbl) counts — measured cheaper here
     // (votes are two longs/row, and label diversity keeps map-side
-    // combine near-useless in early rounds; round-16 A/B 1.26).
+    // combine near-useless in early rounds; A/B in OPTIMIZATION_r16 §5).
     // SHUFFLE_HASH on the node-sized label frame: the join is already
     // co-partitioned, the hint swaps each round's sort-merge (which
     // re-sorts the edge-sized adj side — the checkpoint carries hash
     // partitioning but no order) for a hash build (guide §3.1;
-    // round-16 A/B 1.13). guide §2.4.
+    // A/B in OPTIMIZATION_r16 §5). guide §2.4.
     var r = 0
     while (r < Rounds) {
       val votes = adj

@@ -50,7 +50,7 @@ object PageRank {
     // exchange-free) instead of re-joining it every iteration: each
     // round then does a single join (ranks) against the checkpointed
     // (src, dst, outdeg) frame. 8 bytes/edge of checkpoint for one
-    // fewer join per iteration (round-16 A/B: 1.11). guide §2.4/§1.2.
+    // fewer join per iteration (A/B in OPTIMIZATION_r16 §5). guide §2.4/§1.2.
     val directedOut =
       directed.join(outdeg, "src").localCheckpoint(eager = false)
     val n = outdeg.count()
@@ -67,7 +67,7 @@ object PageRank {
     // directedOut is the output of an src-keyed sort-merge join, so its
     // checkpoint already carries src order and each iteration's SMJ
     // sorts only the node-sized rank frame — the hint variant re-paid a
-    // hash build per round and measured 0.86 in the round-16 A/B
+    // hash build per iteration and lost its A/B (OPTIMIZATION_r16 §5)
     (1 to iterations).foreach { _ =>
       val contribs = directedOut
         .join(ranks.withColumnRenamed("node", "src"), "src")

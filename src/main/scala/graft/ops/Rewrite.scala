@@ -1,5 +1,8 @@
 package graft.ops
 
+import java.io.IOException
+import java.util.UUID
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -29,7 +32,11 @@ import org.apache.spark.sql.functions._
   *     only its pre-write files was not written.
   *
   * At 100 TB this is the point: a change touching one day of a
-  * year-partitioned table rewrites 1/365th of it. */
+  * year-partitioned table rewrites 1/365th of it.
+  *
+  * Appends that must be checked before they land go through the staged
+  * variant, [[staged]]: rows are written beside the table and renamed
+  * into its partition directories only once the caller accepts them. */
 object Rewrite {
 
   /** Directory name Spark and Hive use for a null partition value. A
@@ -70,5 +77,42 @@ object Rewrite {
     before.foreach { case (p, old) =>
       if (fs.exists(p) && files(p).subsetOf(old)) fs.delete(p, true)
     }
+  }
+
+  /** Append rows to the `partitionBy`-laid-out parquet table at `dir`
+    * through a run-scoped staging directory, `_staging/<uuid>` beside the
+    * table. `body` gets a `stage` function: each call writes its rows,
+    * partitioned by `partitionCol`, in place of whatever an earlier call
+    * staged, so a caller that rejects what a write showed can discard it
+    * and write again. When `body` returns, every staged file is renamed
+    * into its partition directory of the table. Staged file names carry
+    * their write's unique job id, so they never replace a table file. The
+    * staging directory is deleted whether `body` returns or throws: a
+    * failed write commits nothing.
+    *
+    * Renames are atomic on local file systems and HDFS; on object stores
+    * they are copies. A failure midway through the renames leaves the
+    * files renamed so far in the table. */
+  def staged[A](spark: SparkSession, dir: String, partitionCol: String)(
+      body: (DataFrame => Unit) => A): A = {
+    val table = new Path(dir)
+    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
+    val stage = new Path(table.getParent, s"_staging/${UUID.randomUUID}")
+    try {
+      val result = body { rows =>
+        fs.delete(stage, true)
+        rows.write.partitionBy(partitionCol).parquet(stage.toString)
+      }
+      if (fs.exists(stage))
+        fs.listStatus(stage).filter(_.isDirectory).foreach { part =>
+          val dest = new Path(table, part.getPath.getName)
+          if (!fs.mkdirs(dest)) throw new IOException(s"cannot create $dest")
+          fs.listStatus(part.getPath).filter(_.isFile).foreach { f =>
+            if (!fs.rename(f.getPath, new Path(dest, f.getPath.getName)))
+              throw new IOException(s"cannot move ${f.getPath} into $dest")
+          }
+        }
+      result
+    } finally fs.delete(stage, true)
   }
 }

@@ -6,7 +6,7 @@ import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
 import graft.ops.{Clean, Enrich, Ledger, Rewrite}
@@ -23,13 +23,16 @@ import graft.schema.Schemas
   *      date_run, simulation_id, offset by the dim's high-water mark),
   *      appended to the dim table; an id the dim already holds is not
   *      numbered again;
-  *   2. fact stage: new `rxndata_<uuid>.csv` → one cleaned frame, one
-  *      CSV relation and projection per header shape
-  *      ([[Clean.cleanedFiles]]); a pre-scan of its id column, then a
-  *      write of the same frame filtered to the files that passed,
-  *      enriched against the *current* dim via broadcast join at write
-  *      time (the reference's post-hoc batched UPDATE loop disappears),
-  *      appended to the day-partitioned fact table. Nothing is cached;
+  *   2. fact stage: new `rxndata_<uuid>.csv` → the file that claims
+  *      each id is decided from names and headers alone; the claimants
+  *      are read once, through one CSV relation and projection per
+  *      header shape ([[Clean.cleanedFiles]]), in scan tasks split by
+  *      bytes; their rows that carry the file's id are enriched against
+  *      the *current* dim via broadcast join at write time (the
+  *      reference's post-hoc batched UPDATE loop disappears) and written
+  *      to a staging directory, while the same pass checks each file's
+  *      ids; the staged files are then moved into the day-partitioned
+  *      fact table ([[graft.ops.Rewrite.staged]]). Nothing is cached;
   *   3. one ledger append holding both stages' rows, after the fact write.
   *
   * Each rule lives in one place: the file-name rule ([[fileName]]), the
@@ -42,14 +45,15 @@ import graft.schema.Schemas
   *
   *   - state read: 1 (a union of two scans, collected; no shuffle);
   *   - metadata stage: 2 — the batch collected (1), the dim append (1);
-  *   - fact stage: 3 — the id pre-scan, one partial per file and
-  *     partition merged on the driver (1), the dim broadcast (1), the
-  *     fact append (1);
+  *   - fact stage: 2 — the dim broadcast (1), the staged fact write,
+  *     which checks each file's ids as it goes (1);
   *   - ledger append: 1.
   *
-  * 7 in all, 3 of them writes; the JDBC mirror and the processed-CSV tree
-  * add their own writes, each re-reading the files it needs. A run with
-  * nothing listed launches none.
+  * 6 in all, 3 of them writes. Only a file that fails its id check
+  * partway, or a failed claimant whose id a later file then claims, makes
+  * the fact stage write again, at 2 jobs a round. The JDBC mirror and the
+  * processed-CSV tree add their own writes, each re-reading the files it
+  * needs. A run with nothing listed launches none.
   *
   * Incrementality (K2): the reference encodes "not yet ingested" as
   * file-presence in `processed/`. Here the ledger is the source of truth —
@@ -190,6 +194,16 @@ object FilePipeline {
     })
   }
 
+  /** The uuid in a scanned file's name, from its `_metadata.file_path`
+    * column: the 36 characters after the last `_`, which [[fileName]]
+    * puts right before the uuid. Only well-formed names are scanned. One
+    * string split per row, no regex. */
+  private def nameId(path: Column): Column =
+    substring(substring_index(path, "_", -1), 1, 36)
+
+  private val BadHeader = "header missing required columns or file unreadable"
+  private val IdMismatch = "in-file SimulationID disagrees with filename"
+
   /** Fact-stage ingest of a concrete file list (K1+K3+K6) — shared by the
     * batch [[run]] and the streaming foreachBatch body so both get the
     * same hardening:
@@ -201,69 +215,86 @@ object FilePipeline {
     *     missing after rename), that is empty or that is gone since it
     *     was listed, is quarantined whole — ledger 'failed', zero rows
     *     written — instead of failing the batch;
-    *   - a file not named `rxndata_<uuid>.csv`, or whose in-file
+    *   - a file not named `rxndata_<uuid>.csv`, or with any row whose
     *     SimulationID disagrees with that uuid (FIXTURES.md contract), is
     *     quarantined whole, header-only or not;
     *   - an id carried by two files of the batch is ingested once, from
-    *     the first file in path order ([[decide]]);
+    *     the first file in path order that passes ([[decide]]);
     *   - surviving rows are enriched against the current dim at write
     *     time and appended to the day-partitioned fact table;
     *   - one final-status ledger row per file, returned for the caller
     *     to append ([[ingestBatch]]).
     *
-    * One cleaned frame, two passes over its files, nothing cached: a
-    * pre-scan that parses only the id column and returns, per file, its
-    * row count, null ids and least and greatest id
-    * ([[Clean.scanFileIds]]); the driver then decides each file (the
-    * file-name rule runs once per file, not per row), and one streaming
-    * write filters the frame to the passing files' own pre-scan paths,
-    * which prunes the rest before any of their rows is parsed.
+    * One pass over the files, nothing cached. The header and name rules
+    * decide, before any read, which file claims each id; only claimants
+    * are read, in scan tasks split by bytes. One staged write
+    * ([[Rewrite.staged]]) takes the rows that carry their file's id and,
+    * in the same pass, folds each file's row counts ([[Clean.agreeing]]).
+    * A claimant with a disagreeing row fails. Usually that leaves the
+    * stage holding exactly the passing files' rows, and it is committed.
+    * Two cases take another round: a failing file wrote some rows, or a
+    * later file of a failed id now claims it. Then the stage is discarded
+    * and the next round writes the files that claim now; each round fails
+    * at least one more file, so the rounds end.
     *
     * Driver work is O(files) (header peek, per-file decisions and ledger
     * rows); all row-level compute is distributed. */
   def ingestCsvFiles(spark: SparkSession, layout: Layout,
       csvFiles: Seq[Path]): StageIngest = {
     val t0 = new Timestamp(System.currentTimeMillis())
-    val byHeader = Clean.groupByHeader(spark, csvFiles)
-      .filter { case (h, _) => Clean.shape(h).isRight }
     // files absent here are empty, gone or miss a required column
-    val validHeader = byHeader.values.flatten.toSet
-    // one relation per header shape: the pre-scan and the write read it
-    lazy val cleaned = Clean.cleanedFiles(spark, byHeader)
-    val scanned =
-      if (byHeader.isEmpty) Map.empty[String, Clean.FileIds]
-      else Clean.scanFileIds(cleaned).map(f => fileKey(new URI(f.path)) -> f).toMap
-    val idsOf = csvFiles.flatMap(p => scanned.get(fileKey(p.toUri)).map(p -> _)).toMap
-    // a file with no data row has no in-file id to disagree with its name
-    val decided = decide(csvFiles, { p =>
-      if (!validHeader(p))
-        Some("header missing required columns or file unreadable")
-      else if (!fileName(p).exists(n =>
-          n.wellFormed && idsOf.get(p).forall(_.allAre(n.id))))
-        Some("in-file SimulationID disagrees with filename")
-      else None
-    })
-    // the passing files with a data row
-    val toWrite = decided.collect { case (p, None) if idsOf.contains(p) => p }
+    val headerOf = Clean.groupByHeader(spark, csvFiles)
+      .filter { case (h, _) => Clean.shape(h).isRight }
+      .flatMap { case (h, ps) => ps.map(_ -> h) }
+    def claims(failed: Map[Path, String]) = decide(csvFiles, p =>
+      if (!headerOf.contains(p)) Some(BadHeader)
+      else if (!fileName(p).exists(_.wellFormed)) Some(IdMismatch)
+      else failed.get(p))
+    def idOf(p: Path) = fileName(p).get.id
+    // cleaned rows enriched against the current dim, as the table holds them
+    def factRows(rows: DataFrame) = Enrich.enrichFact(
+      rows.withColumns(Map(
+        "row_id" -> monotonically_increasing_id(),
+        "simulation_num" -> lit(null).cast("int"))),
+      readDim(spark, layout))
+      .select((Schemas.factSimSchema.fieldNames.map(col) :+ col("day")): _*)
 
+    val (decided, ids) = Rewrite.staged(spark, layout.factTable, "day") { stage =>
+      // the decided files and each claimant's counts
+      @scala.annotation.tailrec
+      def round(failed: Map[Path, String])
+          : (Seq[(Path, Option[String])], Map[String, Clean.FileIds]) = {
+        val claimed = claims(failed).collect { case (p, None) => p }
+        val ids =
+          if (claimed.isEmpty) Map.empty[String, Clean.FileIds]
+          else {
+            val (agreeing, obs) = Clean.agreeing(
+              Clean.cleanedFiles(spark, claimed.groupBy(headerOf)),
+              nameId(col(Clean.FilePath)))
+            stage(factRows(agreeing.drop(Clean.FilePath)))
+            Clean.idsOf(obs)
+          }
+        // a file with no data row has no in-file id to disagree with its name
+        val disagreeing = claimed.filter(p => ids.get(idOf(p)).exists(!_.allAgree))
+        val nowFailed = failed ++ disagreeing.map(_ -> IdMismatch)
+        val decided = claims(nowFailed)
+        if (disagreeing.exists(p => ids(idOf(p)).agreeing > 0) ||
+            decided.exists { case (p, f) => f.isEmpty && !claimed.contains(p) })
+          round(nowFailed)
+        else (decided, ids)
+      }
+      round(Map.empty)
+    }
+    // the passing files with a data row, each row carrying the file's id
+    val toWrite = decided.collect { case (p, None) if ids.contains(idOf(p)) => p }
     if (toWrite.nonEmpty) {
-      val passing = cleaned
-        .filter(col(Clean.FilePath).isInCollection(toWrite.map(idsOf(_).path)))
-        .drop(Clean.FilePath)
-      val enriched = Enrich.enrichFact(
-        passing.withColumns(Map(
-          "row_id" -> monotonically_increasing_id(),
-          "simulation_num" -> lit(null).cast("int"))),
-        readDim(spark, layout))
-      val out = enriched.select(
-        (Schemas.factSimSchema.fieldNames.map(col) :+ col("day")): _*)
-      out.write.mode("append").partitionBy("day").parquet(layout.factTable)
+      lazy val passing = Clean.readCleaned(spark, toWrite.groupBy(headerOf))
       // B2 parity: mirror the bulk load into the relational sink (the
       // reference's fact_sim has no day column — it's our partition key).
       // Opt-in, and it re-reads the files: nothing is cached between the
-      // two writes
+      // writes
       layout.jdbc.foreach(t =>
-        graft.sources.JdbcSink.append(out.drop("day"), t, "fact_sim"))
+        graft.sources.JdbcSink.append(factRows(passing).drop("day"), t, "fact_sim"))
       // B1 parity: the reference's cleaned-CSV processed/<day>/ tree
       // (header kept, no index column, like df.to_csv(index=False) at
       // file_manager.py:63), appended so successive runs accumulate. Its
@@ -280,9 +311,9 @@ object FilePipeline {
         }
     }
     // dim ids are unique, so the enrichment's left join writes exactly
-    // the pre-scan's counts
+    // the fold's counts
     outcome(Ledger.EtlTypeCsv, t0, decided,
-      p => idsOf.get(p).fold(0L)(_.rows))
+      p => ids.get(idOf(p)).fold(0L)(_.rows))
   }
 
   /** Metadata-stage ingest of a concrete file list (K4, fixed:

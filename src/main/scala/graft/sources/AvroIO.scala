@@ -28,8 +28,8 @@ import org.apache.spark.sql.types._
   * boolean/string/binary) plus arrays of them, each nullable via the
   * standard [null, T] union. TimestampType is REFUSED loudly — the
   * house rule exports epoch micros, never raw timestamps (events.ts
-  * has flipped physical type across testdata drops; an engine that
-  * round-trips it silently would re-learn round 3's lesson), and the
+  * has flipped physical type across testdata drops, and an engine that
+  * round-trips it silently inherits each flip), and the
   * refusal keeps this source inside the exactly-round-trippable
   * domain. Schemas travel between driver and executors as Avro JSON
   * (org.apache.avro.Schema is not serializable), re-parsed once per

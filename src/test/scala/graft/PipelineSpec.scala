@@ -348,10 +348,10 @@ class PipelineSpec extends SparkSpecBase {
     val jobs = countJobs { r = FilePipeline.run(spark, root.toString) }
     assert(r == FilePipeline.RunReport(3, 30L, 3, 3L, 6, 0))
     // state read 1 (ledger and dim keys, one union, no shuffle);
-    // metadata stage 2: collect, dim append; fact stage 3: the id
-    // pre-scan (per-partition partials, no exchange), dim broadcast, fact
-    // append; one ledger append for both stages
-    assert(jobs == 7)
+    // metadata stage 2: collect, dim append; fact stage 2: dim broadcast,
+    // the staged fact write, which checks ids as it goes; one ledger
+    // append for both stages
+    assert(jobs == 6)
   }
 
   test("a simulation id repeated in one CSV batch is written once") {
@@ -529,23 +529,14 @@ class PipelineSpec extends SparkSpecBase {
     assert(state.highWaterMark == 2L)
   }
 
-  test("the fact stage caches nothing and evaluates no per-row regex") {
+  /** `body`'s result and the executed plan of every query it ran in
+    * this session, failed ones included when they got that far. */
+  private def withPlans[A](body: => A)
+      : (A, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
     import scala.collection.mutable
     import org.apache.spark.GraftBus
-    import org.apache.spark.sql.catalyst.expressions.RegExpExtract
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
-    import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.util.QueryExecutionListener
-    val root = TestFixtures.tempRoot("pipe-planshape")
-    // two header shapes: the pre-scan reads the id column in each
-    TestFixtures.writeCsv(root, "2024-03-01", 98, 5)
-    TestFixtures.writeCsv(root, "2024-03-02", 99, 5, withArtifact = false)
-    TestFixtures.writeMetadata(root, "2024-03-01", 98)
-    // the first file's shape, quarantined by the pre-scan
-    TestFixtures.writeCsv(root, "2024-03-01", 97, 5,
-      inFileIdOverride = Some(TestFixtures.simUuid(77)))
     val plans = mutable.Buffer.empty[SparkPlan]
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -557,46 +548,151 @@ class PipelineSpec extends SparkSpecBase {
           plans.synchronized(plans += p))
     }
     val sc = spark.sparkContext
-    val cachedBefore = sc.getPersistentRDDs.size
     GraftBus.drain(sc)
     spark.listenerManager.register(listener)
-    val r = try {
-      val r = FilePipeline.run(spark, root.toString)
+    val a = try {
+      val a = body
       GraftBus.drain(sc)
-      r
+      a
     } finally spark.listenerManager.unregister(listener)
-    assert(r.factRowsInserted == 10 && r.failures == 1)
-    assert(sc.getPersistentRDDs.size <= cachedBefore)
-    val nodes = plans.toSeq.map(PlanNodes.all)
-    val scanPlans = nodes.map(_.collect {
+    (a, plans.toSeq)
+  }
+
+  /** Every CSV scan of each plan that has one. */
+  private def csvScans(plans: Seq[org.apache.spark.sql.execution.SparkPlan])
+      : Seq[Seq[org.apache.spark.sql.execution.FileSourceScanExec]] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+    plans.map(p => PlanNodes.all(p).collect {
       case s: FileSourceScanExec
           if s.relation.fileFormat.isInstanceOf[CSVFileFormat] => s
     }).filter(_.nonEmpty)
-    // in order: the pre-scan's scans read only the id, the write's the rest
-    val csvScans = scanPlans.map(_.map(_.requiredSchema.fieldNames.toSeq))
-    assert(csvScans.size == 2)
-    assert(csvScans.head == Seq(Seq("SimulationID"), Seq("SimulationID")))
-    // one relation per header shape: the write scans the pre-scan's own
-    // file indexes, and reads only the two passing files of the three
-    val Seq(preScans, writeScans) = scanPlans
-    assert(writeScans.forall(w =>
-      preScans.exists(_.relation.location eq w.relation.location)))
+  }
+
+  test("the fact stage caches nothing and evaluates no per-row regex") {
+    import org.apache.spark.sql.catalyst.expressions.RegExpExtract
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val root = TestFixtures.tempRoot("pipe-planshape")
+    // two header shapes, one CSV scan each
+    TestFixtures.writeCsv(root, "2024-03-01", 98, 5)
+    TestFixtures.writeCsv(root, "2024-03-02", 99, 5, withArtifact = false)
+    TestFixtures.writeMetadata(root, "2024-03-01", 98)
+    // the first file's shape, quarantined by the write's own id check
+    TestFixtures.writeCsv(root, "2024-03-01", 97, 5,
+      inFileIdOverride = Some(TestFixtures.simUuid(77)))
+    val sc = spark.sparkContext
+    val cachedBefore = sc.getPersistentRDDs.size
+    val (r, plans) = withPlans(FilePipeline.run(spark, root.toString))
+    assert(r.factRowsInserted == 10 && r.failures == 1)
+    assert(sc.getPersistentRDDs.size <= cachedBefore)
+    // one query reads CSVs: the fact write, one scan per header shape,
+    // each reading all eight source columns
+    val Seq(writeScans) = csvScans(plans)
+    assert(writeScans.map(_.requiredSchema.size) == Seq(8, 8))
     assert(writeScans.map(_.relation.location).distinct.size == 2)
-    def filesRead(scans: Seq[FileSourceScanExec]) =
-      scans.map(_.metrics("numFiles").value).sum
-    assert(filesRead(preScans) == 3 && filesRead(writeScans) == 2)
-    // the pre-scan merges per-file partials on the driver: no exchange
-    val preScan = nodes.find(_.exists {
-      case s: FileSourceScanExec =>
-        s.relation.fileFormat.isInstanceOf[CSVFileFormat]
-      case _ => false
-    }).get
-    assert(!preScan.exists(_.isInstanceOf[Exchange]))
-    assert(csvScans(1).forall(_.size == 8))
-    val all = nodes.flatten
+    // all three claimants are read once; the mismatched file writes no row
+    assert(writeScans.map(_.metrics("numFiles").value).sum == 3)
+    val layout = FilePipeline.Layout(root.toString)
+    assert(FilePipeline.readFact(spark, layout).select("simulation_id")
+      .distinct().collect().map(_.getString(0)).toSet ==
+      Set(TestFixtures.simUuid(98), TestFixtures.simUuid(99)))
+    assert(failedMessages(layout) == Map(TestFixtures.simUuid(97) ->
+      "in-file SimulationID disagrees with filename"))
+    val all = plans.flatMap(PlanNodes.all)
     assert(!all.exists(_.isInstanceOf[InMemoryTableScanExec]))
     assert(!all.exists(_.expressions.exists(
       _.exists(_.isInstanceOf[RegExpExtract]))))
+  }
+
+  test("a CSV with one disagreeing row is quarantined whole; the others are written once") {
+    val root = TestFixtures.tempRoot("pipe-partway")
+    TestFixtures.writeCsv(root, "2024-03-01", 120, 10)
+    val bad = TestFixtures.writeCsv(root, "2024-03-01", 121, 10)
+    TestFixtures.writeCsv(root, "2024-03-02", 122, 7)
+    // one row of the middle file carries another id: its other nine rows
+    // reach the first round's stage, which is then discarded
+    val lines = Files.readAllLines(bad)
+    lines.set(4, lines.get(4).replace(TestFixtures.simUuid(121),
+      TestFixtures.simUuid(99)))
+    Files.write(bad, lines)
+    val r = FilePipeline.run(spark, root.toString)
+    assert(r == FilePipeline.RunReport(3, 17L, 0, 0L, 2, 1))
+    val layout = FilePipeline.Layout(root.toString)
+    assert(FilePipeline.readFact(spark, layout).count() == 17)
+    assert(csvLedger(layout) == Seq(
+      (TestFixtures.simUuid(120), "success", 10L, null),
+      (TestFixtures.simUuid(121), "failed", 0L,
+        "in-file SimulationID disagrees with filename"),
+      (TestFixtures.simUuid(122), "success", 7L, null)).sorted)
+    assertLedgerCountsMatchFact(layout)
+    assert(Files.exists(bad))
+  }
+
+  test("a later file of an id is ingested when the id's first claimant fails its id check") {
+    val root = TestFixtures.tempRoot("pipe-reclaim")
+    val id = TestFixtures.simUuid(130)
+    TestFixtures.writeCsv(root, "2024-03-01", 130, 6,
+      inFileIdOverride = Some(TestFixtures.simUuid(99)))
+    TestFixtures.writeCsv(root, "2024-03-02", 130, 4)
+    TestFixtures.writeCsv(root, "2024-03-03", 130, 3)
+    val r = FilePipeline.run(spark, root.toString)
+    assert(r == FilePipeline.RunReport(3, 4L, 0, 0L, 1, 2))
+    val layout = FilePipeline.Layout(root.toString)
+    val perDay = FilePipeline.readFact(spark, layout)
+      .groupBy(col("day").cast("string")).count().collect()
+      .map(x => x.getString(0) -> x.getLong(1)).toMap
+    assert(perDay == Map("2024-03-02" -> 4L))
+    assert(csvLedger(layout) == Seq(
+      (id, "failed", 0L, "duplicate simulation_id in batch"),
+      (id, "failed", 0L, "in-file SimulationID disagrees with filename"),
+      (id, "success", 4L, null)))
+    assert(Files.exists(root.resolve(s"incoming/2024-03-01/rxndata_$id.csv")))
+    assert(Files.exists(root.resolve(s"archive/2024-03-02/rxndata_$id.csv")))
+    assert(Files.exists(root.resolve(s"incoming/2024-03-03/rxndata_$id.csv")))
+  }
+
+  test("the fact write is staged: warehouse/_staging is empty after a run, failed or not") {
+    val root = TestFixtures.tempRoot("pipe-staging")
+    val staging = root.resolve("warehouse/_staging")
+    def staged: Long =
+      if (!Files.exists(staging)) 0L else Files.list(staging).count()
+    TestFixtures.writeCsv(root, "2024-03-01", 140, 5)
+    assert(FilePipeline.run(spark, root.toString).factRowsInserted == 5)
+    assert(Files.isDirectory(staging) && staged == 0)
+    // a write that fails in its tasks: a measurement that is not a number
+    val bad = TestFixtures.writeCsv(root, "2024-03-02", 141, 3)
+    Files.writeString(bad, Files.readString(bad)
+      .replaceFirst("\n([^,\n]*,[^,\n]*,)[^,\n]*", "\n$1not-a-number"))
+    intercept[Exception](FilePipeline.run(spark, root.toString))
+    assert(staged == 0)
+    val layout = FilePipeline.Layout(root.toString)
+    assert(FilePipeline.readFact(spark, layout).count() == 5)
+    assert(!Files.exists(root.resolve("warehouse/fact_sim/day=2024-03-02")))
+  }
+
+  test("fact CSVs split by bytes: six ~1.5 MB files plan six one-file write tasks") {
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    val root = TestFixtures.tempRoot("pipe-splits")
+    val files = (1 to 6).map(i => TestFixtures.writeCsv(root, "2024-03-01", 150 + i, 15000))
+    assert(files.forall(f => Files.size(f) > 1200000L && Files.size(f) < 1800000L))
+    val openCost = "spark.sql.files.openCostInBytes"
+    val minParts = "spark.sql.files.minPartitionNum"
+    val openCostBefore = spark.conf.get(openCost)
+    // split as on four cores
+    spark.conf.set(minParts, "4")
+    val (r, plans) = try {
+      // the caller's own split rule packs the files two to a task
+      val packed = spark.read.option("header", "true")
+        .csv(files.map(_.toString): _*).rdd.getNumPartitions
+      assert(packed < 6)
+      withPlans(FilePipeline.run(spark, root.toString))
+    } finally spark.conf.unset(minParts)
+    assert(r.factRowsInserted == 90000L && r.failures == 0)
+    val Seq(Seq(scan)) = csvScans(plans)
+    assert(scan.inputRDD.partitions.toSeq
+      .map(_.asInstanceOf[FilePartition].files.length) == Seq.fill(6)(1))
+    // the split rule is the fact scan's own: the caller's is unchanged
+    assert(spark.conf.get(openCost) == openCostBefore)
   }
 
   test("a CSV gone between the listing and the header peek is ledgered failed") {

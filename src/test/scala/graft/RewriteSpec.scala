@@ -70,6 +70,30 @@ class RewriteSpec extends SparkSpecBase {
       .toSeq == Seq((2L, "c"), (4L, "d")))
   }
 
+  test("a staged append commits only what the last write staged, " +
+      "and a failed body commits nothing") {
+    val dir = tmp("graft-staged")
+    Seq((1L, "a")).toDF("k", "p").write.partitionBy("p").parquet(dir)
+    val staging = Paths.get(dir).resolveSibling("_staging")
+    def read = spark.read.parquet(dir).orderBy("k").as[(Long, String)]
+      .collect().toSeq
+    // the first write is discarded by the second
+    val n = Rewrite.staged(spark, dir, "p") { stage =>
+      stage(Seq((2L, "a"), (3L, "b")).toDF("k", "p"))
+      stage(Seq((4L, "b"), (5L, "c")).toDF("k", "p"))
+      2
+    }
+    assert(n == 2)
+    assert(read == Seq((1L, "a"), (4L, "b"), (5L, "c")))
+    assert(Files.list(staging).count() == 0)
+    intercept[IllegalStateException](Rewrite.staged(spark, dir, "p") { stage =>
+      stage(Seq((6L, "a")).toDF("k", "p"))
+      throw new IllegalStateException("rejected")
+    })
+    assert(read == Seq((1L, "a"), (4L, "b"), (5L, "c")))
+    assert(Files.list(staging).count() == 0)
+  }
+
   test("jobs of MERGE: update, delete emptying a partition, insert") {
     val dir = tmp("graft-jobs-merge")
     Seq((1L, "a", "p1"), (2L, "b", "p1"), (3L, "c", "p2"), (4L, "d", "p3"))

@@ -13,6 +13,12 @@ import pandas as pd
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
+# DuckDB's default memory limit is 80% of RAM, so on a shared host one
+# runaway oracle can crowd out every other process. Bounded, an oracle
+# spills to TEMP_DIR and, past the limit, fails alone.
+MEMORY_LIMIT = "6GB"
+TEMP_DIR = "/tmp/check_oracle_duckdb"
+
 def norm(df):
     df = df[sorted(df.columns)].reset_index(drop=True)
     return df
@@ -60,7 +66,8 @@ def dtype_check(duck, spark):
 
 def main():
     sfdir, outdir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": MEMORY_LIMIT,
+                                 "temp_directory": TEMP_DIR})
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
